@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.Upsert
 import graft.streaming.Ingest
-import graft.table.{Bucketed, Table, Versioned}
+import graft.table.{Bucketed, Table, TableRef, Versioned}
 
 /** End-to-end lakehouse orchestration — the reference's nine notebooks
   * (`01_bronze_csv_to_delta.py` … `09_gold_metrics_customers.py`) as one
@@ -15,42 +15,106 @@ import graft.table.{Bucketed, Table, Versioned}
   */
 object Lake {
 
-  /** Gold table names in build order (deps before dependents). */
-  val GoldTables: Seq[String] = Seq(
-    "dim_customers", "dim_products", "dim_sellers", "dim_geolocation",
-    "fact_orders", "fact_payments", "fact_reviews",
-    "metrics_revenue", "metrics_orders", "metrics_customers")
-
-  /** Runs independent per-entity flows concurrently (order-preserving
-    * results). Spark sessions are thread-safe and schedule concurrent
-    * jobs across the executor pool, so N entity streams/commits that
-    * each leave most cores idle overlap instead of serializing — the
-    * orchestrator-level parallelism a real deployment runs the
-    * reference's per-entity notebooks with. Each flow touches only its
-    * own table dirs/checkpoints, so there is no shared mutable state
-    * beyond the session.
+  /** One gold mart: the silver entities and gold marts it reads, and
+    * its build over readers for them (`s` silver, `g` gold). The inputs
+    * are the mart's whole dependency declaration: the scheduler starts
+    * it once its gold inputs are done, and its versioned watermark sums
+    * the heads of the silver entities it reads directly or through its
+    * gold inputs. [[plan]] hands the build readers that refuse anything
+    * undeclared, so the declaration cannot drift from the build.
     */
-  private def parEach[A, B](items: Seq[A], parallelism: Int = 8)(f: A => B): Seq[B] =
+  final case class Mart(
+      name: String, silverInputs: Seq[String], goldInputs: Seq[String],
+      build: (String => DataFrame, String => DataFrame) => DataFrame) {
+    def plan(s: String => DataFrame, g: String => DataFrame): DataFrame = {
+      def only(kind: String, declared: Seq[String], read: String => DataFrame)(n: String) = {
+        require(declared.contains(n), s"gold mart $name reads undeclared $kind input $n")
+        read(n)
+      }
+      build(only("silver", silverInputs, s), only("gold", goldInputs, g))
+    }
+  }
+
+  /** The star schema (03-09 semantics), gold inputs listed before their
+    * dependents. Each mart is a pure function of its inputs apart from
+    * its `gold_processed_ts` stamp.
+    */
+  val Marts: Seq[Mart] = Seq(
+    Mart("dim_customers", Seq("customers"), Nil,
+      (s, _) => Gold.dimCustomers(s("customers"))),
+    Mart("dim_products", Seq("products"), Nil,
+      (s, _) => Gold.dimProducts(s("products"))),
+    Mart("dim_sellers", Seq("sellers"), Nil,
+      (s, _) => Gold.dimSellers(s("sellers"))),
+    Mart("dim_geolocation", Seq("geolocation"), Nil,
+      (s, _) => Gold.dimGeolocation(s("geolocation"))),
+    Mart("fact_orders", Seq("orders", "customers", "order_items"), Nil,
+      (s, _) => Gold.factOrders(s("orders"), s("customers"), s("order_items"))),
+    Mart("fact_payments", Seq("order_payments", "orders"), Nil,
+      (s, _) => Gold.factPayments(s("order_payments"), s("orders"))),
+    Mart("fact_reviews", Seq("order_reviews", "orders"), Nil,
+      (s, _) => Gold.factReviews(s("order_reviews"), s("orders"))),
+    Mart("metrics_revenue", Nil, Seq("fact_orders", "fact_payments", "dim_customers"),
+      (_, g) => Gold.metricsRevenue(g("fact_orders"), g("fact_payments"), g("dim_customers"))),
+    Mart("metrics_orders", Nil, Seq("fact_orders", "dim_customers"),
+      (_, g) => Gold.metricsOrders(g("fact_orders"), g("dim_customers"))),
+    Mart("metrics_customers", Nil, Seq("dim_customers", "fact_orders"),
+      (_, g) => Gold.metricsCustomers(g("dim_customers"), g("fact_orders"))))
+
+  /** Gold table names in build order (deps before dependents). */
+  val GoldTables: Seq[String] = Marts.map(_.name)
+
+  private val martByName: Map[String, Mart] = Marts.map(m => m.name -> m).toMap
+
+  /** The silver entities `m` reads, directly or through its gold inputs. */
+  def silverClosure(m: Mart): Seq[String] =
+    (m.silverInputs ++ m.goldInputs.flatMap(n => silverClosure(martByName(n)))).distinct
+
+  /** Writer-transaction id of the versioned gold watermark. The earlier
+    * tier-wide watermark (the sum of ALL eight silver heads) was
+    * committed as `graft-gold`; its numbers exceed any per-mart sum, so
+    * reusing that id would skip marts whose inputs moved. Under a fresh
+    * id each such mart rebuilds once instead. The same holds for a mart
+    * whose declared inputs shrink: its sum drops, so it needs a new id.
+    */
+  private val GoldAppId = "graft-gold-inputs"
+
+  /** Runs `f` on every item concurrently (order-preserving results),
+    * each as soon as the items it runs `after` have finished. Spark
+    * sessions are thread-safe and schedule concurrent jobs across the
+    * executor pool, so N entity streams/commits that each leave most
+    * cores idle overlap instead of serializing — the orchestrator-level
+    * parallelism a real deployment runs the reference's per-entity
+    * notebooks with. Each flow touches only its own table
+    * dirs/checkpoints, so there is no shared mutable state beyond the
+    * session.
+    *
+    * A failing flow must not unwind while sibling commits are still in
+    * flight: the call waits for every flow to finish, runs no flow that
+    * is `after` a failed one, and then throws the first failed flow's
+    * own exception (e.g. the IllegalArgumentException contract of
+    * refreshSilver*), not the executor's wrapper.
+    */
+  private def parEach[A, B](
+      items: Seq[A], parallelism: Int = 8, after: A => Seq[A] = (_: A) => Nil)(
+      f: A => B): Seq[B] =
     if (items.size <= 1) items.map(f)
     else {
+      import java.util.concurrent.{CompletableFuture, CompletionException}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, items.size))
       try {
-        val futures = items.map(a =>
-          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
-        try futures.map(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // a failing flow must not unwind while sibling commits are
-            // still in flight: cancel what hasn't started, then WAIT for
-            // the already-running flows to finish before propagating —
-            // and surface the flow's real exception (e.g. the
-            // IllegalArgumentException contract of refreshSilver*), not
-            // the ExecutionException wrapper
-            futures.foreach(_.cancel(false))
-            pool.shutdown()
-            pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-            throw Option(e.getCause).getOrElse(e)
+        val futures = items.foldLeft(Map.empty[A, CompletableFuture[B]]) { (done, a) =>
+          val inputs = after(a).map(d => done.getOrElse(d,
+            throw new IllegalArgumentException(s"$a must come after $d, which is not listed before it")))
+          done + (a -> CompletableFuture.allOf(inputs: _*)
+            .thenApplyAsync[B](_ => f(a), pool))
+        }
+        val all = items.map(futures)
+        CompletableFuture.allOf(all: _*).exceptionally(_ => null).join()
+        all.map { fu =>
+          try fu.join()
+          catch { case e: CompletionException => throw Option(e.getCause).getOrElse(e) }
         }
       } finally pool.shutdown()
     }
@@ -160,43 +224,24 @@ object Lake {
     require(missing.isEmpty,
       s"cannot build gold: silver tables missing for ${missing.mkString(", ")} — " +
         "run refreshSilver over an ingest root containing their CSV drops first")
-    buildGoldMarts(
-      silver(spark, roots, _),
-      name => Table.read(spark, roots.goldRef(name)),
-      (name, df) => Table.overwriteAtomic(df, roots.goldRef(name)))
+    buildGoldMarts(silver(spark, roots, _), name => Table.read(spark, roots.goldRef(name))) {
+      (m, plan) => Table.overwriteAtomic(plan(), roots.goldRef(m.name))
+    }
   }
 
-  /** The 10-mart star-schema build in dependency STAGES (03-09
-    * semantics), shared by the plain and versioned gold tiers: `s`
-    * reads a silver entity, `g` reads an already-written gold mart,
-    * `write` persists one mart. Dims and facts depend only on silver,
-    * so the seven build concurrently; the metric marts consume them
-    * and build concurrently after the stage barrier — each mart is a
-    * pure function of its inputs, so staging changes wall-clock, never
-    * content.
+  /** The [[Marts]] build, shared by the plain and versioned gold tiers:
+    * `s` reads a silver entity, `g` reads an already-written gold mart,
+    * `write` persists one mart given its (lazily planned) build. Each
+    * mart starts as soon as its gold inputs are written or skipped, so
+    * a metric mart never waits for dims it does not read. Each mart is
+    * a pure function of its inputs, so scheduling changes wall-clock,
+    * never content.
     */
-  private def buildGoldMarts(
-      s: String => DataFrame, g: String => DataFrame,
-      write: (String, DataFrame) => Unit): Unit = {
-    parEach[() => Unit, Unit](Seq(
-      () => write("dim_customers", Gold.dimCustomers(s("customers"))),
-      () => write("dim_products", Gold.dimProducts(s("products"))),
-      () => write("dim_sellers", Gold.dimSellers(s("sellers"))),
-      () => write("dim_geolocation", Gold.dimGeolocation(s("geolocation"))),
-      () => write("fact_orders",
-        Gold.factOrders(s("orders"), s("customers"), s("order_items"))),
-      () => write("fact_payments", Gold.factPayments(s("order_payments"), s("orders"))),
-      () => write("fact_reviews", Gold.factReviews(s("order_reviews"), s("orders")))
-    ))(_.apply())
-    parEach[() => Unit, Unit](Seq(
-      () => write("metrics_revenue",
-        Gold.metricsRevenue(g("fact_orders"), g("fact_payments"), g("dim_customers"))),
-      () => write("metrics_orders",
-        Gold.metricsOrders(g("fact_orders"), g("dim_customers"))),
-      () => write("metrics_customers",
-        Gold.metricsCustomers(g("dim_customers"), g("fact_orders")))
-    ))(_.apply())
-  }
+  private def buildGoldMarts(s: String => DataFrame, g: String => DataFrame)(
+      write: (Mart, () => DataFrame) => Unit): Unit =
+    parEach(Marts, after = (m: Mart) => m.goldInputs.map(martByName)) { m =>
+      write(m, () => m.plan(s, g))
+    }
 
   /** The whole pipeline: ingest → silver → gold. */
   def buildAll(spark: SparkSession, ingestRoot: String, roots: LakeRoots): Seq[String] = {
@@ -390,25 +435,31 @@ object Lake {
       }
     }
 
-  /** Versioned gold: every mart rebuilt from the VERSIONED silver tier
+  /** Versioned gold: each mart rebuilt from the VERSIONED silver tier
     * and committed as an idempotent overwrite into a log-backed table —
-    * gold time-travels, serves `history()`/`detail()`, and skips
-    * cleanly when nothing changed: the tier watermark is the SUM of
-    * all silver head versions (monotonic — versions only grow), so a
-    * refresh over unchanged silver is ten no-ops costing log reads
-    * only. The reference gets exactly this from writing marts as Delta
-    * tables (`07_gold_metrics_revenue.py:72-78`).
+    * gold time-travels and serves `history()`/`detail()`. The reference
+    * overwrites every mart on every run (`07_gold_metrics_revenue.py:72-78`);
+    * here a mart rebuilds only when its inputs moved. Its watermark is
+    * the SUM of the head versions of the silver entities it reads,
+    * directly or through its gold inputs ([[silverClosure]]): heads only
+    * grow, so the sum rises whenever any input advances. A mart whose
+    * log already holds its watermark is skipped before its plan is
+    * built and keeps its previous commit, `gold_processed_ts` included —
+    * a refresh that touches only orders leaves the product, seller and
+    * geolocation dims at their old versions, and a refresh over
+    * unchanged silver costs log reads only.
     *
     * The metric marts all hinge on `count_distinct`, which is NOT
     * self-inverting and therefore does not qualify for
     * [[IncrementalAgg]]'s O(changes) maintenance (its contract:
-    * count/sum only); they rebuild from silver heads. The qualifying
-    * shape — count/sum gold maintained from `Versioned.changes` — is
-    * what `m6_incremental_gold` runs under the oracle gate.
+    * count/sum only); they rebuild from their gold inputs' heads. The
+    * qualifying shape — count/sum gold maintained from
+    * `Versioned.changes` — is what `m6_incremental_gold` runs under the
+    * oracle gate.
     */
   def refreshGoldVersioned(spark: SparkSession, roots: LakeRoots): Unit = {
-    // one head read per silver log: the missing-check and the tier
-    // watermark both derive from the same listing, so they can't
+    // one head read per silver log: the missing-check and the
+    // watermarks all derive from the same listing, so they can't
     // disagree under a concurrent silver commit
     val heads = Entities.all.map(e =>
       e.name -> Versioned.currentVersion(spark, roots.versionedSilverDir(e.name)))
@@ -417,27 +468,28 @@ object Lake {
       s"cannot build versioned gold: versioned silver missing for " +
         s"${missing.mkString(", ")} — run refreshSilverFromVersionedBronze (or " +
         "refreshSilverVersioned) first")
-    val watermark = heads.map(_._2.get).sum
     // read each silver AT the captured head, not at whatever the head
     // is by the time its mart builds: a concurrent silver commit
-    // mid-refresh would otherwise yield one gold generation mixing
-    // silver versions across marts, committed under a watermark older
-    // than some of its content — readAt pins the whole generation to
-    // exactly the snapshot set the watermark names
+    // mid-refresh would otherwise commit content newer than the
+    // watermark that names it — readAt pins every mart to exactly the
+    // snapshot set its watermark sums
     val headAt = heads.map { case (n, v) => n -> v.get }.toMap
     buildGoldMarts(
       name => Versioned.readAt(spark, roots.versionedSilverDir(name), headAt(name)),
-      name => Versioned.read(spark, roots.versionedGoldDir(name)),
-      (name, df) => Versioned.overwriteIdempotent(df, roots.versionedGoldDir(name),
-        "graft-gold", watermark))
+      name => Versioned.read(spark, roots.versionedGoldDir(name))) { (m, plan) =>
+      val dir = roots.versionedGoldDir(m.name)
+      val watermark = silverClosure(m).map(headAt).sum
+      if (!Versioned.lastTxnVersion(spark, dir, GoldAppId).exists(_ >= watermark))
+        Versioned.overwriteIdempotent(plan(), dir, GoldAppId, watermark)
+    }
   }
 
   /** The whole pipeline with EVERY tier under a transaction log:
     * bronze ingest commits are exactly-once, silver follows bronze via
-    * its add-actions, gold follows silver via the tier watermark — the
-    * full medallion time-travels and a crash-replay at any tier is a
-    * no-op. This is the complete ACID story the reference gets
-    * implicitly from running every notebook against Delta.
+    * its add-actions, each gold mart follows the watermark of its own
+    * silver inputs — the full medallion time-travels and a crash-replay
+    * at any tier is a no-op. This is the complete ACID story the
+    * reference gets implicitly from running every notebook against Delta.
     */
   def buildAllVersioned(
       spark: SparkSession, ingestRoot: String, roots: LakeRoots): Seq[String] = {
@@ -451,26 +503,32 @@ object Lake {
     * `gold_<name>` temp views, enabling plain `spark.sql` over the
     * lakehouse. Returns the registered view names.
     *
-    * A path-based DataFrame snapshots its file listing when created, so
-    * views must be RE-REGISTERED after a refreshSilver/refreshGold —
-    * the atomic overwrite replaces the underlying files (Delta's live
-    * table names came from its catalog+log indirection; a plain-parquet
-    * engine re-resolves by re-registering, which is what this method's
-    * `createOrReplaceTempView` does idempotently).
+    * A plain-parquet table wins when both exist. A path-based DataFrame
+    * snapshots its file listing when created, so its views must be
+    * RE-REGISTERED after a refreshSilver/refreshGold — the atomic
+    * overwrite replaces the underlying files (a plain-parquet engine
+    * re-resolves by re-registering, which is what
+    * `createOrReplaceTempView` does idempotently). A table that exists
+    * only in its versioned layout ([[buildAllVersioned]]) is registered
+    * as a SQL view over `graft-versioned`.`<dir>`, which resolves the
+    * log head each time a query reads it, like Delta's live table
+    * names; it needs the session's `graft.GraftExtensions`.
     */
   def registerViews(spark: SparkSession, roots: LakeRoots): Seq[String] = {
-    val silverViews = Entities.all.map(_.name)
-      .filter(n => Table.exists(spark, roots.silverRef(n)))
-      .map { n =>
-        silver(spark, roots, n).createOrReplaceTempView(s"silver_$n")
-        s"silver_$n"
-      }
-    val goldViews = GoldTables
-      .filter(n => Table.exists(spark, roots.goldRef(n)))
-      .map { n =>
-        Table.read(spark, roots.goldRef(n)).createOrReplaceTempView(s"gold_$n")
-        s"gold_$n"
-      }
+    def register(view: String, plain: TableRef, read: => DataFrame, versionedDir: String)
+        : Option[String] =
+      if (Table.exists(spark, plain)) {
+        read.createOrReplaceTempView(view)
+        Some(view)
+      } else if (Versioned.currentVersion(spark, versionedDir).nonEmpty) {
+        spark.sql(s"CREATE OR REPLACE TEMP VIEW $view AS " +
+          s"SELECT * FROM `graft-versioned`.`$versionedDir`")
+        Some(view)
+      } else None
+    val silverViews = Entities.all.map(_.name).flatMap(n => register(s"silver_$n",
+      roots.silverRef(n), silver(spark, roots, n), roots.versionedSilverDir(n)))
+    val goldViews = GoldTables.flatMap(n => register(s"gold_$n",
+      roots.goldRef(n), Table.read(spark, roots.goldRef(n)), roots.versionedGoldDir(n)))
     silverViews ++ goldViews
   }
 }

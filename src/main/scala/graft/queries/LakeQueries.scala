@@ -137,8 +137,10 @@ object LakeQueries {
   // M8 — the medallion capstone. buildAllVersioned runs the actual
   // engine: 8 streaming bronze ingests (exactly-once, log-watermarked),
   // 8 silver refreshes driven by bronze add-actions, 10 gold marts as
-  // watermarked versioned overwrites; the checked rows read the
-  // metrics_revenue mart back through its own log head.
+  // versioned overwrites, each scheduled after its own gold inputs and
+  // watermarked by the silver heads it reads (a mart whose inputs did
+  // not move is skipped); the checked rows read the metrics_revenue mart
+  // back through its own log head.
   def lakeMedallion(s: SparkSession, dir: String): DataFrame = {
     val root = VersionedQueries.scratch("graft_m8")
     val ingest = s"$root/ingest"

@@ -12,6 +12,48 @@ import graft.table.{Table, TableRef}
   */
 class LakeSpec extends SparkSpec {
 
+  /** Drop 2 over [[OlistFixtures]]: a new delivered order o5 and its
+    * 60.00 payment — only the orders and order_payments entities move.
+    */
+  private def deliverOrderFive(root: String): Unit = {
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/ingest/orders/c_third.csv"),
+      "order_id,customer_id,order_status,order_purchase_timestamp,order_approved_at," +
+        "order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date\n" +
+        "o5,c2,delivered,2017-01-05 08:00:00,2017-01-05 09:00:00," +
+        "2017-01-06 08:00:00,2017-01-08 08:00:00,2017-01-12 00:00:00")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/ingest/order_payments/c_third.csv"),
+      "order_id,payment_sequential,payment_type,payment_installments,payment_value\n" +
+        "o5,1,credit_card,1,60.00")
+  }
+
+  private def lakeRoots(root: String): LakeRoots = LakeRoots(
+    s"$root/bronze", s"$root/silver", s"$root/gold", s"$root/checkpoints")
+
+  private def goldHeads(roots: LakeRoots): Map[String, Long] =
+    Lake.GoldTables.map(g => g ->
+      graft.table.Versioned.currentVersion(spark, roots.versionedGoldDir(g)).get).toMap
+
+  /** A mart's rows without the load-time stamps (processing timestamps
+    * and the root-dependent source path, cut to its file name), so two
+    * lakes built at different times from the same drops compare equal.
+    */
+  private def contentOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val stamps = Set("gold_processed_ts", "silver_processed_ts", "orders_silver_ts", "ingestion_ts")
+    val kept = df.drop(df.columns.filter(stamps): _*)
+    if (kept.columns.contains("source_file"))
+      kept.withColumn("source_file", element_at(split(col("source_file"), "/"), -1))
+    else kept
+  }
+
+  /** The marts that read orders or payments: exactly the ones a refresh
+    * after [[deliverOrderFive]] must advance.
+    */
+  private val OrdersDropMoves = Set(
+    "fact_orders", "fact_payments", "fact_reviews",
+    "metrics_revenue", "metrics_orders", "metrics_customers")
+
   test("buildAll runs ingest -> silver -> gold and registers SQL views") {
     val root = tmpDir("lake")
     OlistFixtures.write(root)
@@ -211,16 +253,7 @@ class LakeSpec extends SparkSpec {
 
     // drop 2: a new delivered order + its payment (intact checkpoints —
     // the normal incremental run)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/ingest/orders/c_third.csv"),
-      "order_id,customer_id,order_status,order_purchase_timestamp,order_approved_at," +
-        "order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date\n" +
-        "o5,c2,delivered,2017-01-05 08:00:00,2017-01-05 09:00:00," +
-        "2017-01-06 08:00:00,2017-01-08 08:00:00,2017-01-12 00:00:00")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/ingest/order_payments/c_third.csv"),
-      "order_id,payment_sequential,payment_type,payment_installments,payment_value\n" +
-        "o5,1,credit_card,1,60.00")
+    deliverOrderFive(root)
     Lake.buildAllVersioned(spark, s"$root/ingest", roots)
 
     val goldDir = roots.versionedGoldDir("metrics_revenue")
@@ -260,6 +293,140 @@ class LakeSpec extends SparkSpec {
     assert(revenue() == 450.0)
     assert(Versioned.read(spark, roots.versionedBronzeDir("orders")).count() == 5,
       "replayed bronze batches must not duplicate rows")
+  }
+
+  test("versioned gold rebuilds only the marts whose silver inputs moved") {
+    import graft.table.Versioned
+    val root = tmpDir("lakeskip")
+    OlistFixtures.write(root)
+    val roots = lakeRoots(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val before = goldHeads(roots)
+    def productsStamp(): Any = Versioned.read(spark, roots.versionedGoldDir("dim_products"))
+      .agg(max("gold_processed_ts")).head.get(0)
+    val stampBefore = productsStamp()
+
+    deliverOrderFive(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val after = goldHeads(roots)
+    Lake.GoldTables.foreach { g =>
+      val expected = before(g) + (if (OrdersDropMoves(g)) 1 else 0)
+      assert(after(g) == expected, s"gold $g at v${after(g)}, expected v$expected")
+    }
+    // a skipped mart keeps its commit, processing stamp included
+    assert(productsStamp() == stampBefore)
+
+    // every mart, skipped or rebuilt, equals a from-scratch lake over the
+    // same two drops
+    val fresh = tmpDir("lakeskipfresh")
+    OlistFixtures.write(fresh)
+    deliverOrderFive(fresh)
+    val freshRoots = lakeRoots(fresh)
+    Lake.buildAllVersioned(spark, s"$fresh/ingest", freshRoots)
+    Lake.GoldTables.foreach { g =>
+      val got = contentOf(Versioned.read(spark, roots.versionedGoldDir(g)))
+      val want = contentOf(Versioned.read(spark, freshRoots.versionedGoldDir(g)))
+      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+        s"gold $g differs from a from-scratch build")
+    }
+  }
+
+  test("a gold tier carrying only the old tier-wide watermark is rebuilt, not skipped") {
+    import graft.table.Versioned
+    val root = tmpDir("lakecompat")
+    OlistFixtures.write(root)
+    val roots = lakeRoots(root)
+    def refreshSilver(): Unit = Lake.refreshSilverFromVersionedBronze(
+      spark, roots, Lake.refreshBronzeVersioned(spark, s"$root/ingest", roots))
+    def silverHeads(): Map[String, Long] = graft.pipeline.Entities.all.map(e =>
+      e.name -> Versioned.currentVersion(spark, roots.versionedSilverDir(e.name)).get).toMap
+    // the earlier layout: every mart committed under `graft-gold` with
+    // the SUM of all eight silver heads
+    refreshSilver()
+    val heads0 = silverHeads()
+    val tierWatermark = heads0.values.sum
+    Lake.Marts.foreach { m =>
+      Versioned.overwriteIdempotent(
+        m.plan(n => Versioned.readAt(spark, roots.versionedSilverDir(n), heads0(n)),
+          n => Versioned.read(spark, roots.versionedGoldDir(n))),
+        roots.versionedGoldDir(m.name), "graft-gold", tierWatermark)
+    }
+    val before = goldHeads(roots)
+
+    deliverOrderFive(root)
+    refreshSilver()
+    val heads1 = silverHeads()
+    // the hazard is real: a mart whose inputs moved has a per-mart sum
+    // no larger than the old tier-wide number
+    assert(Lake.Marts.exists(m => OrdersDropMoves(m.name) &&
+      Lake.silverClosure(m).map(heads1).sum <= tierWatermark))
+    Lake.refreshGoldVersioned(spark, roots)
+    val after = goldHeads(roots)
+    Lake.GoldTables.foreach { g =>
+      assert(after(g) == before(g) + 1, s"gold $g was not rebuilt under the new watermark")
+    }
+    assert(Versioned.read(spark, roots.versionedGoldDir("metrics_revenue"))
+      .agg(sum("total_revenue")).head.getDouble(0) == 450.0)
+    // from here on the per-mart watermark skips: nothing moved
+    Lake.refreshGoldVersioned(spark, roots)
+    assert(goldHeads(roots) == after)
+  }
+
+  test("a failing mart throws its own error after its siblings finish; dependents never commit") {
+    import graft.table.Versioned
+    val root = tmpDir("lakefail")
+    OlistFixtures.write(root)
+    val roots = lakeRoots(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val before = goldHeads(roots)
+    // a plain file where dim_customers' table directory should be: its
+    // watermark is gone with its log, so the refresh tries to rebuild it
+    // and the write fails
+    val blocked = roots.versionedGoldDir("dim_customers")
+    new scala.reflect.io.Directory(new java.io.File(blocked)).deleteRecursively()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(blocked), "not a table")
+
+    deliverOrderFive(root)
+    val entities = Lake.refreshBronzeVersioned(spark, s"$root/ingest", roots)
+    Lake.refreshSilverFromVersionedBronze(spark, roots, entities)
+    val err = intercept[Throwable](Lake.refreshGoldVersioned(spark, roots))
+    assert(!err.isInstanceOf[java.util.concurrent.ExecutionException] &&
+      !err.isInstanceOf[java.util.concurrent.CompletionException], s"wrapped: $err")
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("dim_customers_v")),
+      s"not dim_customers' own failure: $err")
+    // the three metric marts read dim_customers: none may commit
+    val after = Lake.GoldTables.filter(_ != "dim_customers")
+      .map(g => g -> Versioned.currentVersion(spark, roots.versionedGoldDir(g)).get).toMap
+    Seq("metrics_revenue", "metrics_orders", "metrics_customers").foreach { g =>
+      assert(after(g) == before(g), s"dependent $g committed past a failed input")
+    }
+    // the independent facts were in flight; the call returned only after
+    // they committed
+    Seq("fact_orders", "fact_payments", "fact_reviews").foreach { g =>
+      assert(after(g) == before(g) + 1, s"sibling $g had not finished when the call threw")
+    }
+  }
+
+  test("registerViews exposes a versioned lake as SQL views over the log head") {
+    import graft.table.Versioned
+    val root = tmpDir("lakeviews")
+    OlistFixtures.write(root)
+    val roots = lakeRoots(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val views = Lake.registerViews(spark, roots)
+    assert(views.size == 8 + Lake.GoldTables.size, s"got $views")
+    def viewCount(): Long = spark.sql("SELECT count(*) FROM gold_metrics_revenue").head.getLong(0)
+    def tableCount(): Long =
+      Versioned.read(spark, roots.versionedGoldDir("metrics_revenue")).count()
+    assert(viewCount() == tableCount())
+    // the views resolve the head per query: a refresh shows through
+    // without re-registering
+    val ordersBefore = spark.sql("SELECT count(*) FROM silver_orders").head.getLong(0)
+    deliverOrderFive(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    assert(spark.sql("SELECT count(*) FROM silver_orders").head.getLong(0) == ordersBefore + 1)
+    assert(viewCount() == tableCount())
   }
 
   test("streaming silver: the log-driven source drives cleanse+merge per commit range") {
