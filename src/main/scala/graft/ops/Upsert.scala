@@ -145,13 +145,41 @@ object Upsert {
       keys: Seq[String],
       matched: Seq[MergeClause] = Nil,
       notMatched: Seq[MergeClause] = Seq(MergeClause.Insert()),
-      notMatchedBySource: Seq[MergeClause] = Nil): DataFrame = {
+      notMatchedBySource: Seq[MergeClause] = Nil): DataFrame =
+    mergeFullTagged(target, source, keys, matched, notMatched, notMatchedBySource, Nil)
+      .filter(col(KeepCol)).select(target.columns.toSeq.map(col): _*)
+
+  /** Flag columns of [[mergeFullTagged]]: `KeepCol` — the row is in the
+    * merge output; `ChangedCol` — a clause acted on it (matched or
+    * by-source UPDATE/DELETE on a target row, or an INSERT).
+    */
+  private[graft] val KeepCol = "__m_keep"
+  private[graft] val ChangedCol = "__m_changed"
+
+  /** [[mergeFull]] before its survivor filter: EVERY joined row, with
+    * its output values, the `carry` columns of its target row (NULL on
+    * source-only rows) and the [[KeepCol]]/[[ChangedCol]] flags. A
+    * target row no clause acted on keeps its values and has
+    * `ChangedCol = false`, so a writer can leave it where it is — the
+    * merge-on-read path of [[graft.table.Versioned.mergeFull]] carries
+    * each target row's (file, position) through here. `carry` columns
+    * belong to the target only and never meet the source.
+    */
+  private[graft] def mergeFullTagged(
+      target: DataFrame,
+      source: DataFrame,
+      keys: Seq[String],
+      matched: Seq[MergeClause],
+      notMatched: Seq[MergeClause],
+      notMatchedBySource: Seq[MergeClause],
+      carry: Seq[String]): DataFrame = {
     import MergeClause._
+    val cols = target.columns.toSeq.filterNot(carry.contains)
     // the source may be WIDER than the target: extra source columns are
     // visible to clause conditions/SET expressions via [[scol]] but
     // never reach the output (Delta's rule — a CDC feed carries
     // operation flags and sequence metadata the table never stores)
-    require(target.columns.toSet.subsetOf(source.columns.toSet),
+    require(cols.toSet.subsetOf(source.columns.toSet),
       s"merge source must carry every target column; got target " +
         s"${target.columns.toSeq} vs source ${source.columns.toSeq}")
     def slotCheck(cs: Seq[MergeClause], slot: String, ok: MergeClause => Boolean): Unit = {
@@ -174,7 +202,7 @@ object Upsert {
         val badKeys = set.keySet.intersect(keys.toSet)
         require(badKeys.isEmpty,
           s"UPDATE SET must not assign merge key columns: ${badKeys.mkString(", ")}")
-        val unknown = set.keySet -- target.columns
+        val unknown = set.keySet -- cols
         require(unknown.isEmpty,
           s"UPDATE SET references unknown columns: ${unknown.mkString(", ")}")
       case _ => ()
@@ -186,8 +214,7 @@ object Upsert {
       case _ => ()
     }
 
-    val cols = target.columns.toSeq
-    val t = cols.foldLeft(target)((d, c) => d.withColumnRenamed(c, T + c))
+    val t = target.columns.toSeq.foldLeft(target)((d, c) => d.withColumnRenamed(c, T + c))
       .withColumn(T + "present", lit(true))
     // prefix EVERY source column (incl. extras) so scol refs resolve
     val s = source.columns.toSeq.foldLeft(source)(
@@ -245,7 +272,12 @@ object Upsert {
           .otherwise(col(S + c))
       v.as(c)
     }
-    withActs.filter(keep).select(out: _*)
+    val changed =
+      when(isMatched, col("__m_act") =!= -1)
+        .when(tOnly, col("__b_act") =!= -1)
+        .otherwise(col("__i_act") =!= -1)
+    withActs.select(out ++ carry.map(c => col(T + c).as(c)) ++
+      Seq(keep.as(KeepCol), changed.as(ChangedCol)): _*)
   }
 
   /** Last-writer-wins merge (the reference's M2 shape): matched rows are

@@ -1910,6 +1910,16 @@ object Versioned {
       else txns.toSeq.sorted
         .map { case (a, n) => s""""$a":$n""" }
         .mkString(""","txns":{""", ",", "}")
+    // the log writes file names unescaped and its readers split on
+    // these characters, so a name holding one would commit and leave
+    // the table unreadable: refuse it before anything reaches the log
+    val prevSet = prevFiles.toSet
+    val unsafe = files.filterNot(prevSet).filter(_.exists(c =>
+      ",\"[]{}\\".indexOf(c) >= 0 || Character.isISOControl(c)))
+    if (unsafe.nonEmpty) throw new IllegalArgumentException(
+      s"commit $op at $dir refused: file name(s) ${unsafe.take(3).mkString(" | ")} " +
+        "hold a character the log cannot store (, \" [ ] { } \\ or a control " +
+        "character) — rename the file(s) before committing them")
     // deletion vectors: the caller transforms the HEAD's DV map (carry,
     // merge, or drop); entries for files the new snapshot no longer
     // references are filtered unconditionally — a DV without its file
@@ -1985,7 +1995,6 @@ object Versioned {
     // CkptInlineMax (at 10⁶ files the inline form is tens of MB parsed
     // by string splits; the sidecar reads back with one vectorized
     // scan). The sidecar is written before publish like DV spills.
-    val prevSet = prevFiles.toSet
     val newSet = files.toSet
     val added = files.filterNot(prevSet)
     val removed = prevFiles.filterNot(newSet)
@@ -2082,7 +2091,8 @@ object Versioned {
     * driver — the right trade for SPARSE row-level mutations, and this
     * bound is what keeps "sparse" honest: a broad predicate fails
     * loudly (use the copy-on-write path) instead of OOMing the driver
-    * and bloating every subsequent commit with megabytes of DV.
+    * and bloating every subsequent commit with megabytes of DV. A MERGE
+    * whose changed rows pass it rewrites their files copy-on-write.
     */
   val MoRMatchCap = 1000000L
 
@@ -3212,7 +3222,9 @@ object Versioned {
     * re-base with operation-specific read-set logic — MERGE uses it to
     * scan concurrently-ADDED files for its source keys, because its
     * insert clause read "key absent", which a blind append can
-    * invalidate even though no touched file changed.
+    * invalidate even though no touched file changed. `softDeleted`
+    * files stay in the snapshot (the caller's `dvsFor` grows their
+    * DVs) but join the read set under the same two rules as `touched`.
     */
   private[graft] def commitRewriteCommuting(
       spark: SparkSession, dir: String, basedOn: Long, op: String,
@@ -3222,8 +3234,10 @@ object Versioned {
       commuteCheck: Long => Boolean = _ => true,
       txn: Option[(String, Long)] = None,
       pairKeys: Seq[String] = Nil,
-      dropPhys: Seq[String] = Nil): Option[Long] = {
+      dropPhys: Seq[String] = Nil,
+      softDeleted: Seq[String] = Nil): Option[Long] = {
     val touchedSet = touched.toSet
+    val readSet = touched ++ softDeleted
     val baseDvs = dvsAt(spark, dir, basedOn)
     var base = basedOn
     var attempt = 1
@@ -3238,8 +3252,8 @@ object Versioned {
           val headFiles = filesAt(spark, dir, head).toSet
           val headDvs = dvsAt(spark, dir, head)
           val readSetHolds =
-            touched.forall(headFiles.contains) &&
-              touched.forall(f =>
+            readSet.forall(headFiles.contains) &&
+              readSet.forall(f =>
                 headDvs.getOrElse(fileKey(f), Seq.empty) ==
                   baseDvs.getOrElse(fileKey(f), Seq.empty)) &&
               schemaAt(spark, dir, head).map(_.json) ==
@@ -4649,23 +4663,32 @@ object Versioned {
     * `setCols` (default: all non-key columns); unmatched source rows
     * INSERT. The source must be key-unique, as for Delta MERGE.
     *
-    * Copy-on-write on MATCHED FILES ONLY: touched-file discovery is
-    * one semi-join of the snapshot against the source's distinct key
-    * set (broadcast only under [[MergeKeyBroadcastMaxBytes]] — a
-    * micro-batch source keeps the zero-shuffle probe, a backfill-sized
-    * one plans a shuffle semi-join instead of an unbounded driver
-    * broadcast); files with no matching live row carry into the new
-    * snapshot verbatim, so at 100 TB the commit cost follows the
-    * matched-file footprint plus the insert set, not the table.
-    * DV-aware on both ends: soft-deleted rows neither match (their key
-    * re-inserts fresh) nor resurrect (the rewrite reads DV-subtracted
-    * rows; touched files' DVs retire with the files). Schema-ENFORCED:
+    * Merge-on-read at ROW granularity: one scan of the snapshot,
+    * left-joined to the source's distinct key set (broadcast only under
+    * [[MergeKeyBroadcastMaxBytes]] — a micro-batch source keeps the
+    * zero-shuffle probe, a backfill-sized one plans a shuffle join
+    * instead of an unbounded driver broadcast), finds every live row
+    * the clauses can reach with its (file, position). The clauses run
+    * over those rows and the source; the commit then writes only the
+    * rows a clause changed (their new versions) plus the inserts to
+    * fresh files, and soft-deletes the changed rows' old positions with
+    * deletion vectors. Rows a clause leaves unchanged — an LWW-losing
+    * re-delivery — keep their position, and a file no clause changed
+    * is not touched at all. A changed file is rewritten copy-on-write
+    * instead (carried rows included, its DVs retiring with it) when
+    * fewer than half its physical rows would stay live, or when the
+    * merge's changed positions would pass [[MoRMatchCap]]. At 100 TB
+    * the commit cost follows the changed rows plus the insert set, not
+    * the table. DV-aware on both ends: soft-deleted rows neither match
+    * (their key re-inserts fresh) nor resurrect. Schema-ENFORCED:
     * the source must present exactly the table's columns with
     * unchanged types — merge never evolves schema (widen explicitly
     * via `append(mergeSchema = true)` first). Zone maps carry, and the
     * commit uses the commuting conflict rule
     * ([[commitRewriteCommuting]]): concurrent blind appends and
-    * disjoint-file rewrites land; overlapping rewrites fail loudly.
+    * disjoint-file rewrites land; a concurrent commit that removes,
+    * rewrites or grows the DVs of a file this merge rewrites or
+    * soft-deletes makes the merge re-plan from the new head.
     */
   def merge(
       spark: SparkSession, dir: String, source: DataFrame, keys: Seq[String],
@@ -4697,13 +4720,13 @@ object Versioned {
     * Clause semantics: [[graft.ops.Upsert.mergeFull]]; conditions are
     * predicates over [[graft.ops.Upsert.tcol]]/`scol` refs.
     *
-    * Touched-file discovery widens per slot: matched clauses touch
-    * files holding a live source-keyed row (as before); BY SOURCE
-    * clauses additionally touch files holding a live row with NO
-    * source key whose clause conditions can hold — so an unconditional
-    * by-source DELETE rewrites every file with an unmatched row (the
-    * semantics demand it), while a selective condition keeps the
-    * commit at the affected-file footprint.
+    * Row discovery widens per slot: matched clauses reach live
+    * source-keyed rows (as in [[merge]]); BY SOURCE clauses also reach
+    * live rows with NO source key whose clause conditions can hold —
+    * so an unconditional by-source DELETE soft-deletes (or, past half a
+    * file, rewrites) every unmatched row, while a selective condition
+    * keeps the commit at the affected rows. Same merge-on-read write
+    * and copy-on-write fallback as [[merge]].
     *
     * CONFLICT MATRIX: by-source clauses read "row has no source match
     * AND satisfies cond" over the WHOLE table, so a concurrent append
@@ -4735,7 +4758,8 @@ object Versioned {
     * watermark (the bronze version the merge reflects) and the merged
     * rows land in ONE log commit, so a crash-replayed refresh either
     * sees the watermark (no-op) or re-runs the merge in full — never a
-    * half-applied batch.
+    * half-applied batch. The merge-on-read commit of [[merge]] carries
+    * the watermark and the pairing keys like any other.
     */
   def mergeIdempotent(
       spark: SparkSession, dir: String, source: DataFrame, keys: Seq[String],
@@ -4797,6 +4821,37 @@ object Versioned {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The changed target rows of one MERGE, gathered by the write that
+    * publishes their new versions: rows kept in the output, exact
+    * changed-row counts per file, and the changed (file, position)
+    * pairs — only the first `cap` + 1, so a broad merge trips the
+    * copy-on-write fallback without holding every position.
+    */
+  private final class MergeChanges(cap: Long)
+      extends org.apache.spark.util.AccumulatorV2[(String, java.lang.Long, Boolean), MergeChanges] {
+    var kept = 0L
+    val perFile = scala.collection.mutable.HashMap.empty[String, Long]
+    val positions = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    override def isZero: Boolean = kept == 0 && perFile.isEmpty
+    override def copy(): MergeChanges = { val c = new MergeChanges(cap); c.merge(this); c }
+    override def reset(): Unit = { kept = 0; perFile.clear(); positions.clear() }
+    override def add(v: (String, java.lang.Long, Boolean)): Unit = {
+      if (v._3) kept += 1
+      if (v._1 != null) {
+        perFile(v._1) = perFile.getOrElse(v._1, 0L) + 1
+        if (positions.size <= cap) positions += ((v._1, v._2.longValue))
+      }
+    }
+    override def merge(o: org.apache.spark.util.AccumulatorV2[
+        (String, java.lang.Long, Boolean), MergeChanges]): Unit = {
+      val m = o.value
+      kept += m.kept
+      m.perFile.foreach { case (k, n) => perFile(k) = perFile.getOrElse(k, 0L) + n }
+      positions ++= m.positions.take((cap + 1 - positions.size).max(0L).toInt)
+    }
+    override def value: MergeChanges = this
   }
 
   private def mergeOnce(
@@ -4879,14 +4934,14 @@ object Versioned {
           (logSchema.fields.map(_.copy(nullable = true)) ++
             newCols.map(_.copy(nullable = true))).toSeq)
       }
-    def alignTo(df: DataFrame): DataFrame = {
+    def alignTo(df: DataFrame, carry: Seq[String] = Nil): DataFrame = {
       // case-insensitive like the classification above; output names
       // normalize to the table's casing
       val have = df.schema.fieldNames.map(lower).toSet
       df.select(outSchema.fields.toSeq.map { f =>
         if (have.contains(lower(f.name))) col(f.name).as(f.name)
         else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+      } ++ carry.map(col): _*)
     }
     // the aligned source keeps its condition-only columns appended —
     // ops.Upsert.mergeFull prefixes every source column, so clause
@@ -4905,12 +4960,13 @@ object Versioned {
     // forced-broadcast discovery is right for micro-batch upserts but
     // would materialize a backfill-sized key set in the driver (8 GB
     // relation ceiling / OOM) — above the gate the joins below plan as
-    // shuffle semi/anti-joins and stay exact, because file identity
-    // (__dv_rel) is a materialized column by join time and survives
-    // the shuffle; the collected set is still distinct fileKeys,
-    // log-sized either way.
+    // shuffle joins and stay exact, because row identity (__dv_rel,
+    // __dv_idx) is a materialized column by join time and survives the
+    // shuffle.
     val srcKeys = {
+      // `__m_src` marks a key-matched row in the candidate scan's left join
       val k = src.select(keys.map(col): _*).distinct()
+        .withColumn("__m_src", org.apache.spark.sql.functions.lit(true))
       val est = k.queryExecution.optimizedPlan.stats.sizeInBytes
       // the gate is per-table overridable: graft.mergeKeyBroadcastMaxBytes
       val gate = propertiesAt(spark, dir, base)
@@ -4922,14 +4978,10 @@ object Versioned {
         mergeKeyBroadcasts.incrementAndGet(); broadcast(k)
       } else { mergeKeyShuffles.incrementAndGet(); k }
     }
-    def readFiles(files: Seq[String]) =
-      applyDvs(spark, readRaw(spark, dir, Some(logSchema), files), headDvs)
-    // Files of `files` holding at least one LIVE row whose key appears
-    // in the source — the touched-file discovery, reused by the commute
-    // check on concurrently-added files. File identity comes from
-    // `_metadata.file_path` — bound to THIS scan's relation — not
-    // input_file_name(), which Spark refuses in a plan with a second
-    // file source (the key set also scans parquet).
+    // The LIVE rows of `files` with their (file, position). File
+    // identity comes from `_metadata.file_path` — bound to THIS scan's
+    // relation — not input_file_name(), which Spark refuses in a plan
+    // with a second file source (the key set also scans parquet).
     def liveRows(files: Seq[String], dvs: Map[String, Seq[Long]]) = {
       import org.apache.spark.sql.functions.substring_index
       val scan = readRaw(spark, dir, Some(logSchema), files)
@@ -4946,14 +4998,16 @@ object Versioned {
           Seq("__dv_rel", "__dv_idx"), "left_anti")
       }
     }
+    // Files of `files` holding at least one live row whose key appears
+    // in the source — the commute check on concurrently-added files
     def filesWithMatches(files: Seq[String], dvs: Map[String, Seq[Long]]): Set[String] =
       liveRows(files, dvs).join(srcKeys, keys, "left_semi")
         .select("__dv_rel").distinct()
         .collect().map(_.getString(0)).toSet
     // BY SOURCE clauses affect live rows with NO source key whose
-    // clause conditions can hold — files provably free of such rows
-    // carry verbatim, keeping the commit at the affected-file footprint
-    // when the conditions are selective. NULL conditions never hold.
+    // clause conditions can hold — every other key-less row stays
+    // where it is, keeping the commit at the affected rows when the
+    // conditions are selective. NULL conditions never hold.
     // Conditions are written over Upsert.tcol refs, so the un-joined
     // probe aliases every column under its target-prefixed name rather
     // than rewriting the condition (a stray scol ref then fails
@@ -4977,35 +5031,84 @@ object Versioned {
             .select("__dv_rel").distinct()
             .collect().map(_.getString(0)).toSet
       }
-    val touched: Seq[String] =
-      if (all.isEmpty) Seq.empty
+    // Every live row a clause can act on, with its (file, position):
+    // rows whose key the source holds, plus — with BY SOURCE clauses —
+    // key-less rows whose by-source conditions can hold. One scan of the
+    // snapshot, left-joined to the distinct source keys.
+    val carry = Seq("__dv_rel", "__dv_idx")
+    val candidates =
+      if (all.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          outSchema.add("__dv_rel", "string").add("__dv_idx", "long"))
       else {
-        val want = filesWithMatches(all, headDvs) ++
-          filesWithAffectedUnmatched(all, headDvs)
-        // `want` holds fileKeys (last-2 segments from the scan); match
-        // the log's names — possibly absolute for cloned files — by key
-        all.filter(f => want.contains(fileKey(f)))
+        val fields = logSchema.fieldNames.toSeq
+        val reach = bySourceAffected.foldLeft(col("__m_src").isNotNull)(_ || _)
+        alignTo(liveRows(all, headDvs).join(srcKeys, keys, "left")
+          .select(carry.map(col) ++ Seq(col("__m_src")) ++
+            fields.map(c => col(c).as(graft.ops.Upsert.tname(c))): _*)
+          .filter(reach)
+          .select(carry.map(col) ++
+            fields.map(c => col(graft.ops.Upsert.tname(c)).as(c)): _*), carry)
       }
-    val target =
-      if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-      else alignTo(readFiles(touched))
-    val merged = graft.ops.Upsert.mergeFull(
-      target, src, keys, matched, notMatched, notMatchedBySource)
+    import graft.ops.Upsert.{ChangedCol, KeepCol}
+    // the rows a clause acted on: changed target rows and the inserts
+    val changedAt = graft.ops.Upsert.mergeFullTagged(
+      candidates, src, keys, matched, notMatched, notMatchedBySource, carry)
+      .filter(col(ChangedCol))
+    // GENERATED columns regenerate over the rows this merge writes
+    // (Delta's contract): updates to a dependency recompute, inserts
+    // whose source omitted the column compute
+    def kept(df: DataFrame) = df.filter(col(KeepCol))
       .select(outSchema.fieldNames.toSeq.map(col): _*)
-      // GENERATED columns regenerate over the merge output (Delta's
-      // contract): updates to a dependency recompute, inserts whose
-      // source omitted the column compute, carried rows are a no-op
       .transform(regenerated(spark, dir, base, _))
-    // CHECK constraints: the merge output (updated + inserted rows plus
-    // carried target rows of touched files) must satisfy the contract;
-    // constraint stability across a commute re-base is enforced below.
-    // Identity columns add an implicit NOT NULL (a source row cannot
-    // insert an unassigned identity through a merge).
-    requireSatisfied(merged, constraintsAt(spark, dir, base) ++
+    // CHECK constraints: every row this merge writes must satisfy the
+    // contract (rows left in place already did); constraint stability
+    // across a commute re-base is enforced below. Identity columns add
+    // an implicit NOT NULL (a source row cannot insert an unassigned
+    // identity through a merge).
+    requireSatisfied(kept(changedAt), constraintsAt(spark, dir, base) ++
       identityChecksAt(spark, dir, base))
-    val fresh = writeDataFiles(toPhysicalFrame(merged, Some(outSchema)), dir)
+    // ONE evaluation of the merge: the write of the changed rows' new
+    // versions and the inserts also records every changed target row's
+    // (file, position) — Delta's touched-files accumulator, here with
+    // the positions the deletion vectors need
+    val changes = new MergeChanges(MoRMatchCap)
+    spark.sparkContext.register(changes)
+    val record = org.apache.spark.sql.functions.udf {
+      (rel: String, idx: java.lang.Long, keep: Boolean) =>
+        changes.add((rel, idx, keep)); keep
+    }.asNondeterministic()
+    val written = writeDataFiles(toPhysicalFrame(kept(changedAt.filter(
+      record(col("__dv_rel"), col("__dv_idx"), col(KeepCol)))), Some(outSchema)), dir)
+    val changedPerFile = changes.perFile
+    val changedFiles = all.filter(f => changedPerFile.contains(fileKey(f)))
+    val physical = physicalRowCounts(spark, dir, base, changedFiles)
+    def liveAfter(f: String): Long = physical(f) -
+      headDvs.getOrElse(fileKey(f), Nil).size - changedPerFile(fileKey(f))
+    // merge-on-read per file: soft-delete the changed positions and keep
+    // the file, unless fewer than half its physical rows would stay live
+    // (or the merge's positions pass the MoR cap) — then the file is
+    // rewritten copy-on-write, its unchanged rows moving to a fresh file
+    // and its DVs retiring with it
+    val overCap = changedPerFile.values.sum > MoRMatchCap
+    val (cow, mor) = changedFiles.partition(f => overCap || 2 * liveAfter(f) < physical(f))
+    val cowKeys = cow.map(fileKey).toSet
+    val softDeletes: Map[String, Seq[Long]] = changes.positions.toSeq
+      .filterNot { case (k, _) => cowKeys(k) }.groupMap(_._1)(_._2)
+    val carried =
+      if (cow.map(liveAfter).sum == 0) Seq.empty
+      else {
+        import spark.implicits._
+        // past the cap the positions are incomplete: re-derive them
+        val changedPos =
+          if (overCap) changedAt.filter(col("__dv_rel").isNotNull).select(carry.map(col): _*)
+          else changes.positions.toSeq.filter { case (k, _) => cowKeys(k) }.toDF(carry: _*)
+        writeDataFiles(toPhysicalFrame(alignTo(liveRows(cow, headDvs)
+          .join(changedPos, carry, "left_anti")), Some(outSchema)), dir)
+      }
+    // an output-less merge (every change a delete) leaves its empty
+    // write unreferenced
+    val fresh = (if (changes.kept == 0) Seq.empty else written) ++ carried
     // MERGE's insert clause read "key ABSENT from the table" — a
     // concurrently-appended file can invalidate that without touching
     // any file this merge read, so the commute additionally requires
@@ -5027,9 +5130,14 @@ object Versioned {
           filesWithAffectedUnmatched(added, dvs).isEmpty
       }
     }
+    // soft-deleted files join the read set: a concurrent commit that
+    // removes one (compaction) or grows its DVs raises CommitRace and
+    // the merge re-plans, so no row resurrects and no delete is lost
     val committed = commitRewriteCommuting(
-      spark, dir, base, "merge", outSchema.json, touched, fresh,
-      commuteCheck = addedDisjoint, txn = txn, pairKeys = keys)
+      spark, dir, base, "merge", outSchema.json, cow, fresh,
+      dvsFor = head => head ++ softDeletes.map { case (k, ps) =>
+        k -> (head.getOrElse(k, Seq.empty) ++ ps) },
+      commuteCheck = addedDisjoint, txn = txn, pairKeys = keys, softDeleted = mor)
     committed.foreach(v => carrySidecars(spark, dir, base, v,
       filesAt(spark, dir, v).toSet -- fresh.toSet, fresh))
     committed
@@ -5439,16 +5547,21 @@ object Versioned {
     * projection — footer cost); DV cardinalities subtract exactly.
     * Equals `readAt(v).count()` always.
     */
-  def rowCountAt(spark: SparkSession, dir: String, v: Long): Long = {
-    val (counts, _) = resolveRowCounts(spark, dir, v)
-    val live = filesAt(spark, dir, v)
-    val unknown = live.filterNot(counts.contains)
-    val scanned =
-      if (unknown.isEmpty) 0L
-      else RowStats.compute(spark, dir, unknown,
-        schemaAt(spark, dir, v).map(physicalSchema)).values.sum
-    live.filter(counts.contains).map(counts).sum + scanned -
+  def rowCountAt(spark: SparkSession, dir: String, v: Long): Long =
+    physicalRowCounts(spark, dir, v, filesAt(spark, dir, v)).values.sum -
       dvsAt(spark, dir, v).values.map(_.size.toLong).sum
+
+  /** Physical row counts of `files` (live at `v`): the row-stats chain
+    * answers what it covers, footers the rest.
+    */
+  private def physicalRowCounts(
+      spark: SparkSession, dir: String, v: Long, files: Seq[String]): Map[String, Long] = {
+    val (counts, _) = resolveRowCounts(spark, dir, v)
+    val unknown = files.filterNot(counts.contains)
+    val scanned =
+      if (unknown.isEmpty) Map.empty[String, Long]
+      else RowStats.compute(spark, dir, unknown, schemaAt(spark, dir, v).map(physicalSchema))
+    files.map(f => f -> counts.getOrElse(f, scanned(f))).toMap
   }
 
   /** Backfills row-count stats for every live head file — the
@@ -5639,15 +5752,19 @@ object Versioned {
     * pair. `exceptAll` keeps duplicate multiplicity so an append of an
     * identical row still shows as one insert.
     *
-    * Cost is O(changed files), not O(snapshot): a file present in BOTH
+    * Cost is O(changed rows), not O(snapshot): a file present in BOTH
     * snapshots with identical DV positions contributes the same row
     * multiset to each side, and multiset difference depends only on
     * per-row count deltas — equal sub-multisets cancel exactly — so
     * such files are pruned from both scans before the diff. (The
     * schema alignment below pads BOTH sides with the same typed NULLs,
-    * so the cancellation survives column-add evolution too.) Only the
-    * files the log says were added, removed, or DV-touched in the
-    * window are opened, then one anti-style shuffle diffs them.
+    * so the cancellation survives column-add evolution too.) A file in
+    * both snapshots whose DVs only GREW (a merge-on-read MERGE, UPDATE
+    * or DELETE) contributes exactly the rows at its new positions, as
+    * deletes: only those rows enter the diff, not the file's carried
+    * rows on both sides. Files added or removed in the window, and
+    * files whose DVs shrank or changed otherwise (restore), enter
+    * whole; one signed-count aggregate diffs them.
     */
   def changes(spark: SparkSession, dir: String, from: Long, to: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -5658,10 +5775,18 @@ object Versioned {
     def norm(m: Map[String, Seq[Long]]): Map[String, Set[Long]] =
       m.map { case (f, idxs) => fileKey(f) -> idxs.toSet }
     val (nB, nA) = (norm(dvB), norm(dvA))
-    val unchanged = (bFiles.toSet & aFiles.toSet).filter { f =>
+    val shared = bFiles.toSet & aFiles.toSet
+    val unchanged = shared.filter { f =>
       val k = fileKey(f)
       nB.getOrElse(k, Set.empty) == nA.getOrElse(k, Set.empty)
     }
+    // files whose DVs only GREW: their share of the diff is exactly the
+    // rows at the new positions, as deletes
+    val grown: Map[String, Set[Long]] = (shared -- unchanged).toSeq.flatMap { f =>
+      val k = fileKey(f)
+      val (b, a) = (nB.getOrElse(k, Set.empty), nA.getOrElse(k, Set.empty))
+      if (b.subsetOf(a)) Some(f -> (a -- b)) else None
+    }.toMap
     // the before-side-only files are the diff's read set from history;
     // if one is physically GONE (out-of-band deletion, acknowledged by
     // a later fsck) no change feed can represent its rows — refuse
@@ -5681,8 +5806,22 @@ object Versioned {
     }
     def side(v: Long, files: Seq[String], dvs: Map[String, Seq[Long]]) =
       readFileSubset(spark, dir, schemaAt(spark, dir, v),
-        files.filterNot(unchanged), dvs)
-    val before = side(from, bFiles, dvB)
+        files.filterNot(f => unchanged(f) || grown.contains(f)), dvs)
+    val softDeleted =
+      if (grown.isEmpty) None
+      else {
+        import org.apache.spark.sql.functions.{broadcast, substring_index}
+        import spark.implicits._
+        val at = grown.toSeq.flatMap { case (f, is) => is.map(i => (fileKey(f), i)) }
+          .toDF("__dv_rel", "__dv_idx")
+        val scan = readRaw(spark, dir, schemaAt(spark, dir, from), grown.keys.toSeq)
+        Some(scan
+          .withColumn("__dv_rel", substring_index(col("_metadata.file_path"), "/", -2))
+          .withColumn("__dv_idx", col("_metadata.row_index"))
+          .join(broadcast(at), Seq("__dv_rel", "__dv_idx"))
+          .select(scan.columns.toSeq.map(col): _*))
+      }
+    val before = softDeleted.foldLeft(side(from, bFiles, dvB))(_ unionByName _)
     val after = side(to, aFiles, dvA)
     // align to the union of the two snapshots' columns (schema may have
     // evolved between them): absent columns surface as typed NULLs, so

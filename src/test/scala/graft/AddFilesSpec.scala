@@ -46,6 +46,21 @@ class AddFilesSpec extends SparkSpec {
     assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSeq == Seq((9, "k")))
   }
 
+  test("a file name the log cannot store is refused before anything is committed") {
+    val dir = tmpDir("af_names")
+    Versioned.append(Seq((1, "a")).toDF("id", "s"), dir)
+    val Seq(staged) = stageOne(dir, "d-bulk", Seq((2, "b")))
+    val odd = "d-bulk/sales,2024.parquet"
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .rename(new org.apache.hadoop.fs.Path(dir, staged), new org.apache.hadoop.fs.Path(dir, odd))
+    val ex = intercept[IllegalArgumentException](Versioned.addFiles(spark, dir, Seq(odd)))
+    assert(ex.getMessage.contains("sales,2024"))
+    assert(Versioned.currentVersion(spark, dir).contains(1L), "the head must not move")
+    // a fresh reader still resolves the table
+    Versioned.clearFilesMemo()
+    assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSeq == Seq((1, "a")))
+  }
+
   test("refuses nested, absolute, escaping, missing, and duplicate paths") {
     val dir = tmpDir("af_bad")
     Versioned.append(Seq((1, "a")).toDF("id", "s"), dir)

@@ -331,6 +331,51 @@ class LakeSpec extends SparkSpec {
     }
   }
 
+  test("a re-delivery drop merges into silver orders on read: base file kept, only new rows written") {
+    import graft.table.Versioned
+    val root = tmpDir("lakemor")
+    OlistFixtures.write(root)
+    val roots = lakeRoots(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val ordersDir = roots.versionedSilverDir("orders")
+    val prev = Versioned.currentVersion(spark, ordersDir).get
+    deliverOrderFive(root)
+    Lake.buildAllVersioned(spark, s"$root/ingest", roots)
+    val now = Versioned.currentVersion(spark, ordersDir).get
+    assert(Versioned.opAt(spark, ordersDir, now) == "merge")
+    val (before, after) = (Versioned.readAt(spark, ordersDir, prev), Versioned.readAt(spark, ordersDir, now))
+    // the base file stays; ONE fresh file holds exactly the changed and new rows
+    val prevFiles = Versioned.filesAt(spark, ordersDir, prev)
+    val added = Versioned.filesAt(spark, ordersDir, now).filterNot(prevFiles.toSet)
+    assert(prevFiles.forall(Versioned.filesAt(spark, ordersDir, now).contains))
+    assert(added.size == 1, s"added $added")
+    val addedRows = spark.read.schema(after.schema)
+      .parquet(added.map(Versioned.dataPathStr(ordersDir, _)): _*)
+    val moved = after.exceptAll(before)
+    assert(addedRows.exceptAll(moved).count() == 0 && moved.exceptAll(addedRows).count() == 0)
+    assert(moved.select("order_id").collect().map(_.getString(0)).toSeq == Seq("o5"))
+    // the change feed applied to the previous drop yields the new drop
+    val feed = Versioned.changesWithType(spark, ordersDir, prev, now)
+    def typed(ts: String*) = feed.filter(col("_change_type").isin(ts: _*))
+      .drop("_change_type", "_commit_version")
+    val applied = before.exceptAll(typed("delete", "update_preimage"))
+      .unionByName(typed("insert", "update_postimage"))
+    assert(applied.exceptAll(after).count() == 0 && after.exceptAll(applied).count() == 0,
+      "silver orders' change feed does not replay the drop")
+    // every mart equals a from-scratch build over the same two drops
+    val fresh = tmpDir("lakemorfresh")
+    OlistFixtures.write(fresh)
+    deliverOrderFive(fresh)
+    val freshRoots = lakeRoots(fresh)
+    Lake.buildAllVersioned(spark, s"$fresh/ingest", freshRoots)
+    Lake.GoldTables.foreach { g =>
+      val got = contentOf(Versioned.read(spark, roots.versionedGoldDir(g)))
+      val want = contentOf(Versioned.read(spark, freshRoots.versionedGoldDir(g)))
+      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+        s"gold $g differs from a from-scratch build")
+    }
+  }
+
   test("a gold tier carrying only the old tier-wide watermark is rebuilt, not skipped") {
     import graft.table.Versioned
     val root = tmpDir("lakecompat")

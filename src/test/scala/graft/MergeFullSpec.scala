@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Upsert
 import graft.ops.Upsert.MergeClause.{Delete, Insert, Update}
-import graft.table.{LogStore, Versioned}
+import graft.table.Versioned
 
 /** The full Delta MERGE action grammar — matched DELETE, multiple
   * conditional matched clauses, conditional INSERT, NOT MATCHED BY
@@ -134,25 +134,6 @@ class MergeFullSpec extends SparkSpec {
     assert((before intersect after).size == 2, s"carried ${before intersect after}")
     assert(Versioned.read(spark, dir).select("k").as[Long].collect().toSet
       == Set(1L, 100L))
-  }
-
-  /** Wraps the default store; fires `inject` once, immediately before
-    * the first commit publish it sees, to create a deterministic
-    * write-write race.
-    */
-  private final class InjectBeforeFirstPublish(inject: () => Unit) extends LogStore {
-    private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    private val injecting = new ThreadLocal[Boolean] {
-      override def initialValue(): Boolean = false
-    }
-    override def publishOnce(fs: org.apache.hadoop.fs.FileSystem,
-        tmp: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path): Unit = {
-      if (!injecting.get() && fired.compareAndSet(false, true)) {
-        injecting.set(true)
-        try inject() finally injecting.set(false)
-      }
-      graft.table.HadoopFsLogStore.publishOnce(fs, tmp, dest)
-    }
   }
 
   test("conflict matrix: a concurrent append of by-source-affected rows forces a re-plan") {

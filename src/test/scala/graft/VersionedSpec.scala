@@ -833,32 +833,149 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("versioned MERGE equals the relational merge on randomized data") {
-    // the log path adds file pruning, DV handling, and commit machinery
-    // on top of Upsert.merge — this pins that none of it changes the
-    // ANSWER: merging through the log equals merging the snapshots
-    // relationally, across random overlap patterns and file splits
+    // the log path adds row discovery, DVs, the copy-on-write fallback
+    // and commit machinery on top of Upsert.mergeFull — this pins that
+    // none of it changes the ANSWER: five successive merges through the
+    // log (LWW merges alternating with matched-DELETE and BY SOURCE
+    // clauses, so DVs accumulate and files cross the half-live line)
+    // each equal merging the previous snapshot relationally, and each
+    // commit's change feed equals the diff of its two snapshots
+    import Upsert.MergeClause.{Delete, Insert, Update}
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String, Long)].collect().toSet
     val rnd = new scala.util.Random(20260813)
+    var (sawSoftDelete, sawRewrite) = (false, false)
     (1 to 3).foreach { round =>
       val dir = tmpDir(s"vt_merge_prop$round")
-      val target = (0 to 30).filter(_ => rnd.nextBoolean())
+      val target = (0 to 59).filter(_ => rnd.nextInt(5) > 0)
         .map(k => (k.toLong, s"t$k", rnd.nextInt(100).toLong))
-      val source = (15 to 45).filter(_ => rnd.nextBoolean())
-        .map(k => (k.toLong, s"s$k", rnd.nextInt(100).toLong))
-      if (target.nonEmpty && source.nonEmpty) {
-        val tDf = target.toDF("id", "s", "ver")
+      val tDf = target.toDF("id", "s", "ver")
+      // random file split: three appends by id mod 3
+      (0 to 2).foreach(m => Versioned.append(tDf.filter(col("id") % 3 === m), dir))
+      (1 to 5).foreach { m =>
+        val prev = Versioned.currentVersion(spark, dir).get
+        val source = (0 to 79).filter(_ => rnd.nextInt(4) == 0)
+          .map(k => (k.toLong, s"s${round}_${m}_$k", rnd.nextInt(100).toLong))
         val sDf = source.toDF("id", "s", "ver")
-        // random file split: three appends by id mod 3
-        (0 to 2).foreach(m =>
-          Versioned.append(tDf.filter(col("id") % 3 === m), dir))
-        Versioned.merge(spark, dir, sDf, Seq("id"),
-          updateWhen = Upsert.scol("ver") > Upsert.tcol("ver"))
-        val got = Versioned.read(spark, dir)
-          .as[(Long, String, Long)].collect().toSet
-        val want = Upsert.lastWriterWins(tDf, sDf, Seq("id"), "ver")
-          .as[(Long, String, Long)].collect().toSet
-        assert(got == want, s"round $round: log merge diverged from relational merge")
+        val before = rowsOf(Versioned.readAt(spark, dir, prev))
+        val lww = Upsert.scol("ver") > Upsert.tcol("ver")
+        val (matched, notMatched, bySource) =
+          if (m % 2 == 1) (Seq(Update(Some(lww))), Seq(Insert()), Nil)
+          else (
+            Seq(Delete(Some(Upsert.scol("ver") < 15)), Update(Some(lww))),
+            Seq(Insert()),
+            Seq(Delete(Some(Upsert.tcol("ver") % 11 === 0)),
+              Update(Some(Upsert.tcol("ver") % 13 === 1),
+                Map("s" -> concat(Upsert.tcol("s"), lit("!"))))))
+        val v =
+          if (m % 2 == 1) Versioned.merge(spark, dir, sDf, Seq("id"), updateWhen = lww)
+          else Versioned.mergeFull(spark, dir, sDf, Seq("id"), matched, notMatched, bySource)
+        val got = rowsOf(Versioned.read(spark, dir))
+        val want = rowsOf(Upsert.mergeFull(Versioned.readAt(spark, dir, prev), sDf, Seq("id"),
+          matched, notMatched, bySource))
+        assert(got == want, s"round $round merge $m: log merge diverged from relational merge")
+        // the per-commit feed pairs each key's old and new version
+        val (dels, ins) = (before -- got, got -- before)
+        val (delKeys, insKeys) = (dels.map(_._1), ins.map(_._1))
+        val wantCdf =
+          dels.map(r => (r, if (insKeys(r._1)) "update_preimage" else "delete")) ++
+            ins.map(r => (r, if (delKeys(r._1)) "update_postimage" else "insert"))
+        val gotCdf = Versioned.changesWithType(spark, dir, prev, v)
+          .select("id", "s", "ver", "_change_type").as[(Long, String, Long, String)]
+          .collect().map { case (id, s, ver, t) => ((id, s, ver), t) }
+        assert(gotCdf.length == wantCdf.size && gotCdf.toSet == wantCdf,
+          s"round $round merge $m: change feed differs from the snapshot diff")
+        val (fPrev, fNow) = (Versioned.filesAt(spark, dir, prev), Versioned.filesAt(spark, dir, v))
+        val (dvPrev, dvNow) = (Versioned.dvsAt(spark, dir, prev), Versioned.dvsAt(spark, dir, v))
+        sawSoftDelete ||= fPrev.exists(f => fNow.contains(f) &&
+          dvNow.getOrElse(Versioned.fileKey(f), Nil).size >
+            dvPrev.getOrElse(Versioned.fileKey(f), Nil).size)
+        sawRewrite ||= fPrev.exists(f => !fNow.contains(f) &&
+          dvPrev.contains(Versioned.fileKey(f)))
       }
+      // compaction materializes the merges' DVs: same content, no DVs
+      val content = rowsOf(Versioned.read(spark, dir))
+      val c = Versioned.compact(spark, dir)
+      assert(Versioned.dvsAt(spark, dir, c).isEmpty, s"round $round: compact kept DVs")
+      assert(rowsOf(Versioned.read(spark, dir)) == content)
     }
+    assert(sawSoftDelete, "no merge soft-deleted rows in a file it kept")
+    assert(sawRewrite, "no file with merge DVs crossed the half-live line")
+  }
+
+  test("MoR MERGE: a sparse merge keeps the file and soft-deletes exactly the changed rows") {
+    val dir = tmpDir("vt_merge_mor")
+    Versioned.append((1L to 10L).map(i => (i, s"t$i", 10L))
+      .toDF("id", "s", "ver").coalesce(1), dir)                        // v1, one file
+    val Seq(base) = Versioned.filesAt(spark, dir, 1L)
+    val posOf = spark.read.parquet(Versioned.dataPathStr(dir, base))
+      .select(col("id"), col("_metadata.row_index")).as[(Long, Long)].collect().toMap
+    // 3 and 7 win LWW, 5 loses (keeps its position), 11 inserts
+    val src = Seq((3L, "S3", 20L), (5L, "S5", 1L), (7L, "S7", 20L), (11L, "S11", 20L))
+      .toDF("id", "s", "ver")
+    val v = Versioned.merge(spark, dir, src, Seq("id"),
+      updateWhen = Upsert.scol("ver") > Upsert.tcol("ver"))
+    val after = Versioned.filesAt(spark, dir, v)
+    assert(after.contains(base), "a sparsely changed file must stay in the snapshot")
+    assert(Versioned.dvsAt(spark, dir, v).map { case (k, ps) => k -> ps.toSet } ==
+      Map(Versioned.fileKey(base) -> Set(posOf(3L), posOf(7L))),
+      "exactly the updated rows' positions must be soft-deleted")
+    // the fresh files hold only the changed rows' new versions and the insert
+    val fresh = after.filterNot(_ == base)
+    assert(spark.read.parquet(fresh.map(Versioned.dataPathStr(dir, _)): _*)
+      .as[(Long, String, Long)].collect().toSet ==
+      Set((3L, "S3", 20L), (7L, "S7", 20L), (11L, "S11", 20L)))
+    assert(Versioned.read(spark, dir).as[(Long, String, Long)].collect().toSet ==
+      ((1L to 10L).map(i => (i, s"t$i", 10L)).toSet --
+        Set((3L, "t3", 10L), (7L, "t7", 10L)) ++
+        Set((3L, "S3", 20L), (7L, "S7", 20L), (11L, "S11", 20L))))
+  }
+
+  test("MoR MERGE: a file left under half live is rewritten copy-on-write") {
+    import Upsert.MergeClause.{Delete, Update}
+    val dir = tmpDir("vt_merge_cow")
+    Versioned.append((1L to 4L).map(i => (i, s"t$i")).toDF("id", "s").coalesce(1), dir)
+    val Seq(base) = Versioned.filesAt(spark, dir, 1L)
+    // 1 deleted, 2 and 3 updated: one of four rows would stay live
+    val v = Versioned.mergeFull(spark, dir,
+      Seq((1L, "gone"), (2L, "U2"), (3L, "U3")).toDF("id", "s"), Seq("id"),
+      matched = Seq(Delete(Some(Upsert.scol("s") === "gone")), Update(None)),
+      notMatched = Nil)
+    assert(!Versioned.filesAt(spark, dir, v).contains(base),
+      "a file left under half live must be replaced")
+    assert(Versioned.dvsAt(spark, dir, v).isEmpty, "the replaced file's DVs retire with it")
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
+      Set((2L, "U2"), (3L, "U3"), (4L, "t4")))
+  }
+
+  test("MoR MERGE racing a compaction or a MoR delete of its soft-deleted file re-plans") {
+    import Upsert.MergeClause.Update
+    def ids(dir: String) = Versioned.read(spark, dir).as[(Long, String)].collect().toSeq
+    // (a) a compaction replaces the file between the merge's plan and
+    // its commit: re-basing would keep the old row 3 in the compacted
+    // file next to its new version
+    val dir = tmpDir("vt_mor_race_compact")
+    Versioned.append((1L to 8L).map(i => (i, s"t$i")).toDF("id", "s").coalesce(1), dir)
+    Versioned.withLogStore(new InjectBeforeFirstPublish(() => {
+      Versioned.compact(spark, dir); ()
+    })) {
+      Versioned.merge(spark, dir, Seq((3L, "U3")).toDF("id", "s"), Seq("id"))
+    }
+    assert(Versioned.opAt(spark, dir, 2L) == "optimize", "the race did not happen")
+    assert(ids(dir).sorted == (1L to 8L).map(i => (i, if (i == 3L) "U3" else s"t$i")),
+      s"got ${ids(dir).sorted}")
+    // (b) a MoR delete of the very row the merge updates: re-basing
+    // would publish the update and resurrect the deleted key
+    val dir2 = tmpDir("vt_mor_race_dv")
+    Versioned.append((1L to 8L).map(i => (i, s"t$i")).toDF("id", "s").coalesce(1), dir2)
+    Versioned.withLogStore(new InjectBeforeFirstPublish(() => {
+      Versioned.deleteWhereMoR(spark, dir2, col("id") === 3L); ()
+    })) {
+      Versioned.mergeFull(spark, dir2, Seq((3L, "U3")).toDF("id", "s"), Seq("id"),
+        matched = Seq(Update(None)), notMatched = Nil)
+    }
+    assert(Versioned.opAt(spark, dir2, 2L) == "delete-mor", "the race did not happen")
+    assert(ids(dir2).sorted == (1L to 8L).filterNot(_ == 3L).map(i => (i, s"t$i")),
+      s"got ${ids(dir2).sorted}")
   }
 
   test("concurrent MERGEs inserting the same new key never duplicate it") {
