@@ -417,6 +417,23 @@ class VersionedSpec extends SparkSpec {
     assert(ch.filter(col("_change_type") === "insert").isEmpty)
   }
 
+  test("a read subtracts a small DV set as a filter and a large one as a join, alike") {
+    val dir = tmpDir("vt_dv_forms")
+    Versioned.append(spark.range(10000).toDF("id").coalesce(2), dir) // v1
+    def ids = Versioned.read(spark, dir).as[Long].collect().toSet
+    // 10 positions: under the filter bound
+    Versioned.deleteWhereMoR(spark, dir, col("id") % 1000 === 7L)
+    assert(ids == (0L until 10000L).filterNot(_ % 1000 == 7).toSet)
+    // +5,000 positions: past it, the broadcast anti-join
+    Versioned.deleteWhereMoR(spark, dir, col("id") % 2 === 0L)
+    val live = (0L until 10000L).filterNot(i => i % 1000 == 7 || i % 2 == 0).toSet
+    assert(Versioned.dvsAt(spark, dir, 3L).values.map(_.size).sum > 4096)
+    assert(ids == live)
+    // the change feed reads the newly soft-deleted rows by position
+    assert(Versioned.changes(spark, dir, 2L, 3L).select("id").as[Long].collect().toSet ==
+      (0L until 10000L).filter(i => i % 2 == 0 && i % 1000 != 7).toSet)
+  }
+
   test("merge-on-read DELETE: same files, rows gone, compact purges the DVs") {
     val dir = tmpDir("vt_dv")
     Versioned.append(Seq((1L, "a"), (2L, "drop"), (3L, "c")).toDF("id", "s"), dir) // v1
@@ -834,7 +851,7 @@ class VersionedSpec extends SparkSpec {
 
   test("versioned MERGE equals the relational merge on randomized data") {
     // the log path adds row discovery, DVs, the copy-on-write fallback
-    // and commit machinery on top of Upsert.mergeFull — this pins that
+    // and commit machinery on top of the relational merge — this pins that
     // none of it changes the ANSWER: five successive merges through the
     // log (LWW merges alternating with matched-DELETE and BY SOURCE
     // clauses, so DVs accumulate and files cross the half-live line)
@@ -870,8 +887,13 @@ class VersionedSpec extends SparkSpec {
           if (m % 2 == 1) Versioned.merge(spark, dir, sDf, Seq("id"), updateWhen = lww)
           else Versioned.mergeFull(spark, dir, sDf, Seq("id"), matched, notMatched, bySource)
         val got = rowsOf(Versioned.read(spark, dir))
-        val want = rowsOf(Upsert.mergeFull(Versioned.readAt(spark, dir, prev), sDf, Seq("id"),
-          matched, notMatched, bySource))
+        // LWW steps check against the independent Upsert.lastWriterWins;
+        // only the clause steps need Upsert.mergeFull as their reference
+        val want = rowsOf(
+          if (m % 2 == 1) Upsert.lastWriterWins(Versioned.readAt(spark, dir, prev), sDf,
+            Seq("id"), "ver")
+          else Upsert.mergeFull(Versioned.readAt(spark, dir, prev), sDf, Seq("id"),
+            matched, notMatched, bySource))
         assert(got == want, s"round $round merge $m: log merge diverged from relational merge")
         // the per-commit feed pairs each key's old and new version
         val (dels, ins) = (before -- got, got -- before)

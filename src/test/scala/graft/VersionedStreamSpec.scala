@@ -149,6 +149,38 @@ class VersionedStreamSpec extends SparkSpec {
     assert(sinkRows(sink) == Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("skipChangeCommits streams each append once past merge-on-read mutations") {
+    val dir = tmpDir("vs_skip_mor")
+    val ckpt = tmpDir("vs_skip_mor_ckpt")
+    val sink = tmpDir("vs_skip_mor_sink") + "/out"
+    Versioned.append(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
+      .toDF("id", "s").coalesce(1), dir) // v1, one file
+    // v2: the MERGE updates id=1 by soft-deleting its row in v1's file
+    Versioned.merge(spark, dir, Seq((1L, "A")).toDF("id", "s"), Seq("id"))
+    assert(Versioned.dvsAt(spark, dir, 2L).nonEmpty, "the merge must go merge-on-read")
+    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L) // v3
+    Versioned.append(Seq((5L, "e")).toDF("id", "s"), dir) // v4
+    // every append row once, as a copy-on-write merge/delete leaves it,
+    // whether the window spans the mutations or ends before them
+    val appended = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e"))
+    def batch(from: Long, to: Long) = Versioned.streamBatch(spark, dir, from, to,
+      skipMutating = true).as[(Long, String)].collect().toSeq
+    assert(batch(0L, 4L).sorted == appended)
+    assert((0L until 4L).flatMap(v => batch(v, v + 1)).sorted == appended)
+    val q = spark.readStream.format("graft-versioned")
+      .option("path", dir).option("startingVersion", "0")
+      .option("skipChangeCommits", "true").load()
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) batch.write.mode("append").parquet(sink); ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(spark.read.parquet(sink).as[(Long, String)].collect().toSeq.sorted == appended)
+  }
+
   test("default start = initial snapshot: rewrites in history don't block the stream") {
     val dir = tmpDir("vs_snap")
     val ckpt = tmpDir("vs_snap_ckpt")
