@@ -87,8 +87,7 @@ private[graft] object Bloom {
     import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
     val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
     if (relFiles.nonEmpty) {
-      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      val scan = reader.parquet(relFiles.map(Versioned.dataPathStr(dir, _)): _*)
+      val scan = Versioned.readFiles(spark, dir, schema, relFiles)
       val bits = numBits(itemsPerFile, fpp)
       val aggs = physCols.map { c =>
         Bridge.column(new BloomFilterAggregate(
@@ -99,17 +98,12 @@ private[graft] object Bloom {
       val perFile = scan
         .groupBy(input_file_name().as("f"))
         .agg(aggs.head, aggs.tail: _*)
-      // normalize absolute scan URIs back to log-relative names (the
-      // zone-map rule: suffix match against the known list) and unpivot
-      // to the (f, c, bloom) sidecar rows
+      // map the scan's file URIs back to the committed names and
+      // unpivot to the (f, c, bloom) sidecar rows
       val rows = perFile.collectAsList() // one row per file — log-sized
-      // URI-keyed O(1) lookup, the RowStats discipline (O(n²) at scale)
-      val byPath = relFiles.map(rel =>
-        new org.apache.hadoop.fs.Path(
-          Versioned.dataPathStr(dir, rel)).toUri.getPath -> rel).toMap
+      val nameOf = Versioned.scannedName(dir, relFiles)
       rows.forEach { r =>
-        val rel = byPath.getOrElse(
-          new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath,
+        val rel = nameOf(r.getString(0)).getOrElse(
           throw new IllegalStateException(s"bloom row for unknown file ${r.getString(0)}"))
         physCols.zipWithIndex.foreach { case (c, i) =>
           val b = r.get(i + 1)
@@ -181,42 +175,6 @@ private[graft] object Bloom {
     all.filter(fr => !statted.contains(fr) || mightHave.contains(fr))
   }
 
-  /** Pointer JSON body for `v<N>.bloom.json`. A pointer may reference
-    * SEVERAL sidecar generations (`datas`): an incremental build stats
-    * only post-build files and appends its generation instead of
-    * copying the (GB-scale at 10⁶ files) existing sidecar forward —
-    * the zorderIncremental discipline. `items` records the per-file
-    * sizing so increments build bit-compatible blooms.
-    */
-  def pointerJson(
-      dataNames: Seq[String], physCols: Seq[String], fpp: Double,
-      itemsPerFile: Long): String =
-    s"""{"datas":[${dataNames.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""cols":[${physCols.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""fpp":$fpp,"items":$itemsPerFile}"""
-
-  /** (sidecar generations, cols, fpp, itemsPerFile). Legacy pointers
-    * carried a single `"data"` and no `"items"` (builds then defaulted
-    * to 10⁶ items/file).
-    */
-  def parsePointer(json: String): (Seq[String], Seq[String], Double, Long) = {
-    val datas =
-      if (json.contains("\"datas\":[")) {
-        json.split("\"datas\":\\[", 2)(1).split("]", 2)(0)
-          .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty)
-      } else Seq(json.split("\"data\":\"", 2)(1).split("\"", 2)(0))
-    val cols = json.split("\"cols\":\\[", 2)(1).split("]", 2)(0)
-      .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty)
-    val fpp = json.split("\"fpp\":", 2)(1).split("[,}]", 2)(0).toDouble
-    val items =
-      if (json.contains("\"items\":"))
-        json.split("\"items\":", 2)(1).split("[,}]", 2)(0).toLong
-      else 1000000L
-    (datas, cols, fpp, items)
-  }
-
   private def writeBytes(
       spark: SparkSession, dir: String, tmpName: String, dstName: String,
       body: String): Unit = {
@@ -229,11 +187,20 @@ private[graft] object Bloom {
       throw new IllegalStateException(s"bloom pointer publish failed: $dstName")
   }
 
+  /** Publishes the build pointer `v<N>.bloom.json`. A pointer may
+    * reference SEVERAL sidecar generations (`dataNames`): an
+    * incremental build stats only post-build files and appends its
+    * generation instead of copying the (GB-scale at 10⁶ files) existing
+    * sidecar forward — the zorderIncremental discipline.
+    * `itemsPerFile` records the per-file sizing so increments build
+    * bit-compatible blooms.
+    */
   def publishPointer(
       spark: SparkSession, dir: String, v: Long, dataNames: Seq[String],
       physCols: Seq[String], fpp: Double, itemsPerFile: Long): Unit = {
     writeBytes(spark, dir, s".v$v.bloom.tmp", f"v$v%08d.bloom.json",
-      pointerJson(dataNames, physCols, fpp, itemsPerFile))
+      LogCodec.encodeBloomPointer(
+        LogCodec.BloomPointer(dataNames, physCols, fpp, itemsPerFile)))
     // the `.bloom` marker gates the log-dir listing below: every
     // DSv2 equality scan probes for an index, and a never-bloomed
     // 10⁶-commit table must not pay an O(log-entries) listing per
@@ -270,8 +237,8 @@ private[graft] object Bloom {
           new String(bytes, StandardCharsets.UTF_8)
         } finally in.close()
       }
-      val (datas, cols, fpp, items) = parsePointer(json)
-      (bv, datas, cols, fpp, items)
+      val p = LogCodec.decodeBloomPointer(json)
+      (bv, p.datas, p.cols, p.fpp, p.items)
     }
   }
 

@@ -220,18 +220,16 @@ object Bucketed {
   def zoneSpec(spark: SparkSession, ref: BucketedRef): Option[ZoneSpec] = {
     val f = new Path(ref.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     readSidecar(f, ref).map { json =>
-      val fpb = """"filesPerBucket":(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(4)
-      ZoneSpec(ZoneMaps.blockCols(json), fpb)
+      val (fpb, blocks) = LogCodec.decodeBucketZones(json)
+      ZoneSpec(blocks.map(_._1), fpb)
     }
   }
 
   private def writeSidecar(
       f: org.apache.hadoop.fs.FileSystem, ref: BucketedRef, spec: ZoneSpec,
       zones: Map[String, ZoneMaps.Zones]): Unit = {
-    val json =
-      s"""{"filesPerBucket":${spec.filesPerBucket},"blocks":""" +
-        ZoneMaps.blocksJson(spec.cols, zones) + "}"
+    val json = LogCodec.encodeBucketZones(spec.filesPerBucket,
+      spec.cols.map(c => c -> zones.getOrElse(c, Seq.empty)))
     val tmp = new Path(ref.dir, s"._graft_zones.tmp")
     val out = f.create(tmp, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -261,13 +259,10 @@ object Bucketed {
     val f = new Path(ref.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val touchedPrefixes = touched.map(b => s"bucket=$b/").toSet
     def inTouched(file: String): Boolean = touchedPrefixes.exists(file.startsWith)
-    val kept: Map[String, ZoneMaps.Zones] = readSidecar(f, ref) match {
-      case Some(json) =>
-        spec.cols.map(c => c ->
-          ZoneMaps.parseBlock(json, c).getOrElse(Seq.empty).filterNot(z => inTouched(z._1))
-        ).toMap
-      case None => spec.cols.map(_ -> Seq.empty[(String, Long, Long)]).toMap
-    }
+    val blocks = readSidecar(f, ref).map(LogCodec.decodeBucketZones(_)._2).getOrElse(Nil)
+    val kept: Map[String, ZoneMaps.Zones] = spec.cols.map(c => c ->
+      blocks.collectFirst { case (`c`, z) => z }.getOrElse(Seq.empty)
+        .filterNot(z => inTouched(z._1))).toMap
     val freshFiles = dataFiles(f, ref).filter(inTouched)
     val fresh = ZoneMaps.compute(spark, ref.dir, freshFiles, spec.cols)
     val merged = spec.cols.map(c =>
@@ -286,7 +281,8 @@ object Bucketed {
       zoneCol: String, lo: Long, hi: Long): Seq[String] = {
     val f = new Path(ref.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val all = dataFiles(f, ref)
-    readSidecar(f, ref).flatMap(ZoneMaps.parseBlock(_, zoneCol)) match {
+    readSidecar(f, ref).flatMap(LogCodec.decodeBucketZones(_)._2
+      .collectFirst { case (`zoneCol`, z) => z }) match {
       case Some(zones) => ZoneMaps.prune(all, zones, lo, hi)
       case None => all
     }

@@ -217,20 +217,7 @@ object ColStats {
       spark: SparkSession, dir: String, v: Long,
       stats: Map[String, Stat]): Unit = {
     val f = path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def opt(o: Option[Long]): String = o.map(_.toString).getOrElse("null")
-    val body = stats.toSeq.sortBy(_._1).map { case (c, s) =>
-      val b64 = java.util.Base64.getEncoder.encodeToString(
-        c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // histogram as a flat [lo,hi,ndv, lo,hi,ndv, …] triple list —
-      // regex-parseable like every other sidecar field
-      val hh = s.histHeight.map(_.toString).getOrElse("null")
-      val hb = s.hist.map(_.map(b => s"${b.lo},${b.hi},${b.ndv}")
-        .mkString("[", ",", "]")).getOrElse("null")
-      s"""{"col":"$b64","ndv":${s.ndv},"nulls":${s.nulls},""" +
-        s""""min":${opt(s.min)},"max":${opt(s.max)},""" +
-        s""""avglen":${opt(s.avgLen)},"maxlen":${opt(s.maxLen)},""" +
-        s""""histh":$hh,"hist":$hb}"""
-    }.mkString(s"""{"version":$v,"stats":[""", ",", "]}")
+    val body = LogCodec.encodeColStats(v, stats)
     val tmp = new Path(s"$dir/_graft_log/.colstats.tmp")
     val out = f.create(tmp, true)
     out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -247,28 +234,6 @@ object ColStats {
     val in = f.open(path(dir))
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    val version = """"version":(\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong).getOrElse(return None)
-    val entry = ("""\{"col":"([^"]+)","ndv":(\d+),"nulls":(\d+),""" +
-      """"min":(-?\d+|null),"max":(-?\d+|null),""" +
-      """"avglen":(-?\d+|null),"maxlen":(-?\d+|null)""" +
-      // optional suffix: sidecars written before histograms lack it
-      """(?:,"histh":([-+.eE0-9]+|null),"hist":(\[[^\]]*\]|null))?\}""").r
-    def opt(s: String): Option[Long] =
-      if (s == "null") None else Some(s.toLong)
-    val stats = entry.findAllMatchIn(body).map { m =>
-      val c = new String(java.util.Base64.getDecoder.decode(m.group(1)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val histH = Option(m.group(8)).filter(_ != "null").map(_.toDouble)
-      val hist = Option(m.group(9)).filter(_ != "null").map { s =>
-        s.stripPrefix("[").stripSuffix("]").split(",").filter(_.nonEmpty)
-          .grouped(3).map(t => Bin(t(0).toDouble, t(1).toDouble,
-            t(2).toDouble.toLong)).toSeq
-      }.filter(_.nonEmpty)
-      c -> Stat(m.group(2).toLong, m.group(3).toLong,
-        opt(m.group(4)), opt(m.group(5)), opt(m.group(6)), opt(m.group(7)),
-        histH, hist)
-    }.toMap
-    Some((version, stats))
+    LogCodec.decodeColStats(body)
   }
 }

@@ -79,22 +79,16 @@ private[graft] object RowStats {
         try rel -> r.getRecordCount finally r.close()
       }.toMap
     } else {
-      // URI-path keyed O(1) lookup: `input_file_name` reports the full
-      // URI (`file:///…`) while `dataPathStr` may be scheme-less, so
-      // both sides normalize through Path.toUri.getPath. A linear
-      // `endsWith` scan per result row would be O(n²) on the driver —
-      // ~10¹² comparisons at the 10⁶-file ANALYZE this path exists for.
-      val byPath = relFiles.map { rel =>
-        new Path(Versioned.dataPathStr(base, rel)).toUri.getPath -> rel
-      }.toMap
-      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      val counted = reader
-        .parquet(relFiles.map(Versioned.dataPathStr(base, _)): _*)
+      // path-keyed O(1) lookup: a linear `endsWith` scan per result
+      // row would be O(n²) on the driver — ~10¹² comparisons at the
+      // 10⁶-file ANALYZE this path exists for
+      val nameOf = Versioned.scannedName(base, relFiles)
+      val counted = Versioned.readFiles(spark, base, schema, relFiles)
         .groupBy(input_file_name().as("f"))
         .agg(count(lit(1)).as("n"))
         .collect()
         .map { r =>
-          val rel = byPath.getOrElse(new Path(r.getString(0)).toUri.getPath,
+          val rel = nameOf(r.getString(0)).getOrElse(
             throw new IllegalStateException(
               s"row-count row for unknown file ${r.getString(0)}"))
           rel -> r.getLong(1)
@@ -122,27 +116,6 @@ private[graft] object RowStats {
     */
   private[graft] var FullCarryMax: Int = 1024
 
-  /** `{"full":true|false,"files":[{"f":"…","n":123},…]}`, entries
-    * sorted by file name. `full` = this sidecar alone carries every
-    * count its commit could resolve (resolution stops here); absent on
-    * legacy sidecars, which were always written full.
-    */
-  def toJson(counts: Counts, full: Boolean): String =
-    counts.toSeq.sortBy(_._1)
-      .map { case (f, n) => s"""{"f":"$f","n":$n}""" }
-      .mkString(s"""{"full":$full,"files":[""", ",", "]}")
-
-  /** (full, counts) — a sidecar without the flag predates deltas and
-    * was written full.
-    */
-  def parse(json: String): (Boolean, Counts) = {
-    val full = !json.startsWith("""{"full":false""")
-    (full,
-      """\{"f":"([^"]+)","n":(\d+)\}""".r
-        .findAllMatchIn(json)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-  }
-
   def sidecar(logDir: Path, v: Long): Path =
     new Path(logDir, f"v$v%08d.rows.json")
 
@@ -154,7 +127,7 @@ private[graft] object RowStats {
       counts: Counts, full: Boolean = true): Unit = {
     val tmp = new Path(logDir, s".v$v.rows.tmp")
     val out = f.create(tmp, true)
-    try out.write(toJson(counts, full).getBytes(StandardCharsets.UTF_8))
+    try out.write(LogCodec.encodeRowStats(counts, full).getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val target = sidecar(logDir, v)
     if (!f.rename(tmp, target)) {

@@ -1,8 +1,5 @@
 package graft.table
 
-import java.nio.charset.StandardCharsets
-import java.util.Base64
-
 import org.apache.spark.sql.SparkSession
 
 /** Per-file min/max stats for STRING columns — the half of the
@@ -32,9 +29,8 @@ import org.apache.spark.sql.SparkSession
   * its bounds PROVE no value can satisfy the predicate; absent files
   * ("no stats") never skip; all-NULL files carry an empty-range
   * sentinel and skip every bounded probe (NULL never satisfies the
-  * residual predicate every pruned read still applies). Bound strings
-  * are base64-coded in the sidecar so arbitrary content (quotes,
-  * newlines, unicode) cannot corrupt the hand-parsed JSON.
+  * residual predicate every pruned read still applies). The sidecar
+  * format is [[LogCodec.encodeStrZones]].
   */
 object StrZones {
 
@@ -127,8 +123,7 @@ object StrZones {
     }
     if (relFiles.isEmpty || cols.isEmpty)
       return colsRequested.map(_ -> Seq.empty[Bound]).toMap
-    val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-    val scan = reader.parquet(relFiles.map(Versioned.dataPathStr(base, _)): _*)
+    val scan = Versioned.readFiles(spark, base, schema, relFiles)
     // substring counts CHARACTERS (UTF-16 units in Spark) — over-fetch
     // by a few to survive surrogate pairs, then re-truncate by code
     // point on the driver
@@ -136,17 +131,13 @@ object StrZones {
     val aggs = cols.flatMap(c => Seq(
       min(substring(col(c), 1, fetch)).as(s"lo_$c"),
       max(substring(col(c), 1, fetch)).as(s"hi_$c")))
-    // URI-keyed O(1) lookup, the RowStats discipline (O(n²) at scale)
-    val byPath = relFiles.map(rel =>
-      new org.apache.hadoop.fs.Path(
-        Versioned.dataPathStr(base, rel)).toUri.getPath -> rel).toMap
+    val nameOf = Versioned.scannedName(base, relFiles)
     val stats = scan
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one row per file of one write — log-sized
       .map { r =>
-        val rel = byPath.getOrElse(
-          new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath,
+        val rel = nameOf(r.getString(0)).getOrElse(
           throw new IllegalStateException(
             s"string-zone row for unknown file ${r.getString(0)}"))
         rel -> r
@@ -167,45 +158,6 @@ object StrZones {
       }
     }.toMap
   }
-
-  private def b64(s: String): String =
-    Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
-
-  private def unb64(s: String): String =
-    new String(Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
-
-  /** `[{"col":"c","bounds":[{"file":"f","lo":"<b64>","hi":"<b64>"},…]},…]`
-    * — absent `lo` = all-NULL sentinel; absent `hi` (with `lo`
-    * present) = unbounded above.
-    */
-  def blocksJson(cols: Seq[String], bounds: Map[String, Bounds]): String =
-    cols.map { c =>
-      bounds.getOrElse(c, Seq.empty).map { b =>
-        val lo = b.lo.map(v => s""","lo":"${b64(v)}"""").getOrElse("")
-        val hi = b.hi.map(v => s""","hi":"${b64(v)}"""").getOrElse("")
-        s"""{"file":"${b.file}"$lo$hi}"""
-      }.mkString(s"""{"col":"${b64(c)}","bounds":[""", ",", "]}")
-    }.mkString("[", ",", "]")
-
-  /** One column's bounds out of a [[blocksJson]] payload. */
-  def parseBlock(json: String, col: String): Option[Bounds] = {
-    val blockRe = ("""\{"col":"""" + java.util.regex.Pattern.quote(b64(col)) +
-      """","bounds":\[(.*?)\]\}""").r
-    blockRe.findFirstMatchIn(json).map { m =>
-      val boundRe =
-        """\{"file":"([^"]+)"(?:,"lo":"([A-Za-z0-9+/=]*)")?(?:,"hi":"([A-Za-z0-9+/=]*)")?\}""".r
-      boundRe.findAllMatchIn(m.group(1)).map { b =>
-        Bound(b.group(1),
-          Option(b.group(2)).map(unb64),
-          Option(b.group(3)).map(unb64))
-      }.toSeq
-    }
-  }
-
-  /** Every column name carrying a block, in block order. */
-  def blockCols(json: String): Seq[String] =
-    """\{"col":"([A-Za-z0-9+/=]*)","bounds":\[""".r
-      .findAllMatchIn(json).map(m => unb64(m.group(1))).toSeq
 
   /** The subset of `all` a string predicate must read. `qLo`/`qHi` are
     * the query's must-hold closed bounds (either side open = None);

@@ -6,6 +6,8 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.table.LogCodec.{CkptRef, Delta, FullList, LogEntry}
+
 /** Log-backed versioned table: the Delta-transaction-log analog the
   * plain `Table` layer (write-temp + rename) deliberately omits.
   *
@@ -218,29 +220,32 @@ object Versioned {
   /** Reader features THIS build understands. A log entry stamped with
     * a feature outside this set was written by a newer (or different)
     * writer whose format this build cannot interpret safely — every
-    * read path refuses it by name ([[snapshotJson]]) rather than
+    * read path refuses it by name ([[entryAt]]) rather than
     * silently misreading (Delta's protocol-action contract).
     */
   private[graft] val SupportedReaderFeatures: Set[String] =
     Set("deletion-vectors", "columnar-checkpoint", "column-mapping")
 
-  private def snapshotJson(spark: SparkSession, dir: String, v: Long): String = {
+  /** The decoded log entry of version `v`. A caller needing several
+    * facts of one version reads its entry once and takes them all.
+    */
+  private def entryAt(spark: SparkSession, dir: String, v: Long): LogEntry = {
     val p = versionFile(dir, v)
     require(fs(spark, dir).exists(p),
       s"version $v does not exist (vacuumed or never committed) at $dir")
-    val json = readFully(spark, dir, p)
+    val e = LogCodec.decode(readFully(spark, dir, p))
     // the one choke point every log-entry read passes through — scans,
     // time travel, CDF, commits (which read the head), vacuum: all of
     // them must refuse a feature they cannot interpret, because all of
     // them would corrupt or misread the table by guessing
-    val unknown = listOf(json, "readerfeatures").filterNot(SupportedReaderFeatures)
+    val unknown = e.readerFeatures.filterNot(SupportedReaderFeatures)
     if (unknown.nonEmpty)
       throw new UnsupportedOperationException(
         s"table at $dir (log entry v$v) requires reader feature(s) " +
           s"${unknown.mkString("[", ", ", "]")} that this build does not " +
           s"support (supported: ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}); " +
           "upgrade the reader instead of bypassing this check")
-    json
+    e
   }
 
   /** Data files (table-relative paths) of snapshot `v`, resolved from
@@ -254,7 +259,7 @@ object Versioned {
 
   /** Walk back from `v` to the nearest full file list (a checkpoint
     * entry, a legacy full-list entry, or a vacuum-written `.ckpt.json`
-    * sidecar), then replay the add/remove deltas forward. `headJson`
+    * sidecar), then replay the add/remove deltas forward. `head`
     * lets callers that already read `v`'s entry skip one log read.
     *
     * A concurrent vacuum can truncate ancestors mid-walk AFTER this
@@ -312,7 +317,7 @@ object Versioned {
 
   private def resolveFiles(
       spark: SparkSession, dir: String, v: Long,
-      headJson: Option[String]): Seq[String] = {
+      head: Option[LogEntry]): Seq[String] = {
     val key = memoKey(dir, v)
     val st =
       try Some(fs(spark, dir).getFileStatus(versionFile(dir, v)))
@@ -327,7 +332,7 @@ object Versioned {
     while (true) {
       try {
         val out = resolveFilesOnce(
-          spark, dir, v, if (attempt == 0) headJson else None)
+          spark, dir, v, if (attempt == 0) head else None)
         st.foreach(s => filesMemo.put(key,
           FilesMemoEntry(s.getLen, s.getModificationTime, out)))
         return out
@@ -342,34 +347,35 @@ object Versioned {
 
   private def resolveFilesOnce(
       spark: SparkSession, dir: String, v: Long,
-      headJson: Option[String]): Seq[String] = {
+      head: Option[LogEntry]): Seq[String] = {
     val f = fs(spark, dir)
-    var deltas = List.empty[(Seq[String], Seq[String])]
+    var deltas = List.empty[Delta]
     var cur = v
-    var json = headJson.getOrElse(snapshotJson(spark, dir, cur))
+    var e = head.getOrElse(entryAt(spark, dir, cur))
     while (true) {
-      fullListOf(spark, dir, json) match {
-        case Some(full) => return replayDeltas(full, deltas)
-        case None =>
+      e.actions match {
+        case d: Delta =>
           // a vacuum-written sidecar holds cur's POST-commit state, so
           // cur's own delta is already folded in — check before pushing
           val ck = ckptFile(dir, cur)
           if (f.exists(ck))
             return replayDeltas(
-              fullListOf(spark, dir, readFully(spark, dir, ck)).getOrElse(
+              fullListOf(spark, dir,
+                LogCodec.decodeAnchor(readFully(spark, dir, ck))).getOrElse(
                 // published sidecars are complete by construction
                 // (unique temps + atomic rename), so malformed means
                 // corruption — loud, never a silently partial list
                 throw new IllegalStateException(
                   s"checkpoint sidecar for v$cur at $dir is malformed — " +
                     "refusing to serve a partial file list")), deltas)
-          deltas = (listOf(json, "add"), listOf(json, "remove")) :: deltas
+          deltas = d :: deltas
           cur -= 1
           require(cur >= 1 && f.exists(versionFile(dir, cur)),
             s"cannot resolve the file list of v$v at $dir: the log is " +
               s"truncated below v${cur + 1} with no checkpoint — the version " +
               "is outside the vacuum-retained window")
-          json = snapshotJson(spark, dir, cur)
+          e = entryAt(spark, dir, cur)
+        case full => return replayDeltas(fullListOf(spark, dir, full).get, deltas)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -379,11 +385,10 @@ object Versioned {
     * removed files drop (order of survivors preserved), added files
     * append — exactly how every commit path builds its new list.
     */
-  private def replayDeltas(
-      base: Seq[String], deltas: List[(Seq[String], Seq[String])]): Seq[String] =
-    deltas.foldLeft(base) { case (acc, (add, remove)) =>
-      val gone = remove.toSet
-      acc.filterNot(gone) ++ add
+  private def replayDeltas(base: Seq[String], deltas: List[Delta]): Seq[String] =
+    deltas.foldLeft(base) { (acc, d) =>
+      val gone = d.remove.toSet
+      acc.filterNot(gone) ++ d.add
     }
 
   /** Latest snapshot scan. */
@@ -391,27 +396,17 @@ object Versioned {
     readAt(spark, dir, currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $dir")))
 
-  /** The schema snapshot `v` committed (base64 StructType.json in the
-    * log entry); None for a pre-schema log entry.
+  /** The schema snapshot `v` committed; None for a pre-schema log
+    * entry.
     */
   def schemaAt(spark: SparkSession, dir: String, v: Long):
       Option[org.apache.spark.sql.types.StructType] =
-    schemaOf(snapshotJson(spark, dir, v))
+    schemaOf(entryAt(spark, dir, v))
 
-  /** [[schemaAt]] over an already-read log entry — for callers that
-    * batch several facts out of ONE entry read (the CDF planner).
-    */
-  private def schemaOf(json: String):
-      Option[org.apache.spark.sql.types.StructType] =
-    json.split("\"schema\":\"", 2) match {
-      case Array(_, rest) =>
-        val b64 = rest.split("\"", 2)(0)
-        Some(org.apache.spark.sql.types.DataType
-          .fromJson(new String(
-            java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case _ => None
-    }
+  /** [[schemaAt]] over an already-read log entry. */
+  private def schemaOf(e: LogEntry): Option[org.apache.spark.sql.types.StructType] =
+    e.schema.map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Time-travel scan of snapshot `v` (Delta `VERSION AS OF v`). The
     * scan applies the schema the snapshot COMMITTED, not what the file
@@ -421,9 +416,11 @@ object Versioned {
     * An empty snapshot still binds its schema for the same reason:
     * zero part files must not mean zero columns.
     */
-  def readAt(spark: SparkSession, dir: String, v: Long): DataFrame =
-    readFileSubset(spark, dir, schemaAt(spark, dir, v),
-      filesAt(spark, dir, v), dvsAt(spark, dir, v))
+  def readAt(spark: SparkSession, dir: String, v: Long): DataFrame = {
+    val e = entryAt(spark, dir, v)
+    readFileSubset(spark, dir, schemaOf(e),
+      resolveFiles(spark, dir, v, Some(e)), dvsOf(spark, dir, e))
+  }
 
   /** Reads a SUBSET of a snapshot's files under its committed schema,
     * with the snapshot's DVs restricted to that subset — the one
@@ -469,9 +466,10 @@ object Versioned {
   def readSnapshotSlice(
       spark: SparkSession, dir: String, v: Long,
       fromIdx: Long, untilIdx: Long): DataFrame = {
-    val files = snapshotFileOrder(spark, dir, v)
+    val e = entryAt(spark, dir, v)
+    val files = resolveFiles(spark, dir, v, Some(e)).sorted
       .slice(math.toIntExact(fromIdx), math.toIntExact(untilIdx))
-    readFileSubset(spark, dir, schemaAt(spark, dir, v), files, dvsAt(spark, dir, v))
+    readFileSubset(spark, dir, schemaOf(e), files, dvsOf(spark, dir, e))
   }
 
   /** Per-file sizes aligned with [[snapshotFileOrder]] — the
@@ -618,6 +616,50 @@ object Versioned {
     else df.withColumn(f.name, path)
   }
 
+  /** A parquet scan of exactly the committed files `files` (names
+    * relative to `base`): names are read literally, never expanded as
+    * globs, so `a?b.parquet` or `a[1].parquet` reads that one file.
+    * Glob metacharacters are escaped rather than globbing switched off:
+    * with `DataSource.GLOB_PATHS_KEY` false, Spark 4.1 lists every path
+    * of the read once more for each name that holds a metacharacter.
+    */
+  private[graft] def readFiles(
+      spark: SparkSession, base: String,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      files: Seq[String]): DataFrame =
+    schema.map(spark.read.schema).getOrElse(spark.read).parquet(files.map(f =>
+      dataPathStr(base, f).flatMap(c =>
+        if ("{}[]*?\\".indexOf(c) >= 0) s"\\$c" else c.toString)): _*)
+
+  /** Maps the file URI a scan over `relFiles` reports for a row
+    * (`input_file_name()`, `_metadata.file_path` — percent-encoded) back
+    * to the committed name; None for a file outside `relFiles`.
+    */
+  private[graft] def scannedName(
+      base: String, relFiles: Seq[String]): String => Option[String] = {
+    val byPath = relFiles.map(rel => new Path(dataPathStr(base, rel)).toUri.getPath -> rel).toMap
+    uri => byPath.get(new Path(new java.net.URI(uri)).toUri.getPath)
+  }
+
+  /** The [[fileKey]] of the file a scan row came from, for a scan over
+    * (at least) `files`. `_metadata.file_path` and `input_file_name()`
+    * report a file's URI, which percent-encodes a space, `"`, `#` and
+    * `%` but not `+` — so SQL `url_decode`, which also turns `+` into a
+    * space, cannot undo it. The URI's last two segments map back to the
+    * committed keys through a literal map, built only when some name in
+    * `files` is spelled differently in its URI.
+    */
+  private def scanFileKey(
+      path: org.apache.spark.sql.Column, files: Iterable[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, substring_index, typedLit}
+    val rel = substring_index(path, "/", -2)
+    val respelled = files.iterator.map(fileKey)
+      .map(k => fileKey(new Path(k).toUri.getRawPath) -> k)
+      .filter { case (uri, k) => uri != k }.toMap
+    if (respelled.isEmpty) rel
+    else { val uriToKey = typedLit(respelled); coalesce(uriToKey(rel), rel) }
+  }
+
   private def readRaw(
       spark: SparkSession, dir: String,
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -629,12 +671,9 @@ object Versioned {
         // projection is name-only, so `_metadata` (row positions, file
         // paths) still resolves through it for the DV and discovery scans
         import org.apache.spark.sql.functions.col
-        spark.read.schema(physicalSchema(s))
-          .parquet(files.map(dataPathStr(dir, _)): _*)
+        readFiles(spark, dir, Some(physicalSchema(s)), files)
           .select(s.fields.toSeq.map(f => col(physicalName(f)).as(f.name)): _*)
-      case Some(s) =>
-        spark.read.schema(s).parquet(files.map(dataPathStr(dir, _)): _*)
-      case None => spark.read.parquet(files.map(dataPathStr(dir, _)): _*)
+      case _ => readFiles(spark, dir, schema, files)
     }
     hiveFieldOf(schema) match {
       case Some(hf) =>
@@ -662,9 +701,9 @@ object Versioned {
   private def applyDvs(
       spark: SparkSession, df: DataFrame, dvs: Map[String, Seq[Long]]): DataFrame = {
     if (dvs.isEmpty) return df
-    import org.apache.spark.sql.functions.{broadcast, col, concat_ws, substring_index}
+    import org.apache.spark.sql.functions.{broadcast, col, concat_ws}
     import spark.implicits._
-    val rel = substring_index(col("_metadata.file_path"), "/", -2)
+    val rel = scanFileKey(col("_metadata.file_path"), dvs.keys)
     val idx = col("_metadata.row_index")
     if (dvs.valuesIterator.map(_.size.toLong).sum <= DvFilterMax)
       // two flat hash-set probes: the file first, so rows of files
@@ -688,49 +727,12 @@ object Versioned {
     */
   private val DvFilterMax = 4096L
 
-  private def opOf(json: String): String =
-    json.split("\"op\":\"", 2) match {
-      case Array(_, rest) => rest.split("\"", 2)(0)
-      case _ => "unknown"
-    }
-
-  private def tsOf(json: String): Option[Long] =
-    json.split("\"ts\":", 2) match {
-      case Array(_, rest) => Some(rest.takeWhile(_.isDigit).toLong)
-      case _ => None
-    }
-
-  /** The full file list of a CHECKPOINT entry (or legacy full-list
-    * entry); None for an add/remove delta entry. File names are
-    * uuid/part names we wrote ourselves (no quotes/escapes), so the
-    * minimal textual parse is safe.
-    */
-  private def filesOfOpt(json: String): Option[Seq[String]] =
-    json.split("\"files\":\\[", 2) match {
-      case Array(_, rest) =>
-        val files = rest.split("]", 2)(0)
-        Some(
-          if (files.trim.isEmpty) Seq.empty
-          else files.split(",").toSeq
-            .map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-      case _ => None
-    }
-
-  /** The parquet checkpoint sidecar a full-list entry references, if
-    * its list spilled columnar (`"ckptfile":"ckpt-<uuid>.parquet"`).
-    */
-  private def ckptRefOf(json: String): Option[String] =
-    json.split("\"ckptfile\":\"", 2) match {
-      case Array(_, rest) => Some(rest.split("\"", 2)(0))
-      case _ => None
-    }
-
   /** Max file-list entries inlined as JSON in a checkpoint entry (or
     * vacuum anchor sidecar); larger lists spill to a COLUMNAR parquet
     * sidecar the entry references. At 10⁶ files an inline checkpoint
-    * is tens of MB of single-line JSON parsed by string splits per
-    * snapshot resolution; the parquet form reads back with one
-    * vectorized scan. Var (not val) only as a test seam — specs lower
+    * is tens of MB of single-line JSON parsed per snapshot
+    * resolution; the parquet form reads back with one vectorized
+    * scan. Var (not val) only as a test seam — specs lower
     * it to force the columnar path at fixture scale.
     */
   @volatile private[graft] var CkptInlineMax: Int = 4096
@@ -770,27 +772,16 @@ object Versioned {
       .collect().toSeq.map(_.getString(0))
 
   /** The full file list an entry (or anchor sidecar) carries — inline
-    * JSON or via its columnar checkpoint reference; None for a delta
-    * entry. The one resolution point every full-list reader goes
-    * through, so mixed-format logs (inline legacy + columnar new) read
-    * uniformly.
+    * or via its columnar checkpoint reference; None for a delta entry.
+    * The one resolution point every full-list reader goes through, so
+    * mixed-format logs (inline legacy + columnar new) read uniformly.
     */
   private def fullListOf(
-      spark: SparkSession, dir: String, json: String): Option[Seq[String]] =
-    filesOfOpt(json).orElse(
-      ckptRefOf(json).map(readCkptSidecar(spark, dir, _)))
-
-  /** A top-level string-array value (`"key":["a","b"]`); empty when the
-    * key is absent.
-    */
-  private def listOf(json: String, key: String): Seq[String] =
-    json.split("\"" + key + "\":\\[", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("]", 2)(0)
-        if (body.trim.isEmpty) Seq.empty
-        else body.split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => Seq.empty
+      spark: SparkSession, dir: String, a: LogCodec.Actions): Option[Seq[String]] =
+    a match {
+      case FullList(files) => Some(files)
+      case CkptRef(name) => Some(readCkptSidecar(spark, dir, name))
+      case _: Delta => None
     }
 
   /** The operation that produced snapshot `v` (append, overwrite,
@@ -800,14 +791,14 @@ object Versioned {
     * [[windowShape]] distinguishes from content changes).
     */
   def opAt(spark: SparkSession, dir: String, v: Long): String =
-    opOf(snapshotJson(spark, dir, v))
+    entryAt(spark, dir, v).op
 
   /** Wall-clock commit time of snapshot `v` (epoch millis,
     * nondecreasing in version order). Pre-ts log entries fall back to
     * the log file's modification time.
     */
   def commitTimestampAt(spark: SparkSession, dir: String, v: Long): Long =
-    tsOf(snapshotJson(spark, dir, v)).getOrElse(
+    entryAt(spark, dir, v).ts.getOrElse(
       fs(spark, dir).getFileStatus(versionFile(dir, v)).getModificationTime)
 
   /** Commit history, oldest first — the DESCRIBE HISTORY analog: one
@@ -842,13 +833,14 @@ object Versioned {
     val window = if (limit >= vs.size) vs else vs.takeRight(limit)
     var running: Seq[String] = Seq.empty
     window.zipWithIndex.map { case (v, i) =>
-      val json = snapshotJson(spark, dir, v)
-      running =
-        if (i == 0) resolveFiles(spark, dir, v, Some(json))
-        else fullListOf(spark, dir, json).getOrElse(
-          replayDeltas(running, List((listOf(json, "add"), listOf(json, "remove")))))
-      (v, opOf(json),
-        tsOf(json).getOrElse(
+      val e = entryAt(spark, dir, v)
+      running = e.actions match {
+        case _ if i == 0 => resolveFiles(spark, dir, v, Some(e))
+        case d: Delta => replayDeltas(running, List(d))
+        case full => fullListOf(spark, dir, full).get
+      }
+      (v, e.op,
+        e.ts.getOrElse(
           fs(spark, dir).getFileStatus(versionFile(dir, v)).getModificationTime),
         running.size.toLong)
     }.toDF("version", "op", "commit_ts", "n_files")
@@ -864,21 +856,21 @@ object Versioned {
     import spark.implicits._
     val v = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $dir"))
-    val json = snapshotJson(spark, dir, v)
-    val files = resolveFiles(spark, dir, v, Some(json))
+    val e = entryAt(spark, dir, v)
+    val files = resolveFiles(spark, dir, v, Some(e))
     val f = fs(spark, dir)
     val bytes = files.map(rel => f.getFileStatus(dataPath(dir, rel)).getLen).sum
     Seq((
       v,
-      tsOf(json).getOrElse(
+      e.ts.getOrElse(
         f.getFileStatus(versionFile(dir, v)).getModificationTime),
       files.size.toLong,
       bytes,
-      dvsOf(spark, dir, json).values.map(_.size.toLong).sum,
+      dvsOf(spark, dir, e).values.map(_.size.toLong).sum,
       // logical row count from the stats sidecar (DVs subtracted);
       // NULL on legacy/uncovered snapshots — never a scan from here
       metaRowCountAt(spark, dir, v),
-      constraintsOf(json).keys.toSeq.sorted,
+      e.constraints.keys.toSeq.sorted,
       // declared layouts (Delta's partitionColumns/clusteringColumns
       // analog): CLUSTER BY columns and the hash-bucket spec
       clusterByAt(spark, dir, v).mkString(","),
@@ -914,7 +906,7 @@ object Versioned {
     // the OLDEST retained entry carries it the whole probed chain does;
     // otherwise fall back to the linear scan the bisection replaced
     // (same answer on any ordering: max version at-or-before).
-    if (tsOf(snapshotJson(spark, dir, vs.head)).isEmpty)
+    if (entryAt(spark, dir, vs.head).ts.isEmpty)
       return vs.filter(v => commitTimestampAt(spark, dir, v) <= tsMillis)
         .maxOption.getOrElse(throw new IllegalArgumentException(
           s"no version committed at or before $tsMillis at $dir — the oldest " +
@@ -944,7 +936,7 @@ object Versioned {
     // binary search over the nondecreasing commit timestamps, mirror of
     // [[versionAsOf]] — including its legacy-table linear fallback
     // (pre-'ts' entries resolve via clobber-able file mtimes)
-    if (tsOf(snapshotJson(spark, dir, vs.head)).isEmpty)
+    if (entryAt(spark, dir, vs.head).ts.isEmpty)
       return vs.filter(v => commitTimestampAt(spark, dir, v) >= tsMillis)
         .minOption.getOrElse(throw new IllegalArgumentException(
           s"no version committed at or after $tsMillis at $dir — the newest " +
@@ -991,21 +983,7 @@ object Versioned {
     * so it matches `ALTER TABLE ADD CONSTRAINT` exactly).
     */
   def constraintsAt(spark: SparkSession, dir: String, v: Long): Map[String, String] =
-    constraintsOf(snapshotJson(spark, dir, v))
-
-  private def constraintsOf(json: String): Map[String, String] =
-    json.split("\"constraints\":\\{", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("}", 2)(0).trim
-        if (body.isEmpty) Map.empty
-        else body.split(",").map { kv =>
-          val Array(k, b64) = kv.split(":", 2)
-          k.trim.stripPrefix("\"").stripSuffix("\"") ->
-            new String(java.util.Base64.getDecoder.decode(
-              b64.trim.stripPrefix("\"").stripSuffix("\"")), StandardCharsets.UTF_8)
-        }.toMap
-      case _ => Map.empty
-    }
+    entryAt(spark, dir, v).constraints
 
   private def headConstraints(spark: SparkSession, dir: String): Map[String, String] =
     currentVersion(spark, dir).map(constraintsAt(spark, dir, _)).getOrElse(Map.empty)
@@ -1030,21 +1008,7 @@ object Versioned {
     *    commits ([[maybeAutoCompact]]).
     */
   def propertiesAt(spark: SparkSession, dir: String, v: Long): Map[String, String] =
-    propsOf(snapshotJson(spark, dir, v))
-
-  private def propsOf(json: String): Map[String, String] =
-    json.split("\"props\":\\{", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("}", 2)(0).trim
-        if (body.isEmpty) Map.empty
-        else body.split(",").map { kv =>
-          val Array(k, b64) = kv.split(":", 2)
-          k.trim.stripPrefix("\"").stripSuffix("\"") ->
-            new String(java.util.Base64.getDecoder.decode(
-              b64.trim.stripPrefix("\"").stripSuffix("\"")), StandardCharsets.UTF_8)
-        }.toMap
-      case _ => Map.empty
-    }
+    entryAt(spark, dir, v).props
 
   /** This table's checkpoint cadence: the `graft.checkpointInterval`
     * property when set (and valid), else the engine default. Read from
@@ -1147,7 +1111,10 @@ object Versioned {
     * generation expression SQL.
     */
   def generatedAt(spark: SparkSession, dir: String, v: Long): Map[String, String] =
-    propertiesAt(spark, dir, v).collect {
+    generatedOf(propertiesAt(spark, dir, v))
+
+  private def generatedOf(props: Map[String, String]): Map[String, String] =
+    props.collect {
       case (k, e) if k.startsWith(GeneratedPrefix) =>
         k.stripPrefix(GeneratedPrefix) -> e
     }
@@ -1162,6 +1129,10 @@ object Versioned {
       spark: SparkSession, dir: String, v: Long): Map[String, String] =
     generatedChecks(generatedAt(spark, dir, v))
 
+  /** The implicit CHECKs of a snapshot's generated and identity columns. */
+  private def implicitChecks(props: Map[String, String]): Map[String, String] =
+    generatedChecks(generatedOf(props)) ++ identityChecks(props)
+
   /** Recomputes declared GENERATED columns over a row-rewrite output —
     * the Delta rewrite contract: an UPDATE or MERGE changing a
     * generation dependency regenerates the column, and a MERGE INSERT
@@ -1169,9 +1140,8 @@ object Versioned {
     * the expression value). Deterministic expressions make this a
     * no-op on carried rows.
     */
-  private def regenerated(
-      spark: SparkSession, dir: String, base: Long, df: DataFrame): DataFrame = {
-    val gen = generatedAt(spark, dir, base)
+  private def regenerated(props: Map[String, String], df: DataFrame): DataFrame = {
+    val gen = generatedOf(props)
     if (gen.isEmpty) return df
     import org.apache.spark.sql.functions.expr
     val types = df.schema.fields
@@ -1187,10 +1157,11 @@ object Versioned {
   /** The implicit NOT NULL checks identity columns impose on rewrite
     * outputs (merge/update cannot manufacture unassigned rows).
     */
-  private def identityChecksAt(
-      spark: SparkSession, dir: String, v: Long): Map[String, String] =
-    identityAt(spark, dir, v).keys
-      .map(c => s"identity_$c" -> s"`$c` IS NOT NULL").toMap
+  private def identityChecks(props: Map[String, String]): Map[String, String] =
+    props.keys.collect { case k if k.startsWith(IdentityPrefix) =>
+      val c = k.stripPrefix(IdentityPrefix)
+      s"identity_$c" -> s"`$c` IS NOT NULL"
+    }.toMap
 
   /** Assigns identity values over a write batch (see [[IdentityPrefix]]):
     * rows presenting NULL in a declared identity column — and batches
@@ -1370,21 +1341,14 @@ object Versioned {
   }
 
   /** Sets (or updates) table properties in one commit (Delta's
-    * `ALTER TABLE ... SET TBLPROPERTIES`). Keys must be log-safe and
-    * non-reserved; values are stored base64 (arbitrary strings are
-    * fine). `graft.generated.*` keys additionally validate the
+    * `ALTER TABLE ... SET TBLPROPERTIES`). Keys and values are
+    * arbitrary strings. `graft.generated.*` keys additionally validate the
     * generated-column declaration against the CURRENT snapshot.
     * Metadata-only: no data files move, streams skip the commit, CDF
     * windows contribute nothing for it.
     */
   def setProperties(spark: SparkSession, dir: String, props: Map[String, String]): Long = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one property")
-    props.keys.foreach { k =>
-      require(k.matches("[A-Za-z0-9_.:/-]+"),
-        s"property key must be log-safe ([A-Za-z0-9_.:/-]+): $k")
-      require(!ReservedLogKeys.contains(k),
-        s"property key '$k' is a reserved log key")
-    }
     val base = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $dir"))
     val gen = props.collect { case (k, e) if k.startsWith(GeneratedPrefix) =>
@@ -1564,34 +1528,7 @@ object Versioned {
     * re-references historical files without re-validating them against
     * constraints added after that version.
     */
-  /** Commit-JSON top-level keys: the minimal parsers probe for these
-    * textually, so user-supplied names (constraint names) must never
-    * collide — a constraint named `dvfile` would otherwise satisfy
-    * `dvsAt`'s key probe and make every read chase a bogus sidecar.
-    */
-  private val ReservedLogKeys = Set(
-    "version", "op", "ts", "schema", "txns", "constraints", "dvs", "dvfile",
-    "files", "add", "remove", "ckptfile", "pairkeys", "droppedphys",
-    "clusteredidx", "copyinto", "props")
-
-  /** Writer appIds share the commit JSON with the reserved keys (as
-    * txn-map keys), so they get the same reservation check as
-    * constraint names — an appId "ts" on a pre-ts legacy entry would
-    * otherwise satisfy `tsOf`'s textual probe and masquerade its txn
-    * version as the commit time.
-    */
-  private def requireLogSafeAppId(appId: String): Unit = {
-    require(appId.matches("[A-Za-z0-9_.:/-]+"),
-      s"appId must be log-safe ([A-Za-z0-9_.:/-]+): $appId")
-    require(!ReservedLogKeys.contains(appId),
-      s"appId '$appId' is a reserved log key")
-  }
-
   def addConstraint(spark: SparkSession, dir: String, name: String, condSql: String): Long = {
-    require(name.matches("[A-Za-z0-9_-]+"),
-      s"constraint name must be log-safe ([A-Za-z0-9_-]+): $name")
-    require(!ReservedLogKeys.contains(name),
-      s"constraint name '$name' is a reserved log key")
     val base = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $dir"))
     require(!constraintsAt(spark, dir, base).contains(name),
@@ -1769,23 +1706,7 @@ object Versioned {
     * (app, version) and is refused before any snapshot is published.
     */
   def txnsAt(spark: SparkSession, dir: String, v: Long): Map[String, Long] =
-    txnsOf(snapshotJson(spark, dir, v))
-
-  private def txnsOf(json: String): Map[String, Long] =
-    json.split("\"txns\":\\{", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("}", 2)(0).trim
-        if (body.isEmpty) Map.empty
-        else body.split(",").map { kv =>
-          // split at the LAST colon: the log-safe appId charset admits
-          // ':' (e.g. the streaming sink's checkpoint-derived ids), so
-          // the key may contain colons while the value never does
-          val i = kv.lastIndexOf(':')
-          kv.take(i).trim.stripPrefix("\"").stripSuffix("\"") ->
-            kv.drop(i + 1).trim.toLong
-        }.toMap
-      case _ => Map.empty // pre-txn log entry
-    }
+    entryAt(spark, dir, v).txns
 
   /** Highest transaction version `appId` has committed, if any. */
   def lastTxnVersion(spark: SparkSession, dir: String, appId: String): Option[Long] =
@@ -1795,37 +1716,20 @@ object Versioned {
     * indices soft-deleted by merge-on-read DELETEs ([[deleteWhereMoR]]).
     * Stored INSIDE the commit JSON — a DV is visible exactly when its
     * commit is, with no sidecar-publish race — and carried/filtered by
-    * every subsequent commit like txn watermarks. Values are arrays of
-    * numbers and keys are our own uuid/part names, so the minimal
-    * parser below is safe (first `}` closes the object).
+    * every subsequent commit like txn watermarks.
     */
   def dvsAt(spark: SparkSession, dir: String, v: Long): Map[String, Seq[Long]] =
-    dvsOf(spark, dir, snapshotJson(spark, dir, v))
+    dvsOf(spark, dir, entryAt(spark, dir, v))
 
-  private def dvsOf(spark: SparkSession, dir: String, json: String): Map[String, Seq[Long]] =
-    json.split("\"dvfile\":\"", 2) match {
-      case Array(_, rest) => // spilled DV sidecar (see commitAttempt)
-        val name = rest.split("\"", 2)(0)
-        parseDvs(readFully(spark, dir, new Path(logPath(dir), name)))
-      case _ => parseDvs(json)
-    }
-
-  private def parseDvs(json: String): Map[String, Seq[Long]] =
-    json.split("\"dvs\":\\{", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("}", 2)(0).trim
-        if (body.isEmpty) Map.empty
-        else body.split("]\\s*,\\s*\"").map { entry =>
-          val Array(k, arr) = entry.split(":\\[", 2)
-          val idxs = arr.stripSuffix("]").trim
-          // keys canonicalize to fileKey so lookups never depend on
-          // the spelling (relative vs cloned-absolute) a writer used
-          fileKey(k.trim.stripPrefix("\"").stripSuffix("\"")) ->
-            (if (idxs.isEmpty) Seq.empty[Long]
-             else idxs.split(",").toSeq.map(_.trim.toLong))
-        }.toMap
-      case _ => Map.empty // pre-DV log entry
-    }
+  /** An entry's DVs, inline or from its spilled sidecar, keyed by
+    * [[fileKey]] so lookups never depend on the spelling (relative vs
+    * cloned-absolute) a writer used.
+    */
+  private def dvsOf(spark: SparkSession, dir: String, e: LogEntry): Map[String, Seq[Long]] =
+    e.dvFile
+      .map(name => LogCodec.decodeDvs(readFully(spark, dir, new Path(logPath(dir), name))))
+      .getOrElse(e.dvs)
+      .map { case (k, idxs) => fileKey(k) -> idxs }
 
   /** A lost optimistic-commit race: another writer published the
     * version this committer computed. Retryable for commits whose file
@@ -1854,15 +1758,15 @@ object Versioned {
     */
   private def commitAttempt(
       spark: SparkSession, dir: String, op: String,
-      schemaJsonFor: Option[Long] => String,
+      schemaJsonFor: Option[LogEntry] => String,
       txn: Option[(String, Long)], filesFor: Seq[String] => Seq[String],
       basedOn: Option[Long] = None,
       dvsFor: Map[String, Seq[Long]] => Map[String, Seq[Long]] = identity,
       constraint: Option[(String, Option[String])] = None,
-      preCommit: (Option[Long], Map[String, String]) => Unit = (_, _) => (),
+      preCommit: (Option[LogEntry], Map[String, String]) => Unit = (_, _) => (),
       pairKeys: Seq[String] = Nil,
       dropPhys: Seq[String] = Nil,
-      extraJson: String = "",
+      copyInto: Seq[String] = Nil,
       propsFor: Map[String, String] => Map[String, String] = identity): Option[Long] = {
     val f = fs(spark, dir)
     f.mkdirs(logPath(dir))
@@ -1876,68 +1780,42 @@ object Versioned {
     // ONE read of the predecessor's log entry serves every carried
     // field below (txns, files, constraints, DVs, timestamp) — the
     // log read is the commit's critical path on high-latency stores
-    val prevJson = prev.map(snapshotJson(spark, dir, _))
+    val prevEntry = prev.map(entryAt(spark, dir, _))
     // txn watermarks carry forward through EVERY commit (append,
     // overwrite, compact): replacing data does not reset exactly-once
     // bookkeeping, or a compaction between two micro-batches would
     // let a replayed batch double-apply
-    val prevTxns = prevJson.map(txnsOf).getOrElse(Map.empty)
+    val prevTxns = prevEntry.map(_.txns).getOrElse(Map.empty)
     if (txn.exists { case (a, n) => prevTxns.get(a).exists(_ >= n) }) return None
     val v = prev.getOrElse(0L) + 1
     val prevFiles = prev
-      .map(p => resolveFiles(spark, dir, p, prevJson))
+      .map(p => resolveFiles(spark, dir, p, prevEntry))
       .getOrElse(Seq.empty)
     val files = filesFor(prevFiles)
-    val schemaJson = schemaJsonFor(prev)
-    val txns = prevTxns ++ txn
+    val schemaJson = schemaJsonFor(prevEntry)
     // CHECK constraints carry like txn watermarks; `preCommit` lets the
     // writer validate its batch against the EXACT (head, set) this
     // attempt publishes under — a constraint added concurrently
     // collides on the version CAS, and the retry re-validates against
     // the new set, aligned to the new head's schema
-    val prevCons = prevJson.map(constraintsOf).getOrElse(Map.empty)
+    val prevCons = prevEntry.map(_.constraints).getOrElse(Map.empty)
     val cons = constraint match {
       case Some((n, Some(sql))) => prevCons + (n -> sql)
       case Some((n, None)) => prevCons - n
       case None => prevCons
     }
-    preCommit(prev, cons)
-    val consJson =
-      if (cons.isEmpty) ""
-      else cons.toSeq.sorted
-        .map { case (n, sql) =>
-          val b64 = java.util.Base64.getEncoder
-            .encodeToString(sql.getBytes(StandardCharsets.UTF_8))
-          s""""$n":"$b64""""
-        }
-        .mkString(""","constraints":{""", ",", "}")
+    preCommit(prevEntry, cons)
     // table properties carry like constraints: every commit re-emits
     // the full (small) map from the ONE predecessor read above
-    val tblProps = propsFor(prevJson.map(propsOf).getOrElse(Map.empty))
-    val propsJson =
-      if (tblProps.isEmpty) ""
-      else tblProps.toSeq.sorted
-        .map { case (k, pv) =>
-          val b64 = java.util.Base64.getEncoder
-            .encodeToString(pv.getBytes(StandardCharsets.UTF_8))
-          s""""$k":"$b64""""
-        }
-        .mkString(""","props":{""", ",", "}")
-    val txnsJson =
-      if (txns.isEmpty) ""
-      else txns.toSeq.sorted
-        .map { case (a, n) => s""""$a":$n""" }
-        .mkString(""","txns":{""", ",", "}")
-    // the log writes file names unescaped and its readers split on
-    // these characters, so a name holding one would commit and leave
-    // the table unreadable: refuse it before anything reaches the log
+    val tblProps = propsFor(prevEntry.map(_.props).getOrElse(Map.empty))
+    // a control character in a file name this commit adds is refused:
+    // such names come from outside the engine (addFiles, convert,
+    // clone) and no file system path should hold one
     val prevSet = prevFiles.toSet
-    val unsafe = files.filterNot(prevSet).filter(_.exists(c =>
-      ",\"[]{}\\".indexOf(c) >= 0 || Character.isISOControl(c)))
+    val unsafe = files.filterNot(prevSet).filter(_.exists(Character.isISOControl))
     if (unsafe.nonEmpty) throw new IllegalArgumentException(
       s"commit $op at $dir refused: file name(s) ${unsafe.take(3).mkString(" | ")} " +
-        "hold a character the log cannot store (, \" [ ] { } \\ or a control " +
-        "character) — rename the file(s) before committing them")
+        "hold a control character — rename the file(s) before committing them")
     // deletion vectors: the caller transforms the HEAD's DV map (carry,
     // merge, or drop); entries for files the new snapshot no longer
     // references are filtered unconditionally — a DV without its file
@@ -1957,16 +1835,13 @@ object Versioned {
         " — rename the offending file(s); fileKey uniqueness is what DV " +
         "and change-feed attribution rely on")
     val fileKeys = files.map(fileKey).toSet
-    val dvs = dvsFor(prevJson.map(dvsOf(spark, dir, _)).getOrElse(Map.empty))
+    val dvs = dvsFor(prevEntry.map(dvsOf(spark, dir, _)).getOrElse(Map.empty))
       .filter { case (df, idxs) => fileKeys.contains(fileKey(df)) && idxs.nonEmpty }
+      .map { case (df, idxs) => df -> idxs.distinct.sorted }
     val dvClash = dvs.keys.toSeq.groupBy(fileKey).filter(_._2.size > 1)
     require(dvClash.isEmpty,
       s"commit $op at $dir carries deletion vectors under colliding file " +
         s"identities: ${dvClash.head._2.mkString(" vs ")}")
-    val dvsBody = dvs.toSeq.sortBy(_._1)
-      .map { case (df, idxs) =>
-        s""""$df":[${idxs.distinct.sorted.mkString(",")}]""" }
-      .mkString(",")
     // small DV sets inline in the commit (visible exactly when the
     // commit is, no sidecar race); past the threshold the payload
     // spills to a uuid-named sidecar the commit REFERENCES — otherwise
@@ -1974,24 +1849,20 @@ object Versioned {
     // and log size grows O(#commits × soft-deleted positions). The
     // sidecar is written before publish, so a referenced DV file always
     // exists; orphans from failed commits are swept by vacuum.
-    val dvsJson =
-      if (dvs.isEmpty) ""
-      else if (dvs.valuesIterator.map(_.size).sum <= DvInlineMax)
-        s""","dvs":{$dvsBody}"""
+    val dvFile =
+      if (dvs.valuesIterator.map(_.size).sum <= DvInlineMax) None
       else {
         val name = s"dv-${UUID.randomUUID().toString}.json"
         val dvTmp = new Path(logPath(dir), s".$name.tmp")
         val o = f.create(dvTmp, true)
-        try o.write(s"""{"dvs":{$dvsBody}}""".getBytes(StandardCharsets.UTF_8))
+        try o.write(LogCodec.encodeDvs(dvs).getBytes(StandardCharsets.UTF_8))
         finally o.close()
         if (!f.rename(dvTmp, new Path(logPath(dir), name))) {
           f.delete(dvTmp, false)
           throw new IllegalStateException(s"DV sidecar publish failed for $name")
         }
-        s""","dvfile":"$name""""
+        Some(name)
       }
-    val b64 = java.util.Base64.getEncoder
-      .encodeToString(schemaJson.getBytes(StandardCharsets.UTF_8))
     // wall-clock commit timestamp: serves history() and readAsOf()
     // (Delta's DESCRIBE HISTORY / TIMESTAMP AS OF). Stored explicitly
     // rather than relying on file mtime, which copies/restores clobber
@@ -2000,7 +1871,7 @@ object Versioned {
     // clocks (Delta's commit-timestamp adjustment); readAsOf depends
     // on that monotonicity to resolve an instant to one snapshot.
     val ts = math.max(System.currentTimeMillis(),
-      prev.map(p => prevJson.flatMap(tsOf).getOrElse(
+      prev.map(p => prevEntry.flatMap(_.ts).getOrElse(
         // pre-ts predecessor: same mtime fallback as commitTimestampAt,
         // or the monotonic clamp silently dies on legacy tables
         f.getFileStatus(versionFile(dir, p)).getModificationTime)).getOrElse(0L))
@@ -2010,14 +1881,13 @@ object Versioned {
     // a file order the delta replay cannot reproduce, e.g. a restore
     // re-interleaving historical files) carry the full list: inline
     // JSON while small, a referenced COLUMNAR parquet sidecar past
-    // CkptInlineMax (at 10⁶ files the inline form is tens of MB parsed
-    // by string splits; the sidecar reads back with one vectorized
-    // scan). The sidecar is written before publish like DV spills.
+    // CkptInlineMax (at 10⁶ files the inline form is tens of MB of
+    // JSON; the sidecar reads back with one vectorized scan). The
+    // sidecar is written before publish like DV spills.
     val newSet = files.toSet
     val added = files.filterNot(prevSet)
     val removed = prevFiles.filterNot(newSet)
     val replayable = (prevFiles.filter(newSet) ++ added) == files
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString(",")
     val isFullList =
       prev.isEmpty || v % ckptIntervalOf(tblProps) == 0 || !replayable
     // full-list entries also record OPTIMIZE provenance — which of
@@ -2034,38 +1904,21 @@ object Versioned {
     // entry to conclude "empty" (a never-OPTIMIZEd streamed bronze
     // tier would otherwise pay O(retained) reads per checkpoint
     // commit, O(N²/interval) cumulative)
-    val clusteredJson =
-      if (!isFullList) ""
-      else {
-        val known = prev.map(clusteredKeysAt(spark, dir, _)).getOrElse(Set.empty) ++
-          (if (op == "optimize") added.map(fileKey) else Seq.empty)
-        val idxs =
-          if (known.isEmpty) Seq.empty[Int]
-          else files.iterator.zipWithIndex
-            .collect { case (fl, i) if known.contains(fileKey(fl)) => i }.toSeq
-        s""","clusteredidx":"${encodeRanges(idxs)}""""
-      }
-    val actionsJson =
-      if (isFullList) {
-        if (files.size <= CkptInlineMax) s""""files":[${arr(files)}]"""
-        else s""""ckptfile":"${writeCkptSidecar(spark, dir, files)}""""
-      } else s""""add":[${arr(added)}],"remove":[${arr(removed)}]"""
+    val clusteredIdx = Option.when(isFullList) {
+      val known = prev.map(clusteredKeysAt(spark, dir, _)).getOrElse(Set.empty) ++
+        (if (op == "optimize") added.map(fileKey) else Seq.empty)
+      if (known.isEmpty) Seq.empty[Int]
+      else files.iterator.zipWithIndex
+        .collect { case (fl, i) if known.contains(fileKey(fl)) => i }.toSeq
+    }
+    val actions =
+      if (!isFullList) Delta(added, removed)
+      else if (files.size <= CkptInlineMax) FullList(files)
+      else CkptRef(writeCkptSidecar(spark, dir, files))
     // dropped-physical-name set: carried forward like constraints so a
     // later re-add of a dropped column name gets a FRESH physical name
     // (old files' values for the dead physical column stay invisible)
-    val dropped = (prevJson.map(droppedPhysOf).getOrElse(Seq.empty) ++ dropPhys)
-      .distinct.filter(_.matches("[A-Za-z0-9_.-]+"))
-    val droppedJson =
-      if (dropped.isEmpty) ""
-      else s""","droppedphys":[${dropped.map("\"" + _ + "\"").mkString(",")}]"""
-    // row-pairing keys for the change feed: a key-bearing rewrite
-    // (merge: its ON keys; update: the non-SET columns) records how its
-    // removed/added rows pair into update_preimage/update_postimage.
-    // Only log-safe names are recorded — an exotic column name degrades
-    // that commit's CDF to delete+insert instead of corrupting the log.
-    val pairJson =
-      if (pairKeys.isEmpty || !pairKeys.forall(_.matches("[A-Za-z0-9_.-]+"))) ""
-      else s""","pairkeys":[${pairKeys.map("\"" + _ + "\"").mkString(",")}]"""
+    val dropped = (prevEntry.map(_.droppedPhys).getOrElse(Seq.empty) ++ dropPhys).distinct
     // protocol stamp (Delta's protocol-action analog, per entry): the
     // reader features this entry's snapshot NEEDS — a build that does
     // not know a listed feature must refuse the table loudly instead
@@ -2074,17 +1927,19 @@ object Versioned {
     // ignoring DVs). Entries using only the base format carry no stamp,
     // so pre-protocol tables and plain tables read unchanged everywhere.
     val features = Seq(
-      if (dvsJson.nonEmpty) Some("deletion-vectors") else None,
-      if (actionsJson.contains("\"ckptfile\":")) Some("columnar-checkpoint")
-      else None,
-      if (schemaJson.contains(PhysicalKey) || droppedJson.nonEmpty)
-        Some("column-mapping")
-      else None).flatten
-    val featJson =
-      if (features.isEmpty) ""
-      else s""","readerfeatures":[${features.map("\"" + _ + "\"").mkString(",")}]"""
-    val json =
-      s"""{"version":$v,"op":"$op","ts":$ts,"schema":"$b64"$txnsJson$consJson$propsJson$dvsJson$pairJson$droppedJson$featJson$clusteredJson$extraJson,$actionsJson}"""
+      Option.when(dvs.nonEmpty)("deletion-vectors"),
+      Option.when(actions.isInstanceOf[CkptRef])("columnar-checkpoint"),
+      Option.when(schemaJson.contains(PhysicalKey) || dropped.nonEmpty)("column-mapping")
+    ).flatten
+    // row-pairing keys for the change feed: a key-bearing rewrite
+    // (merge: its ON keys; update: the non-SET columns) records how its
+    // removed/added rows pair into update_preimage/update_postimage
+    val json = LogCodec.encode(LogEntry(
+      version = v, op = op, ts = Some(ts), schema = Some(schemaJson), actions = actions,
+      txns = prevTxns ++ txn, constraints = cons, props = tblProps,
+      dvs = if (dvFile.isEmpty) dvs else Map.empty, dvFile = dvFile,
+      pairKeys = pairKeys, droppedPhys = dropped, readerFeatures = features,
+      clusteredIdx = clusteredIdx, copyInto = copyInto))
     // per-attempt unique temp name: racing committers must never share
     // a temp file, or a loser's cleanup could delete the winner's
     // in-flight content
@@ -2125,12 +1980,12 @@ object Versioned {
     */
   private def commitRetry(
       spark: SparkSession, dir: String, op: String,
-      schemaJsonFor: Option[Long] => String,
+      schemaJsonFor: Option[LogEntry] => String,
       txn: Option[(String, Long)], filesFor: Seq[String] => Seq[String],
       maxAttempts: Int = 16,
       dvsFor: Map[String, Seq[Long]] => Map[String, Seq[Long]] = identity,
-      preCommit: (Option[Long], Map[String, String]) => Unit = (_, _) => (),
-      extraJson: String = "",
+      preCommit: (Option[LogEntry], Map[String, String]) => Unit = (_, _) => (),
+      copyInto: Seq[String] = Nil,
       propsFor: Map[String, String] => Map[String, String] = identity)
       : Option[Long] = {
     var attempt = 1
@@ -2142,7 +1997,7 @@ object Versioned {
       // CAS and forces this recompute-retry
       try return commitAttempt(
         spark, dir, op, schemaJsonFor, txn, filesFor, dvsFor = dvsFor,
-        preCommit = preCommit, extraJson = extraJson, propsFor = propsFor)
+        preCommit = preCommit, copyInto = copyInto, propsFor = propsFor)
       catch {
         case e: CommitRace =>
           if (attempt >= maxAttempts) throw e
@@ -2276,15 +2131,15 @@ object Versioned {
     * BY keys the batch also carries — see [[writeDataFilesBucketed]].
     */
   private def bucketPlanFor(
-      spark: SparkSession, dir: String, head0: Option[Long],
-      df: DataFrame, physFor: Map[String, String])
+      head0: Option[LogEntry], df: DataFrame, physFor: Map[String, String])
       : Option[(Seq[String], Int, Seq[String])] =
-    head0.flatMap(bucketSpecAt(spark, dir, _)).flatMap { case (cols, n) =>
+    head0.flatMap(_.props.get(BucketByKey)).flatMap(parseBucketSpec).flatMap { case (cols, n) =>
       val logical = cols.map(c =>
         df.schema.fieldNames.find(_.equalsIgnoreCase(c)))
       if (logical.exists(_.isEmpty)) None // batch missing a key column
       else {
-        val sortCols = head0.map(clusterByAt(spark, dir, _)).getOrElse(Nil)
+        val sortCols = head0.flatMap(_.props.get(ClusterByKey)).toSeq
+          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
           .flatMap(sc => df.schema.fieldNames.find(_.equalsIgnoreCase(sc)))
           .map(l => physFor.getOrElse(l, l))
         Some((logical.flatten.map(l => physFor.getOrElse(l, l)), n, sortCols))
@@ -2312,14 +2167,14 @@ object Versioned {
     * clobbering the other's columns.
     */
   private def evolvedSchemaJson(
-      spark: SparkSession, dir: String, head: Option[Long],
+      dir: String, head: Option[LogEntry],
       df: DataFrame, mergeSchema: Boolean,
       physFor: Map[String, String] = Map.empty): String = {
     import org.apache.spark.sql.types.StructType
-    // `head` is the exact version the enclosing commit attempt is
-    // publishing over (passed in, never re-read): schema evolution and
-    // the file-list base always come from ONE snapshot
-    val headOpt = head.flatMap(schemaAt(spark, dir, _))
+    // `head` is the entry of the exact version the enclosing commit
+    // attempt is publishing over (passed in, never re-read): schema
+    // evolution and the file-list base always come from ONE snapshot
+    val headOpt = head.flatMap(schemaOf)
       .filter(_.nonEmpty)
     headOpt match {
       case None => df.schema.json // first commit (or pre-schema log) defines
@@ -2373,10 +2228,9 @@ object Versioned {
     * column's values in old files stay dead).
     */
   private def physPlanFor(
-      spark: SparkSession, dir: String, head0: Option[Long],
-      df: DataFrame): Map[String, String] = {
-    val headSchema = head0.flatMap(schemaAt(spark, dir, _)).filter(_.nonEmpty)
-    val dropped = head0.map(droppedPhysAt(spark, dir, _)).getOrElse(Set.empty)
+      head0: Option[LogEntry], df: DataFrame): Map[String, String] = {
+    val headSchema = head0.flatMap(schemaOf).filter(_.nonEmpty)
+    val dropped = head0.map(_.droppedPhys.toSet).getOrElse(Set.empty)
     df.schema.fieldNames.map { n =>
       headSchema.flatMap(_.fields.find(_.name == n)) match {
         case Some(f) => n -> physicalName(f)
@@ -2406,9 +2260,7 @@ object Versioned {
     * column also evaluates (as NULL) rather than failing resolution
     * against a stale alignment.
     */
-  private def validatorFor(
-      spark: SparkSession, dir: String, df: DataFrame)
-      : (Option[Long], Map[String, String]) => Unit = {
+  private def validatorFor(df: DataFrame): (Option[LogEntry], Map[String, String]) => Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     def alignedTo(headSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
       headSchema match {
@@ -2426,16 +2278,9 @@ object Versioned {
             missing.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
         case None => df
       }
-    var schemaCache = Map.empty[Option[Long], Option[org.apache.spark.sql.types.StructType]]
     var seen = Set.empty[(String, Map[String, String])]
     (head, cons) => {
-      // log entries are immutable, so the per-head schema lookup caches
-      // across retry attempts (one read per distinct head, not per call)
-      val schema = schemaCache.getOrElse(head, {
-        val s = head.flatMap(schemaAt(spark, dir, _))
-        schemaCache += head -> s
-        s
-      })
+      val schema = head.flatMap(schemaOf)
       val key = (schema.map(_.json).getOrElse(""), cons)
       if (!seen.contains(key)) {
         requireSatisfied(alignedTo(schema), cons)
@@ -2445,48 +2290,48 @@ object Versioned {
   }
 
   def append(df: DataFrame, dir: String, mergeSchema: Boolean = false): Long =
-    appendCommit(df, dir, mergeSchema, "", _ => ())
+    appendCommit(df, dir, mergeSchema, Nil, _ => ())
 
-  /** [[append]]'s body with the two seams [[copyInto]] needs: an extra
-    * commit-JSON fragment (the loaded-source registry) and an extra
+  /** [[append]]'s body with the two seams [[copyInto]] needs: the
+    * loaded-source registry the commit records and an extra
     * per-attempt guard running beside constraint validation (the
     * concurrent-loader check). Public `append` passes no-ops.
     */
   private def appendCommit(
       df0: DataFrame, dir: String, mergeSchema: Boolean,
-      extraJson: String, extraGuard: Option[Long] => Unit): Long = {
+      copyInto: Seq[String], extraGuard: Option[LogEntry] => Unit): Long = {
     val spark = df0.sparkSession
     // GENERATED columns the batch omits are computed here (the Delta
     // write contract); present ones validate below via the implicit
     // `col <=> expr` checks merged into every attempt's constraint pass
     val head0 = currentVersion(spark, dir)
+    val head0E = head0.map(entryAt(spark, dir, _))
     val dfGen = withGenerated(df0,
-      head0.map(generatedAt(spark, dir, _)).getOrElse(Map.empty),
-      head0.flatMap(schemaAt(spark, dir, _)))
+      head0E.map(e => generatedOf(e.props)).getOrElse(Map.empty),
+      head0E.flatMap(schemaOf))
     // IDENTITY columns assign here (omitted/NULL rows take the next
     // contiguous values); the claimed hwm publishes in THIS commit and
     // the guard below refuses a concurrently-moved hwm
     val (df, idHwm0, idClaims, idCached) =
       assignIdentity(spark, dir, head0, dfGen)
     try {
-      def consPlusGen(head: Option[Long], cons: Map[String, String]) =
-        cons ++ head.map(generatedChecksAt(spark, dir, _)).getOrElse(Map.empty)
-      val validate = validatorFor(spark, dir, df)
+      def consPlusGen(head: Option[LogEntry], cons: Map[String, String]) =
+        cons ++ head.map(e => generatedChecks(generatedOf(e.props))).getOrElse(Map.empty)
+      val validate = validatorFor(df)
       // fast-fail BEFORE writing data files, pairing version and
       // constraint set from ONE head read (the attempt re-pairs anyway)
-      validate(head0, consPlusGen(head0,
-        head0.map(constraintsAt(spark, dir, _)).getOrElse(Map.empty)))
-      val physFor = physPlanFor(spark, dir, head0, df)
+      validate(head0E, consPlusGen(head0E, head0E.map(_.constraints).getOrElse(Map.empty)))
+      val physFor = physPlanFor(head0E, df)
       val physDf =
         if (physFor.forall(kv => kv._1 == kv._2)) df
         else df.select(df.columns.toSeq.map(c =>
           org.apache.spark.sql.functions.col(c).as(physFor(c))): _*)
-      val fresh = bucketPlanFor(spark, dir, head0, df, physFor) match {
+      val fresh = bucketPlanFor(head0E, df, physFor) match {
         case Some((bc, n, sc)) => writeDataFilesBucketed(physDf, dir, bc, n, sc)
         case None => writeDataFiles(physDf, dir)
       }
       val v = commitRetry(spark, dir, "append",
-        head => evolvedSchemaJson(spark, dir, head, df, mergeSchema, physFor),
+        head => evolvedSchemaJson(dir, head, df, mergeSchema, physFor),
         None, prev => prev ++ fresh,
         preCommit = (head, cons) => {
           validate(head, consPlusGen(head, cons))
@@ -2494,7 +2339,7 @@ object Versioned {
           // identity ranges must not double-claim: the values in the
           // already-written files were computed from the PLANNED hwm
           if (idHwm0.nonEmpty) {
-            val cur = head.map(propertiesAt(spark, dir, _)).getOrElse(Map.empty)
+            val cur = head.map(_.props).getOrElse(Map.empty)
             idHwm0.foreach { case (c, h0) =>
               val now = cur.get(s"$IdentityHwmPrefix$c").map(_.toLong).getOrElse(h0)
               if (now != h0) throw new IllegalStateException(
@@ -2503,7 +2348,7 @@ object Versioned {
             }
           }
         },
-        extraJson = extraJson,
+        copyInto = copyInto,
         propsFor = _ ++ idClaims).get
       // a zoned table must not lose data skipping at every append: carry
       // the previous sidecar (kept files' stats verbatim) and stat only
@@ -2561,19 +2406,8 @@ object Versioned {
     */
   def copyIntoLoaded(spark: SparkSession, dir: String): Set[String] =
     versions(spark, dir).iterator
-      .flatMap(v => copyIntoOf(snapshotJson(spark, dir, v)))
+      .flatMap(v => entryAt(spark, dir, v).copyInto)
       .toSet
-
-  private def copyIntoOf(json: String): Seq[String] =
-    json.split("\"copyinto\":\\[", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("]", 2)(0).trim
-        if (body.isEmpty) Seq.empty
-        else body.split(",").toSeq.map(e =>
-          new String(java.util.Base64.getDecoder.decode(
-            e.trim.stripPrefix("\"").stripSuffix("\"")), StandardCharsets.UTF_8))
-      case _ => Seq.empty
-    }
 
   /** Databricks' `COPY INTO` semantics: idempotent file-level bulk
     * load from a landing path into an EXISTING versioned table. Source
@@ -2656,10 +2490,7 @@ object Versioned {
         .col(srcByLower(tf.name.toLowerCase(java.util.Locale.ROOT)))
         .cast(tf.dataType).as(tf.name) }: _*)
     val ids = todo.map(identity)
-    val registry = ids.sorted.map(id => "\"" + java.util.Base64.getEncoder
-      .encodeToString(id.getBytes(StandardCharsets.UTF_8)) + "\"")
-      .mkString(""","copyinto":[""", ",", "]")
-    val guard: Option[Long] => Unit = _ =>
+    val guard: Option[LogEntry] => Unit = _ =>
       if (!force) {
         val nowLoaded = copyIntoLoaded(spark, dir)
         val clash = ids.filter(nowLoaded.contains)
@@ -2668,7 +2499,7 @@ object Versioned {
             s"loaded concurrently into $dir — re-run COPY INTO (the " +
             "re-plan will skip them)")
       }
-    val v = appendCommit(aligned, dir, mergeSchema = false, registry, guard)
+    val v = appendCommit(aligned, dir, mergeSchema = false, ids.sorted, guard)
     (v, todo.size.toLong)
   }
 
@@ -2718,32 +2549,27 @@ object Versioned {
     // loader registering many batches passes the schema it wrote with
     // (`knownSchema`) and pays zero jobs; parquet read-time projection
     // still fails loudly on a lying schema when the rows are read
-    val df0 = knownSchema match {
-      case Some(sch) =>
-        spark.read.schema(sch).parquet(relFiles.map(rel => s"$dir/$rel"): _*)
-      case None => spark.read.parquet(relFiles.map(rel => s"$dir/$rel"): _*)
-    }
+    val df0 = readFiles(spark, dir, knownSchema, relFiles)
     // on a hive-converted table, files landed under `<col>=<val>/`
     // need not store the partition column — the ongoing-migration
     // pattern (land tomorrow's partition dir, register it): inject the
     // path value so schema enforcement and constraint validation see
     // the full column set, exactly as every read will
-    val head00 = currentVersion(spark, dir)
-    val df = hiveFieldOf(head00.flatMap(schemaAt(spark, dir, _))) match {
+    val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+    val df = hiveFieldOf(head0.flatMap(schemaOf)) match {
       case Some(hf) if !df0.columns.contains(hf.name) &&
           relFiles.forall(_.startsWith(s"${hf.name}=")) =>
         injectHive(df0, hf, org.apache.spark.sql.functions.input_file_name())
       case _ => df0
     }
-    val validate = validatorFor(spark, dir, df)
-    val head0 = head00
-    validate(head0, head0.map(constraintsAt(spark, dir, _)).getOrElse(Map.empty))
-    val physFor = physPlanFor(spark, dir, head0, df)
+    val validate = validatorFor(df)
+    validate(head0, head0.map(_.constraints).getOrElse(Map.empty))
+    val physFor = physPlanFor(head0, df)
     require(physFor.forall(kv => kv._1 == kv._2),
       s"addFiles on a column-mapped table is not supported — rewrite " +
         s"through append() so files land under the mapped physical names")
     val v = commitRetry(spark, dir, "append",
-      head => evolvedSchemaJson(spark, dir, head, df, mergeSchema, physFor),
+      head => evolvedSchemaJson(dir, head, df, mergeSchema, physFor),
       None, prev => {
         // double-registration would double-count the file's rows in
         // every snapshot from here on — refuse loudly (checked against
@@ -2994,10 +2820,8 @@ object Versioned {
       val pin = new Path(logPath(src), s"pin-${UUID.randomUUID().toString}.json")
       val tmp = new Path(logPath(src), s".${pin.getName}.tmp")
       val o = f.create(tmp, true)
-      try o.write(
-        s"""{"pinversion":$head,"pinnedfiles":[${
-          localRel.map("\"" + _ + "\"").mkString(",")}]}"""
-          .getBytes(StandardCharsets.UTF_8))
+      try o.write(LogCodec.encodePin(LogCodec.Pin(head, localRel))
+        .getBytes(StandardCharsets.UTF_8))
       finally o.close()
       require(f.rename(tmp, pin), s"pin publish failed cloning $src")
       // the pin protects files from NOW ON; re-verify every pinned
@@ -3045,12 +2869,8 @@ object Versioned {
       .filter(p => p.getName.startsWith("pin-") && p.getName.endsWith(".json"))
       .sortBy(_.getName)
       .map { p =>
-        val json = readFully(spark, dir, p)
-        val v = json.split("\"pinversion\":", 2) match {
-          case Array(_, rest) => rest.takeWhile(c => c.isDigit).toLong
-          case _ => -1L
-        }
-        (p.getName, v, listOf(json, "pinnedfiles").size)
+        val pin = LogCodec.decodePin(readFully(spark, dir, p))
+        (p.getName, pin.version, pin.files.size)
       }
   }
 
@@ -3093,24 +2913,23 @@ object Versioned {
     */
   def appendIdempotent(
       df: DataFrame, dir: String, appId: String, txnVersion: Long): Option[Long] = {
-    requireLogSafeAppId(appId)
     val spark = df.sparkSession
     if (lastTxnVersion(spark, dir, appId).exists(_ >= txnVersion)) None
     else {
-      val validate = validatorFor(spark, dir, df)
-      val head0 = currentVersion(spark, dir)
-      validate(head0, head0.map(constraintsAt(spark, dir, _)).getOrElse(Map.empty))
-      val physFor = physPlanFor(spark, dir, head0, df)
+      val validate = validatorFor(df)
+      val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+      validate(head0, head0.map(_.constraints).getOrElse(Map.empty))
+      val physFor = physPlanFor(head0, df)
       val physDf =
         if (physFor.forall(kv => kv._1 == kv._2)) df
         else df.select(df.columns.toSeq.map(c =>
           org.apache.spark.sql.functions.col(c).as(physFor(c))): _*)
-      val fresh = bucketPlanFor(spark, dir, head0, df, physFor) match {
+      val fresh = bucketPlanFor(head0, df, physFor) match {
         case Some((bc, n, sc)) => writeDataFilesBucketed(physDf, dir, bc, n, sc)
         case None => writeDataFiles(physDf, dir)
       }
       val committed = commitRetry(spark, dir, "append",
-        head => evolvedSchemaJson(spark, dir, head, df, mergeSchema = false, physFor),
+        head => evolvedSchemaJson(dir, head, df, mergeSchema = false, physFor),
         Some(appId -> txnVersion), prev => prev ++ fresh, preCommit = validate)
       committed.foreach(v => carrySidecars(spark, dir, v - 1, v,
         filesAt(spark, dir, v).toSet -- fresh.toSet, fresh))
@@ -3127,25 +2946,24 @@ object Versioned {
     // GENERATED columns compute-if-absent like append (a schema
     // overwrite cannot silently drop the generation contract — DROP
     // COLUMN or UNSET the property to detach it)
-    val head0 = currentVersion(spark, dir)
+    val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
     val df = withGenerated(df0,
-      head0.map(generatedAt(spark, dir, _)).getOrElse(Map.empty), None)
-    val validate = validatorFor(spark, dir, df)
+      head0.map(e => generatedOf(e.props)).getOrElse(Map.empty), None)
+    val validate = validatorFor(df)
     // the dropped-column guard runs INSIDE each attempt against the
     // constraint set it publishes under — a concurrent addConstraint
     // referencing a column this overwrite drops must fail THIS commit,
     // not write-block the table (the attempt's own alignment would let
     // it pass as NULL)
-    val guarded = (head: Option[Long], cons: Map[String, String]) => {
-      val gen = head.map(h => generatedChecksAt(spark, dir, h) ++
-        identityChecksAt(spark, dir, h)).getOrElse(Map.empty)
+    val guarded = (head: Option[LogEntry], cons: Map[String, String]) => {
+      val gen = head.map(e => implicitChecks(e.props)).getOrElse(Map.empty)
       requireConstrainedColsPresent(spark, cons ++ gen, df.schema,
         s"overwrite of $dir")
       validate(head, cons ++ gen)
     }
-    guarded(head0, head0.map(constraintsAt(spark, dir, _)).getOrElse(Map.empty))
+    guarded(head0, head0.map(_.constraints).getOrElse(Map.empty))
     val physDf = toPhysicalFrame(df, Some(df.schema))
-    val files = bucketPlanFor(spark, dir, head0, df, Map.empty) match {
+    val files = bucketPlanFor(head0, df, Map.empty) match {
       case Some((bc, n, sc)) => writeDataFilesBucketed(physDf, dir, bc, n, sc)
       case None => writeDataFiles(physDf, dir)
     }
@@ -3162,24 +2980,22 @@ object Versioned {
     */
   def overwriteIdempotent(
       df0: DataFrame, dir: String, appId: String, txnVersion: Long): Option[Long] = {
-    requireLogSafeAppId(appId)
     val spark = df0.sparkSession
     if (lastTxnVersion(spark, dir, appId).exists(_ >= txnVersion)) None
     else {
-      val head0 = currentVersion(spark, dir)
+      val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
       val df = withGenerated(df0,
-        head0.map(generatedAt(spark, dir, _)).getOrElse(Map.empty), None)
-      val validate = validatorFor(spark, dir, df)
-      val guarded = (head: Option[Long], cons: Map[String, String]) => {
-        val gen = head.map(h => generatedChecksAt(spark, dir, h) ++
-          identityChecksAt(spark, dir, h)).getOrElse(Map.empty)
+        head0.map(e => generatedOf(e.props)).getOrElse(Map.empty), None)
+      val validate = validatorFor(df)
+      val guarded = (head: Option[LogEntry], cons: Map[String, String]) => {
+        val gen = head.map(e => implicitChecks(e.props)).getOrElse(Map.empty)
         requireConstrainedColsPresent(spark, cons ++ gen, df.schema,
           s"overwrite of $dir")
         validate(head, cons ++ gen)
       }
-      guarded(head0, head0.map(constraintsAt(spark, dir, _)).getOrElse(Map.empty))
+      guarded(head0, head0.map(_.constraints).getOrElse(Map.empty))
       val physDf = toPhysicalFrame(df, Some(df.schema))
-      val files = bucketPlanFor(spark, dir, head0, df, Map.empty) match {
+      val files = bucketPlanFor(head0, df, Map.empty) match {
         case Some((bc, n, sc)) => writeDataFilesBucketed(physDf, dir, bc, n, sc)
         case None => writeDataFiles(physDf, dir)
       }
@@ -3355,8 +3171,7 @@ object Versioned {
     // block names are the base snapshot's PHYSICAL names; the rewrite
     // materialized logical names, so translate through the base mapping
     val baseSch = schemaAt(spark, dir, v)
-    val carried = zonedAnchorJson(spark, dir, v)
-      .map(ZoneMaps.blockCols).getOrElse(Seq.empty)
+    val carried = zonedAnchor(spark, dir, v).getOrElse(Seq.empty).map(_._1)
       .map(phys => baseSch
         .flatMap(_.fields.find(f => physicalName(f) == phys).map(_.name))
         .getOrElse(phys))
@@ -3365,8 +3180,7 @@ object Versioned {
     // base STRING-zoned columns re-stat too (writeZoneMaps routes them
     // to the truncated-bounds sidecar) — a rewrite must never cost a
     // previously-zoned string column its data skipping either
-    val carriedStr = strAnchorJson(spark, dir, v)
-      .map(StrZones.blockCols).getOrElse(Seq.empty)
+    val carriedStr = strAnchor(spark, dir, v).getOrElse(Seq.empty).map(_._1)
       .map(phys => baseSch
         .flatMap(_.fields.find(f => physicalName(f) == phys).map(_.name))
         .getOrElse(phys))
@@ -3377,8 +3191,9 @@ object Versioned {
     // zones were just republished above; row counts and string bounds
     // still need their own carry (fresh rewrite: everything re-stats
     // at O(this rewrite))
-    carryRowCounts(spark, dir, v, nv, kept = Set.empty, fresh = fresh)
-    carryStrZones(spark, dir, v, nv, kept = Set.empty, fresh = fresh)
+    val nvEntry = entryAt(spark, dir, nv)
+    carryRowCounts(spark, dir, v, nv, nvEntry, kept = Set.empty, fresh = fresh)
+    carryStrZones(spark, dir, v, nv, nvEntry, kept = Set.empty, fresh = fresh)
     nv
   }
 
@@ -3576,8 +3391,7 @@ object Versioned {
     // sidecar covers the z columns yet (one-time O(table) stat pass,
     // after which every incremental run carries + stats O(tail))
     v.foreach { nv =>
-      val have = zonedAnchorJson(spark, dir, nv)
-        .map(ZoneMaps.blockCols).getOrElse(Seq.empty)
+      val have = zonedAnchor(spark, dir, nv).getOrElse(Seq.empty).map(_._1)
         .map(phys => schema.fields.find(f => physicalName(f) == phys)
           .map(_.name).getOrElse(phys)).toSet
       val missing = resolved.filterNot(have)
@@ -3673,14 +3487,8 @@ object Versioned {
     val isHiveCol = hiveFieldOf(schema).exists(_.name.equalsIgnoreCase(whereCol))
     val f = fs(spark, dir)
     val phys = physicalOf(schema, whereCol)
-    val zp = new Path(logPath(dir), f"v$base%08d.zones.json")
-    val zoneBlock =
-      if (!f.exists(zp)) None
-      else ZoneMaps.parseBlock(readFully(spark, dir, zp), phys)
-    val szp = new Path(logPath(dir), f"v$base%08d.szones.json")
-    val strBlock =
-      if (!f.exists(szp)) None
-      else StrZones.parseBlock(readFully(spark, dir, szp), phys)
+    val zoneBlock = zonesAt(spark, dir, base).flatMap(blockOf(_, phys))
+    val strBlock = strZonesAt(spark, dir, base).flatMap(blockOf(_, phys))
     require(isHiveCol || zoneBlock.isDefined || strBlock.isDefined,
       s"OPTIMIZE WHERE needs '$whereCol' to be a hive-layout partition " +
         s"column or zone-mapped (CALL system.zone) at $dir — an unscoped " +
@@ -3889,16 +3697,16 @@ object Versioned {
           // instead of the walk throwing on a missing version
           if (!f.exists(versionFile(dir, v))) stop = true
           else {
-            val json = snapshotJson(spark, dir, v)
-            if (droppedPhysOf(json).toSet != retired) stop = true
-            else if (fullListOf(spark, dir, json).isDefined && v > 1 &&
+            val e = entryAt(spark, dir, v)
+            if (e.droppedPhys.toSet != retired) stop = true
+            else if (!e.actions.isInstanceOf[Delta] && v > 1 &&
                 !f.exists(versionFile(dir, v - 1))) {
               // a full-list commit whose parent is vacuumed cannot
               // separate its adds from carried files: carried bytes may
               // predate the DROP, so marking them clean would skip them
               stop = true
             } else {
-              clean ++= addActionsOf(spark, dir, v, json).map(fileKey)
+              clean ++= addActionsOf(spark, dir, v, e).map(fileKey)
               v -= 1
             }
           }
@@ -4033,9 +3841,9 @@ object Versioned {
     // physical schema over the files; prunedFiles translates back
     val sch = sch0
     val physCols = longCols.map(physicalOf(sch, _))
-    val json = ZoneMaps.blocksJson(physCols,
-      ZoneMaps.compute(spark, dir, files, physCols, sch.map(physicalSchema),
-        hiveFieldOf(sch)))
+    val zones = ZoneMaps.compute(spark, dir, files, physCols, sch.map(physicalSchema),
+      hiveFieldOf(sch))
+    val json = LogCodec.encodeZones(physCols.map(c => c -> zones.getOrElse(c, Seq.empty)))
     val f = fs(spark, dir)
     val tmp = new Path(logPath(dir), s".v$v.zones.tmp")
     val out = f.create(tmp, true)
@@ -4075,8 +3883,8 @@ object Versioned {
       s"'${hf.name}' is a hive-layout partition column — its values live " +
         "in file PATHS, not footers; partition pruning already serves it"))
     val physCols = cols.map(physicalOf(sch, _))
-    val json = StrZones.blocksJson(physCols,
-      StrZones.compute(spark, dir, files, physCols, sch.map(physicalSchema)))
+    val bounds = StrZones.compute(spark, dir, files, physCols, sch.map(physicalSchema))
+    val json = LogCodec.encodeStrZones(physCols.map(c => c -> bounds.getOrElse(c, Seq.empty)))
     val f = fs(spark, dir)
     val tmp = new Path(logPath(dir), s".v$v.szones.tmp")
     val out = f.create(tmp, true)
@@ -4087,11 +3895,11 @@ object Versioned {
     if (!f.exists(marker)) f.create(marker, true).close()
   }
 
-  /** String-zone sidecar JSON anchoring `baseV` — same bounded-window
-    * probe + marker-gated listing as [[zonedAnchorJson]].
+  /** String-zone blocks anchoring `baseV` — same bounded-window
+    * probe + marker-gated listing as [[zonedAnchor]].
     */
-  private def strAnchorJson(
-      spark: SparkSession, dir: String, baseV: Long): Option[String] = {
+  private def strAnchor(
+      spark: SparkSession, dir: String, baseV: Long): Option[Seq[(String, StrZones.Bounds)]] = {
     val f = fs(spark, dir)
     (baseV to math.max(1L, baseV - 7) by -1L).find(w =>
       f.exists(new Path(logPath(dir), f"v$w%08d.szones.json")))
@@ -4104,8 +3912,8 @@ object Versioned {
           .filter(_ <= baseV)
           .sorted.lastOption
       }
-      .map(a => readFully(spark, dir,
-        new Path(logPath(dir), f"v$a%08d.szones.json")))
+      .map(a => LogCodec.decodeStrZones(readFully(spark, dir,
+        new Path(logPath(dir), f"v$a%08d.szones.json"))))
   }
 
   /** Carries the string-bounds sidecar across a commit — the
@@ -4116,21 +3924,19 @@ object Versioned {
     * STRING drop out.
     */
   private def carryStrZones(
-      spark: SparkSession, dir: String, baseV: Long, newV: Long,
+      spark: SparkSession, dir: String, baseV: Long, newV: Long, newEntry: LogEntry,
       kept: Set[String], fresh: Seq[String]): Unit = {
     val f = fs(spark, dir)
     // a string-zoning rewrite (clusteredRewrite → writeZoneMaps) may
     // have published newV's sidecar already, with FRESHER stats than a
     // carry could assemble — never clobber it
     if (f.exists(new Path(logPath(dir), f"v$newV%08d.szones.json"))) return
-    val jsonOpt = strAnchorJson(spark, dir, baseV)
-    if (jsonOpt.isEmpty) return
-    val json = jsonOpt.get
+    val blocks = strAnchor(spark, dir, baseV).getOrElse(return)
     val baseSchema = schemaAt(spark, dir, baseV)
-    val schema = schemaAt(spark, dir, newV)
+    val schema = schemaOf(newEntry)
     val isStr = (dt: org.apache.spark.sql.types.DataType) =>
       dt == org.apache.spark.sql.types.StringType
-    val cols: Seq[(String, String)] = StrZones.blockCols(json).flatMap { basePhys =>
+    val cols: Seq[(String, String)] = blocks.map(_._1).flatMap { basePhys =>
       schema match {
         case Some(sc) =>
           sc.fields.find(fl => physicalName(fl) == basePhys)
@@ -4148,7 +3954,7 @@ object Versioned {
     }
     if (cols.isEmpty) return
     val carried = cols.map { case (basePhys, newPhys) =>
-      newPhys -> StrZones.parseBlock(json, basePhys).getOrElse(Seq.empty)
+      newPhys -> blockOf(blocks, basePhys).getOrElse(Seq.empty)
         .filter(b => kept.contains(b.file))
     }.toMap
     val covered = carried.values.flatten.map(_.file).toSet
@@ -4161,7 +3967,7 @@ object Versioned {
     val merged = newCols.map { c =>
       c -> (carried(c) ++ freshStats.getOrElse(c, Seq.empty)).sortBy(_.file)
     }.toMap
-    val out = StrZones.blocksJson(newCols, merged)
+    val out = LogCodec.encodeStrZones(newCols.map(c => c -> merged(c)))
     val tmp = new Path(logPath(dir), s".v$newV.szones.tmp")
     val o = f.create(tmp, true)
     try o.write(out.getBytes(StandardCharsets.UTF_8)) finally o.close()
@@ -4181,13 +3987,9 @@ object Versioned {
   def strPrunedFiles(
       spark: SparkSession, dir: String, v: Long, col: String,
       qLo: Option[String], qHi: Option[String]): Seq[String] = {
-    val f = fs(spark, dir)
-    val zp = new Path(logPath(dir), f"v$v%08d.szones.json")
     val all = filesAt(spark, dir, v)
-    if (!f.exists(zp)) return all
-    val json = readFully(spark, dir, zp)
-    val physCol = physicalOf(schemaAt(spark, dir, v), col)
-    StrZones.parseBlock(json, physCol) match {
+    strZonesAt(spark, dir, v)
+      .flatMap(blockOf(_, physicalOf(schemaAt(spark, dir, v), col))) match {
       case Some(bounds) => StrZones.prune(all, bounds, qLo, qHi)
       case None => all
     }
@@ -4201,13 +4003,10 @@ object Versioned {
   def strPrunedFilesIn(
       spark: SparkSession, dir: String, v: Long, col: String,
       points: Seq[String]): Seq[String] = {
-    val f = fs(spark, dir)
-    val zp = new Path(logPath(dir), f"v$v%08d.szones.json")
     val all = filesAt(spark, dir, v)
-    if (points.isEmpty || !f.exists(zp)) return all
-    val json = readFully(spark, dir, zp)
-    val physCol = physicalOf(schemaAt(spark, dir, v), col)
-    StrZones.parseBlock(json, physCol) match {
+    if (points.isEmpty) return all
+    strZonesAt(spark, dir, v)
+      .flatMap(blockOf(_, physicalOf(schemaAt(spark, dir, v), col))) match {
       case Some(bounds) => StrZones.pruneIn(all, bounds, points)
       case None => all
     }
@@ -4404,17 +4203,12 @@ object Versioned {
     */
   def skippingColumnsAt(
       spark: SparkSession, dir: String, v: Long): Seq[String] = {
-    val f = fs(spark, dir)
     val sch = schemaAt(spark, dir, v)
     def logicalOf(phys: String): String = sch
       .flatMap(_.fields.find(x => physicalName(x) == phys).map(_.name))
       .getOrElse(phys)
-    val zp = new Path(logPath(dir), f"v$v%08d.zones.json")
-    val sp = new Path(logPath(dir), f"v$v%08d.szones.json")
-    val zs = if (f.exists(zp)) ZoneMaps.blockCols(readFully(spark, dir, zp))
-      else Seq.empty
-    val ss = if (f.exists(sp)) StrZones.blockCols(readFully(spark, dir, sp))
-      else Seq.empty
+    val zs = zonesAt(spark, dir, v).getOrElse(Seq.empty).map(_._1)
+    val ss = strZonesAt(spark, dir, v).getOrElse(Seq.empty).map(_._1)
     val bs = Bloom.latestPointerAt(spark, dir, v).map(_._3).getOrElse(Seq.empty)
     (zs ++ ss ++ bs).map(logicalOf).distinct
   }
@@ -4429,19 +4223,14 @@ object Versioned {
     */
   def notNullPrunedFiles(
       spark: SparkSession, dir: String, v: Long, col: String): Seq[String] = {
-    val f = fs(spark, dir)
     val all = filesAt(spark, dir, v)
     val physCol = physicalOf(schemaAt(spark, dir, v), col)
-    val zp = new Path(logPath(dir), f"v$v%08d.zones.json")
-    val zoned =
-      if (!f.exists(zp)) all
-      else ZoneMaps.parseBlock(readFully(spark, dir, zp), physCol) match {
-        case Some(zones) => ZoneMaps.pruneNotNull(all, zones)
-        case None => all
-      }
-    val szp = new Path(logPath(dir), f"v$v%08d.szones.json")
-    if (!f.exists(szp) || zoned.isEmpty) zoned
-    else StrZones.parseBlock(readFully(spark, dir, szp), physCol) match {
+    val zoned = zonesAt(spark, dir, v).flatMap(blockOf(_, physCol)) match {
+      case Some(zones) => ZoneMaps.pruneNotNull(all, zones)
+      case None => all
+    }
+    if (zoned.isEmpty) zoned
+    else strZonesAt(spark, dir, v).flatMap(blockOf(_, physCol)) match {
       case Some(bounds) => StrZones.pruneNotNull(zoned, bounds)
       case None => zoned
     }
@@ -4455,13 +4244,10 @@ object Versioned {
   def prunedFilesIn(
       spark: SparkSession, dir: String, v: Long,
       zoneCol: String, points: Seq[Long]): Seq[String] = {
-    val f = fs(spark, dir)
-    val zp = new Path(logPath(dir), f"v$v%08d.zones.json")
     val all = filesAt(spark, dir, v)
-    if (points.isEmpty || !f.exists(zp)) return all
-    val json = readFully(spark, dir, zp)
-    val physCol = physicalOf(schemaAt(spark, dir, v), zoneCol)
-    ZoneMaps.parseBlock(json, physCol) match {
+    if (points.isEmpty) return all
+    zonesAt(spark, dir, v)
+      .flatMap(blockOf(_, physicalOf(schemaAt(spark, dir, v), zoneCol))) match {
       case Some(zones) => ZoneMaps.pruneIn(all, zones, points)
       case None => all
     }
@@ -4471,17 +4257,13 @@ object Versioned {
   def prunedFiles(
       spark: SparkSession, dir: String, v: Long,
       zoneCol: String, lo: Long, hi: Long): Seq[String] = {
-    val f = fs(spark, dir)
-    val zp = new Path(logPath(dir), f"v$v%08d.zones.json")
     val all = filesAt(spark, dir, v)
-    if (!f.exists(zp)) return all
-    val json = readFully(spark, dir, zp)
     // sidecar blocks are keyed by physical names; callers name columns
     // logically (identity on never-renamed tables)
-    val physCol = physicalOf(schemaAt(spark, dir, v), zoneCol)
-    ZoneMaps.parseBlock(json, physCol) match {
+    zonesAt(spark, dir, v)
+      .flatMap(blockOf(_, physicalOf(schemaAt(spark, dir, v), zoneCol))) match {
       case Some(zones) => ZoneMaps.prune(all, zones, lo, hi)
-      case None => all // zoned on other columns only
+      case None => all // no sidecar, or zoned on other columns only
     }
   }
 
@@ -4587,9 +4369,10 @@ object Versioned {
         throw new IllegalArgumentException(
           s"no committed versions at $dir — replaceWhere needs an existing " +
             "table (create it with overwrite/append first)"))
-      val logSchema = schemaAt(spark, dir, base)
+      val headEntry = entryAt(spark, dir, base)
+      val logSchema = schemaOf(headEntry)
       val tableSchema = logSchema.getOrElse(readAt(spark, dir, base).schema)
-      val gen = generatedAt(spark, dir, base)
+      val gen = generatedOf(headEntry.props)
       val tCols = tableSchema.fieldNames.map(lower).toSet
       val sCols = source.schema.fieldNames.map(lower).toSet
       val extra = sCols -- tCols
@@ -4605,7 +4388,7 @@ object Versioned {
       // evaluate NULL → coalesce(false) and refuse a valid backfill
       // (regeneration is deterministic, so the second pass over the
       // unioned output below is a no-op on these rows)
-      val aligned = regenerated(spark, dir, base,
+      val aligned = regenerated(headEntry.props,
         source.select(tableSchema.fields.toSeq.map { f =>
           if (sCols.contains(lower(f.name))) col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name) // omitted GENERATED
@@ -4623,12 +4406,13 @@ object Versioned {
       val headDvs = dvsAt(spark, dir, base)
       def readFiles(files: Seq[String]) =
         applyDvs(spark, readRaw(spark, dir, logSchema, files), headDvs)
+      val nameOf = scannedName(dir, candidates)
       val matched =
-        if (candidates.isEmpty) Array.empty[String]
+        if (candidates.isEmpty) Set.empty[String]
         else readFiles(candidates).filter(cond)
           .select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0))
-      val touched = candidates.filter(rel => matched.exists(_.endsWith(rel)))
+          .collect().flatMap(r => nameOf(r.getString(0))).toSet
+      val touched = candidates.filter(matched)
       // touched files' non-matching remainder carries into the fresh
       // set beside the source rows; generated columns recompute over
       // the whole output (deterministic → a no-op on carried rows)
@@ -4636,9 +4420,8 @@ object Versioned {
         if (touched.isEmpty) aligned
         else readFiles(touched).filter(not(coalesce(cond, lit(false))))
           .unionByName(aligned)
-      val out = regenerated(spark, dir, base, out0)
-      requireSatisfied(out, constraintsAt(spark, dir, base) ++
-        identityChecksAt(spark, dir, base))
+      val out = regenerated(headEntry.props, out0)
+      requireSatisfied(out, headEntry.constraints ++ identityChecks(headEntry.props))
       val fresh = writeDataFiles(toPhysicalFrame(out, logSchema), dir)
       // replaceWhere's extra read-set clause: files a concurrent commit
       // ADDED must hold no live matching row, or the replace re-plans
@@ -4785,7 +4568,6 @@ object Versioned {
       updateWhen: org.apache.spark.sql.Column =
         org.apache.spark.sql.functions.lit(true),
       setCols: Seq[String] = Nil): Option[Long] = {
-    requireLogSafeAppId(appId)
     if (lastTxnVersion(spark, dir, appId).exists(_ >= txnVersion)) None
     else mergeReplanning(
       spark, dir, source, keys, legacyClauses(updateWhen, setCols),
@@ -4803,7 +4585,6 @@ object Versioned {
       notMatched: Seq[graft.ops.Upsert.MergeClause],
       txn: Option[(String, Long)],
       conditionColumns: Seq[String]): Option[Long] = {
-    txn.foreach { case (appId, _) => requireLogSafeAppId(appId) }
     mergeReplanning(
       spark, dir, source, keys, matched, notMatched, Nil, txn,
       evolveSchema = false, conditionColumns)
@@ -4859,7 +4640,8 @@ object Versioned {
       s"conditionColumns names a column the source lacks: $c"))
     val base = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $dir"))
-    val logSchema = schemaAt(spark, dir, base).getOrElse(
+    val headEntry = entryAt(spark, dir, base)
+    val logSchema = schemaOf(headEntry).getOrElse(
       throw new IllegalArgumentException(
         s"MERGE requires a schema-bearing snapshot at $dir"))
     val tTypes = logSchema.fields.map(f => f.name -> f.dataType.catalogString).toMap
@@ -4886,7 +4668,7 @@ object Versioned {
         s"[${sTypes.toSeq.sortBy(_._1).mkString(", ")}]")
     // GENERATED columns are legally absent from a merge source — their
     // values are the expression's, regenerated over the merge output
-    val genCols = generatedAt(spark, dir, base).keySet.map(lower)
+    val genCols = generatedOf(headEntry.props).keySet.map(lower)
     require(evolveSchema ||
       (tTypes.collect { case (n, t) if !genCols.contains(lower(n)) =>
         lower(n) -> t }.toMap ==
@@ -4911,7 +4693,7 @@ object Versioned {
         require(!hasColumnMapping(logSchema),
           s"MERGE schema evolution on a column-mapped table is not " +
             "supported — widen explicitly with append(mergeSchema = true)")
-        val dropped = droppedPhysAt(spark, dir, base)
+        val dropped = headEntry.droppedPhys.toSet
         val resurrected = newCols.map(_.name).filter(dropped.contains)
         require(resurrected.isEmpty,
           s"MERGE evolution cannot re-add dropped column(s) " +
@@ -4941,8 +4723,8 @@ object Versioned {
         else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
       } ++ conditionColumns.map(col)): _*)
     }
-    val all = filesAt(spark, dir, base)
-    val headDvs = dvsAt(spark, dir, base)
+    val all = resolveFiles(spark, dir, base, Some(headEntry))
+    val headDvs = dvsOf(spark, dir, headEntry)
     // The key-set broadcast is GATED on the optimizer's size estimate:
     // forced-broadcast discovery is right for micro-batch upserts but
     // would materialize a backfill-sized key set in the driver (8 GB
@@ -4956,7 +4738,7 @@ object Versioned {
         .withColumn("__m_src", org.apache.spark.sql.functions.lit(true))
       val est = k.queryExecution.optimizedPlan.stats.sizeInBytes
       // the gate is per-table overridable: graft.mergeKeyBroadcastMaxBytes
-      val gate = propertiesAt(spark, dir, base)
+      val gate = headEntry.props
         .get("graft.mergeKeyBroadcastMaxBytes")
         .flatMap(s => scala.util.Try(s.toLong).toOption)
         .filter(_ >= 0)
@@ -4969,13 +4751,10 @@ object Versioned {
     // identity comes from `_metadata.file_path` — bound to THIS scan's
     // relation — not input_file_name(), which Spark refuses in a plan
     // with a second file source (the key set also scans parquet).
-    def liveRows(files: Seq[String], dvs: Map[String, Seq[Long]]) = {
-      import org.apache.spark.sql.functions.substring_index
+    def liveRows(files: Seq[String], dvs: Map[String, Seq[Long]]) =
       applyDvs(spark, readRaw(spark, dir, Some(logSchema), files), dvs)
-        .withColumn("__dv_rel",
-          substring_index(col("_metadata.file_path"), "/", -2))
+        .withColumn("__dv_rel", scanFileKey(col("_metadata.file_path"), files))
         .withColumn("__dv_idx", col("_metadata.row_index"))
-    }
     // Files of `files` holding at least one live row whose key appears
     // in the source — the commute check on concurrently-added files
     def filesWithMatches(files: Seq[String], dvs: Map[String, Seq[Long]]): Set[String] =
@@ -5040,7 +4819,7 @@ object Versioned {
     // whose source omitted the column compute
     def kept(df: DataFrame) = df.filter(col(KeepCol))
       .select(outSchema.fieldNames.toSeq.map(col): _*)
-      .transform(regenerated(spark, dir, base, _))
+      .transform(regenerated(headEntry.props, _))
     // the rows a clause acted on: changed target rows and the inserts.
     // Checkpointed: the merge join runs once (its shuffle stages now,
     // its result with the position collect below), and the constraint
@@ -5060,8 +4839,8 @@ object Versioned {
       // stability across a commute re-base is enforced below. Identity
       // columns add an implicit NOT NULL (a source row cannot insert an
       // unassigned identity through a merge).
-      requireSatisfied(kept(changedAt), constraintsAt(spark, dir, base) ++
-        identityChecksAt(spark, dir, base))
+      requireSatisfied(kept(changedAt),
+        headEntry.constraints ++ identityChecks(headEntry.props))
       val overCap = positions.size > MoRMatchCap
       val changedKeys: Set[String] =
         if (!overCap) positions.map(_._1).toSet
@@ -5156,18 +4935,19 @@ object Versioned {
       zoneHint: Option[(String, Long, Long)],
       maxMatched: Long, opNoun: String, cowHint: String)
       : Option[(DataFrame, Map[String, Seq[Long]])] = {
-    import org.apache.spark.sql.functions.{broadcast, col, collect_list, input_file_name, substring_index}
+    import org.apache.spark.sql.functions.{broadcast, col, collect_list, input_file_name}
     import spark.implicits._
-    val all = filesAt(spark, dir, base)
+    val headEntry = entryAt(spark, dir, base)
+    val all = resolveFiles(spark, dir, base, Some(headEntry))
     if (all.isEmpty) return None
     val candidates = zoneHint match {
       case Some((zc, lo, hi)) => prunedFiles(spark, dir, base, zc, lo, hi)
       case None => all
     }
     if (candidates.isEmpty) return None
-    val headDvs = dvsAt(spark, dir, base)
-    val scan = readRaw(spark, dir, schemaAt(spark, dir, base), candidates)
-      .withColumn("__dv_rel", substring_index(input_file_name(), "/", -2))
+    val headDvs = dvsOf(spark, dir, headEntry)
+    val scan = readRaw(spark, dir, schemaOf(headEntry), candidates)
+      .withColumn("__dv_rel", scanFileKey(input_file_name(), candidates))
       .withColumn("__dv_idx", col("_metadata.row_index"))
     val live =
       if (headDvs.isEmpty) scan
@@ -5229,20 +5009,20 @@ object Versioned {
       throw new IllegalArgumentException(s"no committed versions at $dir"))
     morMatched(spark, dir, base, cond, zoneHint, maxMatched,
       "UPDATE", "updateWhere").map { case (hit, matched) =>
-      val all = filesAt(spark, dir, base)
-      val logSchema = schemaAt(spark, dir, base)
+      val headEntry = entryAt(spark, dir, base)
+      val all = resolveFiles(spark, dir, base, Some(headEntry))
+      val logSchema = schemaOf(headEntry)
       val dataCols = hit.columns.filterNot(_.startsWith("__dv_")).toSeq
       val unknown = set.keySet -- dataCols
       require(unknown.isEmpty,
         s"SET references unknown columns: ${unknown.mkString(", ")}")
       requireNoGeneratedSet(spark, dir, base, set.keys, "UPDATE")
       val fieldType = hit.schema.fields.map(f => f.name -> f.dataType).toMap
-      val updated = regenerated(spark, dir, base,
+      val updated = regenerated(headEntry.props,
         hit.select(dataCols.map { c =>
           set.get(c).map(_.cast(fieldType(c)).as(c)).getOrElse(col(c))
         }: _*))
-      requireSatisfied(updated, constraintsAt(spark, dir, base) ++
-        identityChecksAt(spark, dir, base))
+      requireSatisfied(updated, headEntry.constraints ++ identityChecks(headEntry.props))
       val fresh = writeDataFiles(updated, dir)
       val v = commitPinned(spark, dir, base, "update-mor",
         logSchema.map(_.json).getOrElse(updated.schema.json),
@@ -5291,22 +5071,23 @@ object Versioned {
     val headDvs = dvsAt(spark, dir, base)
     def readFiles(files: Seq[String]) =
       applyDvs(spark, readRaw(spark, dir, logSchema, files), headDvs)
+    val nameOf = scannedName(dir, candidates)
     val matched = readFiles(candidates)
       .filter(cond)
       .select(input_file_name().as("f")).distinct()
-      .collect().map(_.getString(0))
-    val touched = candidates.filter(rel => matched.exists(_.endsWith(rel)))
+      .collect().flatMap(r => nameOf(r.getString(0))).toSet
+    val touched = candidates.filter(matched)
     if (touched.isEmpty) return None
     val touchedDf = readFiles(touched)
     // GENERATED columns regenerate over the rewrite output (an UPDATE
     // to a generation dependency recomputes; a DELETE's row subset
     // recomputes to the identical values — a no-op by determinism)
-    val out = regenerated(spark, dir, base, rewrite(touchedDf, cond))
+    val headEntry = entryAt(spark, dir, base)
+    val out = regenerated(headEntry.props, rewrite(touchedDf, cond))
     // an UPDATE's SET can introduce constraint violations (a DELETE's
     // row subset cannot, but the shared check keeps the contract in
     // one place at matched-file cost)
-    requireSatisfied(out, constraintsAt(spark, dir, base) ++
-      identityChecksAt(spark, dir, base))
+    requireSatisfied(out, headEntry.constraints ++ identityChecks(headEntry.props))
     val fresh = writeDataFiles(toPhysicalFrame(out, logSchema), dir)
     val schemaJson = logSchema.map(_.json).getOrElse(touchedDf.schema.json)
     val v = commitRewriteCommuting(
@@ -5327,8 +5108,8 @@ object Versioned {
     * misses (sidecar gap > 8 commits), instead of silently leaving
     * data skipping off for the rest of the table's life.
     */
-  private def zonedAnchorJson(
-      spark: SparkSession, dir: String, baseV: Long): Option[String] = {
+  private def zonedAnchor(
+      spark: SparkSession, dir: String, baseV: Long): Option[Seq[(String, ZoneMaps.Zones)]] = {
     val f = fs(spark, dir)
     (baseV to math.max(1L, baseV - 7) by -1L).find(w =>
       f.exists(new Path(logPath(dir), f"v$w%08d.zones.json")))
@@ -5345,9 +5126,28 @@ object Versioned {
           .filter(_ <= baseV)
           .sorted.lastOption
       }
-      .map(a => readFully(spark, dir,
-        new Path(logPath(dir), f"v$a%08d.zones.json")))
+      .map(a => LogCodec.decodeZones(readFully(spark, dir,
+        new Path(logPath(dir), f"v$a%08d.zones.json"))))
   }
+
+  /** Version `v`'s own zone blocks; None when it has no sidecar. */
+  private def zonesAt(
+      spark: SparkSession, dir: String, v: Long): Option[Seq[(String, ZoneMaps.Zones)]] =
+    sidecarAt(spark, dir, f"v$v%08d.zones.json").map(LogCodec.decodeZones)
+
+  /** Version `v`'s own string-zone blocks; None when it has none. */
+  private def strZonesAt(
+      spark: SparkSession, dir: String, v: Long): Option[Seq[(String, StrZones.Bounds)]] =
+    sidecarAt(spark, dir, f"v$v%08d.szones.json").map(LogCodec.decodeStrZones)
+
+  private def sidecarAt(spark: SparkSession, dir: String, name: String): Option[String] = {
+    val p = new Path(logPath(dir), name)
+    if (fs(spark, dir).exists(p)) Some(readFully(spark, dir, p)) else None
+  }
+
+  /** The first block of `blocks` for column `c`. */
+  private def blockOf[A](blocks: Seq[(String, A)], c: String): Option[A] =
+    blocks.collectFirst { case (`c`, a) => a }
 
   /** Carries every per-file stat sidecar across a commit: row counts
     * ([[carryRowCounts]]) plus zone maps ([[carryZones]]). One hook for
@@ -5357,9 +5157,10 @@ object Versioned {
   private def carrySidecars(
       spark: SparkSession, dir: String, baseV: Long, newV: Long,
       kept: Set[String], fresh: Seq[String]): Unit = {
-    carryRowCounts(spark, dir, baseV, newV, kept, fresh)
-    carryZones(spark, dir, baseV, newV, kept, fresh)
-    carryStrZones(spark, dir, baseV, newV, kept, fresh)
+    val newEntry = entryAt(spark, dir, newV)
+    carryRowCounts(spark, dir, baseV, newV, newEntry, kept, fresh)
+    carryZones(spark, dir, baseV, newV, newEntry, kept, fresh)
+    carryStrZones(spark, dir, baseV, newV, newEntry, kept, fresh)
   }
 
   /** Probed-version cap for [[resolveRowCounts]]'s walk: well past any
@@ -5431,7 +5232,7 @@ object Versioned {
     while (w >= 1 && probed < RowResolveCap) {
       val p = RowStats.sidecar(logPath(dir), w)
       if (f.exists(p)) {
-        val (full, counts) = RowStats.parse(readFully(spark, dir, p))
+        val (full, counts) = LogCodec.decodeRowStats(readFully(spark, dir, p))
         acc = counts ++ acc // nearer-to-v entries win (identical anyway)
         if (full) {
           st.foreach(s => rowsMemo.put(key,
@@ -5468,7 +5269,7 @@ object Versioned {
     * disguised as self-healing.
     */
   private def carryRowCounts(
-      spark: SparkSession, dir: String, baseV: Long, newV: Long,
+      spark: SparkSession, dir: String, baseV: Long, newV: Long, newEntry: LogEntry,
       kept: Set[String], fresh: Seq[String]): Unit = {
     val f = fs(spark, dir)
     val (resolved, anchored) = resolveRowCounts(spark, dir, baseV)
@@ -5485,10 +5286,10 @@ object Versioned {
     val captured = WriteCounts.takeAll(toStat)
     val freshCounts = captured ++ RowStats.compute(
       spark, dir, toStat.filterNot(captured.contains),
-      schemaAt(spark, dir, newV).map(physicalSchema))
+      schemaOf(newEntry).map(physicalSchema))
     val all = carried ++ freshCounts
     val writeFull = kept.isEmpty || all.size <= RowStats.FullCarryMax ||
-      newV % ckptIntervalOf(propertiesAt(spark, dir, newV)) == 0
+      newV % ckptIntervalOf(newEntry.props) == 0
     if (writeFull) RowStats.publish(f, logPath(dir), newV, all, full = true)
     else RowStats.publish(f, logPath(dir), newV, freshCounts, full = false)
     // prime the chain memo with what a walk from newV would now yield,
@@ -5631,13 +5432,9 @@ object Versioned {
       spark: SparkSession, dir: String, v: Long,
       col: String): Option[(Option[Long], Option[Long])] = {
     if (dvsAt(spark, dir, v).nonEmpty) return None
-    val json = zonedAnchorJson(spark, dir, v)
-    if (json.isEmpty) return None
-    val phys = physicalOf(schemaAt(spark, dir, v), col)
-    val zones = ZoneMaps.parseBlock(json.get, phys) match {
-      case Some(z) => z
-      case None => return None
-    }
+    val zones = zonedAnchor(spark, dir, v)
+      .flatMap(blockOf(_, physicalOf(schemaAt(spark, dir, v), col)))
+      .getOrElse(return None)
     val byFile = zones.map(z => z._1 -> z).toMap
     val live = filesAt(spark, dir, v)
     if (!live.forall(byFile.contains)) return None
@@ -5656,7 +5453,7 @@ object Versioned {
     * [[writeZoneMaps]].
     */
   private def carryZones(
-      spark: SparkSession, dir: String, baseV: Long, newV: Long,
+      spark: SparkSession, dir: String, baseV: Long, newV: Long, newEntry: LogEntry,
       kept: Set[String], fresh: Seq[String]): Unit = {
     val f = fs(spark, dir)
     // the immediate predecessor may not have published its sidecar YET
@@ -5665,23 +5462,21 @@ object Versioned {
     // files the anchor lacks stats for (landed in the gap) are statted
     // here, so a carry gap SELF-HEALS instead of silently disabling
     // data skipping for the rest of the table's life
-    val jsonOpt = zonedAnchorJson(spark, dir, baseV)
-    if (jsonOpt.isEmpty) return
-    val json = jsonOpt.get
+    val blocks = zonedAnchor(spark, dir, baseV).getOrElse(return)
     // same guard as clusteredRewrite: carry only columns still present
     // AND long-castable under the COMMITTED schema — a column retyped
     // since it was zoned would re-stat as all-NULL sentinels (zoned
     // reads would prune every file and silently return nothing) or, for
     // DATE, throw after the commit already published
     val baseSchema = schemaAt(spark, dir, baseV)
-    val schema = schemaAt(spark, dir, newV)
+    val schema = schemaOf(newEntry)
     // block names are the BASE snapshot's physical names, and a
     // column's IDENTITY is its physical name: first match the new
     // schema's field that still stores basePhys (append/merge/rename —
     // physical stable), else the field whose name equals the base
     // LOGICAL column (a compact/optimize materialized logical names);
     // columns absent or no longer zoneable drop out
-    val cols: Seq[(String, String)] = ZoneMaps.blockCols(json).flatMap { basePhys =>
+    val cols: Seq[(String, String)] = blocks.map(_._1).flatMap { basePhys =>
       schema match {
         case Some(sc) =>
           sc.fields.find(f => physicalName(f) == basePhys)
@@ -5699,7 +5494,7 @@ object Versioned {
     }
     if (cols.isEmpty) return
     val carried = cols.map { case (basePhys, newPhys) =>
-      newPhys -> ZoneMaps.parseBlock(json, basePhys).getOrElse(Seq.empty)
+      newPhys -> blockOf(blocks, basePhys).getOrElse(Seq.empty)
         .filter(z => kept.contains(z._1))
     }.toMap
     val covered = carried.values.flatten.map(_._1).toSet
@@ -5716,7 +5511,7 @@ object Versioned {
     val merged = newCols.map { c =>
       c -> (carried(c) ++ freshStats.getOrElse(c, Seq.empty)).sortBy(_._1)
     }.toMap
-    val out = ZoneMaps.blocksJson(newCols, merged)
+    val out = LogCodec.encodeZones(newCols.map(c => c -> merged(c)))
     val tmp = new Path(logPath(dir), s".v$newV.zones.tmp")
     val o = f.create(tmp, true)
     try o.write(out.getBytes(StandardCharsets.UTF_8)) finally o.close()
@@ -5786,13 +5581,13 @@ object Versioned {
     def atPositions(v: Long, pos: Map[String, Set[Long]]): Option[DataFrame] =
       if (pos.isEmpty) None
       else {
-        import org.apache.spark.sql.functions.{broadcast, substring_index}
+        import org.apache.spark.sql.functions.broadcast
         import spark.implicits._
         val at = pos.toSeq.flatMap { case (f, is) => is.map(i => (fileKey(f), i)) }
           .toDF("__dv_rel", "__dv_idx")
         val scan = readRaw(spark, dir, schemaAt(spark, dir, v), pos.keys.toSeq)
         Some(scan
-          .withColumn("__dv_rel", substring_index(col("_metadata.file_path"), "/", -2))
+          .withColumn("__dv_rel", scanFileKey(col("_metadata.file_path"), pos.keys))
           .withColumn("__dv_idx", col("_metadata.row_index"))
           .join(broadcast(at), Seq("__dv_rel", "__dv_idx"))
           .select(scan.columns.toSeq.map(col): _*))
@@ -5848,20 +5643,10 @@ object Versioned {
       abs(col(dCol)).cast("int"))).as("_change_type"): _*)
   }
 
-  private def droppedPhysOf(json: String): Seq[String] =
-    json.split("\"droppedphys\":\\[", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("]", 2)(0).trim
-        if (body.isEmpty) Nil
-        else body.split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    }
-
   /** Physical column names retired by DROP COLUMN up to snapshot `v`. */
   private[graft] def droppedPhysAt(
       spark: SparkSession, dir: String, v: Long): Set[String] =
-    droppedPhysOf(snapshotJson(spark, dir, v)).toSet
+    entryAt(spark, dir, v).droppedPhys.toSet
 
   /** Row-pairing keys commit `v` recorded (merge: its ON keys; update:
     * the non-SET columns) — empty for commits that pair nothing
@@ -5869,17 +5654,7 @@ object Versioned {
     * entries.
     */
   private[graft] def pairKeysAt(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    pairKeysOf(snapshotJson(spark, dir, v))
-
-  private def pairKeysOf(json: String): Seq[String] =
-    json.split("\"pairkeys\":\\[", 2) match {
-      case Array(_, rest) =>
-        val body = rest.split("]", 2)(0).trim
-        if (body.isEmpty) Nil
-        else body.split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    }
+    entryAt(spark, dir, v).pairKeys
 
   /** The change feed with Delta's FOUR change types — the per-commit
     * form of [[changes]]: each version in `(from, to]` contributes its
@@ -5920,13 +5695,13 @@ object Versioned {
     */
   def changesWithType(
       spark: SparkSession, dir: String, from: Long, to: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, substring_index}
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
     require(from >= 0 && from < to, s"need 0 <= from < to, got ($from, $to]")
     val vs = versions(spark, dir).filter(v => v > from && v <= to)
     require(vs.nonEmpty, s"no committed versions in ($from, $to] at $dir")
     // ONE log-entry read per in-window commit; every per-commit fact
     // below (op, schema, pairkeys, add-actions) parses out of it
-    val entries = vs.map(v => (v, snapshotJson(spark, dir, v)))
+    val entries = vs.map(v => (v, entryAt(spark, dir, v)))
     // row-preserving maintenance and metadata-only commits: their
     // snapshot diff is empty (same row multisets, possibly re-filed or
     // re-named) — contribute nothing
@@ -5935,10 +5710,10 @@ object Versioned {
       "unset-properties", "set-default", "rename-column", "drop-column")
     // the table's birth commit, if the window reaches back to it: its
     // "diff" is the full v1 content (there is no v0 snapshot to scan)
-    val birth = entries.collectFirst { case (1L, json) =>
+    val birth = entries.collectFirst { case (1L, e) =>
       pairUpdates(
         readAt(spark, dir, 1L).withColumn("_change_type", lit("insert")),
-        pairKeysOf(json)).withColumn("_commit_version", lit(1L))
+        e.pairKeys).withColumn("_commit_version", lit(1L))
     }
     // append commits: add-actions as data, one scan per committed
     // schema (schema evolution inside a window is rare, so this is
@@ -5947,13 +5722,13 @@ object Versioned {
     // which per-commit semantics surface at THEIR versions), so the
     // scan reads the files whole; appends record no pairkeys, so no
     // pairing pass either.
-    val appends = entries.filter { case (v, json) => v > 1L && opOf(json) == "append" }
+    val appends = entries.filter { case (v, e) => v > 1L && e.op == "append" }
     val appendScans = appends
-      .groupBy { case (_, json) => schemaOf(json).map(_.json) }
+      .groupBy { case (_, e) => e.schema }
       .toSeq.sortBy { case (_, group) => group.head._1 }
       .flatMap { case (_, group) =>
-        val fileToV = group.flatMap { case (v, json) =>
-          addActionsOf(spark, dir, v, json).map(f => (f, v)) }
+        val fileToV = group.flatMap { case (v, e) =>
+          addActionsOf(spark, dir, v, e).map(f => (f, v)) }
         if (fileToV.isEmpty) None
         else {
           import spark.implicits._
@@ -5962,7 +5737,7 @@ object Versioned {
           val scan = readFileSubset(spark, dir, schemaOf(group.head._2),
             fileToV.map(_._1), Map.empty)
           Some(scan
-            .withColumn("__cdf_rel", substring_index(input_file_name(), "/", -2))
+            .withColumn("__cdf_rel", scanFileKey(input_file_name(), fileToV.map(_._1)))
             .join(broadcast(vMap), Seq("__cdf_rel"))
             .drop("__cdf_rel")
             .withColumn("_change_type", lit("insert")))
@@ -5972,8 +5747,8 @@ object Versioned {
     // the only class whose plan branches scale with its count, and the
     // rare one (explicit merge/update/delete/overwrite/restore)
     val rewrites = entries.collect {
-      case (v, json) if v > 1L && opOf(json) != "append" && !silent(opOf(json)) =>
-        pairUpdates(changes(spark, dir, v - 1, v), pairKeysOf(json))
+      case (v, e) if v > 1L && e.op != "append" && !silent(e.op) =>
+        pairUpdates(changes(spark, dir, v - 1, v), e.pairKeys)
           .withColumn("_commit_version", lit(v))
     }
     // rewrite commits are rare by nature (explicit merges/updates/
@@ -6172,38 +5947,7 @@ object Versioned {
     * the set difference against the predecessor's resolved list.
     */
   private def addActionsAt(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    addActionsOf(spark, dir, v, snapshotJson(spark, dir, v))
-
-  /** Sorted index list → compact run-length text ("0-523,600,612-640"). */
-  private def encodeRanges(idxs: Seq[Int]): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < idxs.size) {
-      var j = i
-      while (j + 1 < idxs.size && idxs(j + 1) == idxs(j) + 1) j += 1
-      if (out.nonEmpty) out.append(',')
-      if (j == i) out.append(idxs(i))
-      else { out.append(idxs(i)).append('-').append(idxs(j)) }
-      i = j + 1
-    }
-    out.toString
-  }
-
-  private def decodeRanges(s: String): Seq[Int] =
-    if (s.isEmpty) Seq.empty
-    else s.split(",").toSeq.flatMap { part =>
-      part.split("-", 2) match {
-        case Array(a, b) => a.trim.toInt to b.trim.toInt
-        case Array(a) => Seq(a.trim.toInt)
-      }
-    }
-
-  /** The OPTIMIZE-provenance ranges a full-list entry recorded, if any. */
-  private def clusteredIdxOf(json: String): Option[Seq[Int]] =
-    json.split("\"clusteredidx\":\"", 2) match {
-      case Array(_, rest) => Some(decodeRanges(rest.split("\"", 2)(0)))
-      case _ => None
-    }
+    addActionsOf(spark, dir, v, entryAt(spark, dir, v))
 
   /** fileKeys of snapshot `v`'s files that a clustering OPTIMIZE
     * produced — resolved from the nearest full-list entry's recorded
@@ -6220,12 +5964,12 @@ object Versioned {
     var cur = v
     var acc = Set.empty[String]
     while (cur >= 1) {
-      val json =
-        try snapshotJson(spark, dir, cur)
+      val e =
+        try entryAt(spark, dir, cur)
         catch { case _: IllegalArgumentException if cur < v => return acc }
-      clusteredIdxOf(json) match {
+      e.clusteredIdx match {
         case Some(idxs) =>
-          val full = fullListOf(spark, dir, json).getOrElse(Seq.empty)
+          val full = fullListOf(spark, dir, e.actions).getOrElse(Seq.empty)
           return acc ++ idxs.iterator
             .filter(i => i >= 0 && i < full.size).map(i => fileKey(full(i)))
         case None =>
@@ -6235,8 +5979,8 @@ object Versioned {
           // stale keys this collects for files no longer in the
           // snapshot are harmless — callers intersect with the live
           // file list
-          if (opOf(json) == "optimize")
-            acc ++= addActionsOf(spark, dir, cur, json).map(fileKey)
+          if (e.op == "optimize")
+            acc ++= addActionsOf(spark, dir, cur, e).map(fileKey)
           cur -= 1
       }
     }
@@ -6247,14 +5991,14 @@ object Versioned {
     * facts — see [[changesWithType]]'s per-commit classification).
     */
   private def addActionsOf(
-      spark: SparkSession, dir: String, v: Long, json: String): Seq[String] = {
-    fullListOf(spark, dir, json) match {
-      case None => listOf(json, "add")
-      case Some(full) =>
+      spark: SparkSession, dir: String, v: Long, e: LogEntry): Seq[String] = {
+    e.actions match {
+      case Delta(add, _) => add
+      case full =>
         val prev =
           if (v <= 1) Set.empty[String]
           else resolveFiles(spark, dir, v - 1, None).toSet
-        full.filterNot(prev)
+        fullListOf(spark, dir, full).get.filterNot(prev)
     }
   }
 
@@ -6299,8 +6043,9 @@ object Versioned {
     val skippable = Set("optimize", "compact-small", "reorg", "rebucket",
       "set-constraint", "drop-constraint", "set-properties",
       "unset-properties", "set-default")
-    val ops = (from + 1 to to).map(v => v -> opAt(spark, dir, v))
-    val mutating = ops.filterNot { case (_, op) => op == "append" || skippable(op) }
+    val entries = (from + 1 to to).map(v => v -> entryAt(spark, dir, v))
+    val mutating = entries.map { case (v, e) => v -> e.op }
+      .filterNot { case (_, op) => op == "append" || skippable(op) }
     require(skipMutating || mutating.isEmpty,
       s"streaming read of $dir hit non-append commit(s) " +
         s"${mutating.map { case (v, op) => s"v$v=$op" }.mkString(", ")} in window " +
@@ -6308,16 +6053,10 @@ object Versioned {
         "re-sync the consumer (changes() or a full re-read) and restart the " +
         "stream past the mutation, or opt into skipChangeCommits to ignore " +
         "mutating commits outright")
-    val files = ops.collect { case (v, "append") => addActionsAt(spark, dir, v) }.flatten
+    val files = entries.collect {
+      case (v, e) if e.op == "append" => addActionsOf(spark, dir, v, e) }.flatten
     readFileSubset(spark, dir, schemaAt(spark, dir, to), files, Map.empty)
   }
-
-  /** The DV sidecar file a snapshot references, if its DVs spilled. */
-  private def dvFileAt(spark: SparkSession, dir: String, v: Long): Option[String] =
-    snapshotJson(spark, dir, v).split("\"dvfile\":\"", 2) match {
-      case Array(_, rest) => Some(rest.split("\"", 2)(0))
-      case _ => None
-    }
 
   /** Delete data files referenced ONLY by versions older than the
     * newest `keepVersions`, and their log entries — plus any data
@@ -6571,16 +6310,14 @@ object Versioned {
     // deletes just leaves a harmless extra sidecar)
     if (!dryRun && drop.nonEmpty && keep.nonEmpty) {
       val oldest = keep.head
-      val json = snapshotJson(spark, dir, oldest)
-      if (filesOfOpt(json).isEmpty && ckptRefOf(json).isEmpty &&
-          !f.exists(ckptFile(dir, oldest))) {
-        val full = resolveFiles(spark, dir, oldest, Some(json))
+      val e = entryAt(spark, dir, oldest)
+      if (e.actions.isInstanceOf[Delta] && !f.exists(ckptFile(dir, oldest))) {
+        val full = resolveFiles(spark, dir, oldest, Some(e))
         // large lists anchor through the same columnar sidecar path as
         // checkpoint commits; the .ckpt.json then just references it
-        val body =
-          if (full.size <= CkptInlineMax)
-            s"""{"files":[${full.map("\"" + _ + "\"").mkString(",")}]}"""
-          else s"""{"ckptfile":"${writeCkptSidecar(spark, dir, full)}"}"""
+        val body = LogCodec.encodeAnchor(
+          if (full.size <= CkptInlineMax) FullList(full)
+          else CkptRef(writeCkptSidecar(spark, dir, full)))
         // per-attempt UUID temp, same rule as the commit path: racing
         // vacuums must never share a temp file (a shared name lets one
         // racer truncate the other's fully-written temp mid-rename and
@@ -6608,7 +6345,7 @@ object Versioned {
       locally {
         val oldP = RowStats.sidecar(logPath(dir), oldest)
         val needsAnchor = !f.exists(oldP) ||
-          !RowStats.parse(readFully(spark, dir, oldP))._1
+          !LogCodec.decodeRowStats(readFully(spark, dir, oldP))._1
         if (needsAnchor) {
           val (resolved, _) = resolveRowCounts(spark, dir, oldest)
           if (resolved.nonEmpty) {
@@ -6625,19 +6362,21 @@ object Versioned {
     val pinnedLive = f.listStatus(logPath(dir)).toSeq
       .map(_.getPath)
       .filter(p => p.getName.startsWith("pin-") && p.getName.endsWith(".json"))
-      .flatMap(p => listOf(readFully(spark, dir, p), "pinnedfiles"))
+      .flatMap(p => LogCodec.decodePin(readFully(spark, dir, p)).files)
       .toSet
-    val live = keep.flatMap(filesAt(spark, dir, _)).toSet ++ pinnedLive
-    val liveDvFiles = keep.flatMap(dvFileAt(spark, dir, _)).toSet
+    val keptEntries = keep.map(entryAt(spark, dir, _))
+    val live = keep.zip(keptEntries)
+      .flatMap { case (v, e) => resolveFiles(spark, dir, v, Some(e)) }.toSet ++ pinnedLive
+    val liveDvFiles = keptEntries.flatMap(_.dvFile).toSet
     // columnar checkpoint sidecars stay live while a retained entry OR
     // a retained version's .ckpt.json anchor references them
-    val liveCkptFiles = keep.flatMap { v =>
-      val entryRef = ckptRefOf(snapshotJson(spark, dir, v))
+    def ckptRef(a: LogCodec.Actions) = a match { case CkptRef(n) => Some(n); case _ => None }
+    val liveCkptFiles = keep.zip(keptEntries).flatMap { case (v, e) =>
       val anchorRef =
         if (f.exists(ckptFile(dir, v)))
-          ckptRefOf(readFully(spark, dir, ckptFile(dir, v)))
+          ckptRef(LogCodec.decodeAnchor(readFully(spark, dir, ckptFile(dir, v))))
         else None
-      entryRef ++ anchorRef
+      ckptRef(e.actions) ++ anchorRef
     }.toSet
     val cutoff = System.currentTimeMillis() - tmpRetentionMs
     // a file referenced by NO log entry may belong to an IN-FLIGHT
@@ -6648,8 +6387,10 @@ object Versioned {
     // sidecar deletion below: a dropped entry's columnar checkpoint
     // must still be readable for this referenced-set computation.
     val everReferenced = all.flatMap { v =>
-      val j = snapshotJson(spark, dir, v)
-      fullListOf(spark, dir, j).getOrElse(Seq.empty) ++ listOf(j, "add")
+      entryAt(spark, dir, v).actions match {
+        case Delta(add, _) => add
+        case full => fullListOf(spark, dir, full).get
+      }
     }.toSet
     // dropped log entries go FIRST, before any sidecar they reference is
     // swept: a crash after a sidecar sweep but before the entry deletes
@@ -6678,8 +6419,7 @@ object Versioned {
       val live = f.listStatus(logPath(dir)).toSeq.map(_.getPath.getName)
         .filter(n => n.startsWith("v") && n.endsWith(".bloom.json"))
         .flatMap { n =>
-          val json = readFully(spark, dir, new Path(logPath(dir), n))
-          graft.table.Bloom.parsePointer(json)._1
+          LogCodec.decodeBloomPointer(readFully(spark, dir, new Path(logPath(dir), n))).datas
         }.toSet
       f.listStatus(logPath(dir)).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("bloomdata-"))

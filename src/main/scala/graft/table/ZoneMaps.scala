@@ -3,8 +3,8 @@ package graft.table
 import org.apache.spark.sql.SparkSession
 
 /** Shared per-file zone-map machinery: compute [lo, hi] column stats
-  * for a file set, serialize/parse the sidecar blocks, and prune a file
-  * listing against a range predicate.
+  * for a file set and prune a file listing against a range predicate
+  * (the sidecar format is [[LogCodec.encodeZones]]).
   *
   * Zone columns must be losslessly long-castable (integral types,
   * timestamps as epoch seconds) — one stats domain keeps the sidecar
@@ -46,8 +46,7 @@ private[graft] object ZoneMaps {
     }
     if (relFiles.isEmpty || cols.isEmpty)
       return colsRequested.map(_ -> Seq.empty[(String, Long, Long)]).toMap
-    val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-    val scan0 = reader.parquet(relFiles.map(Versioned.dataPathStr(base, _)): _*)
+    val scan0 = Versioned.readFiles(spark, base, schema, relFiles)
     // hive-converted files store the partition column in the PATH, not
     // the footer: stat the path-derived value (else every converted
     // file records the all-NULL sentinel and a zoned read on the
@@ -73,18 +72,13 @@ private[graft] object ZoneMaps {
       }
     val aggs = cols.flatMap(c =>
       Seq(min(statCol(c)).as(s"lo_$c"), max(statCol(c)).as(s"hi_$c")))
-    // URI-keyed O(1) lookup, the RowStats discipline: a linear suffix
-    // scan per result row is O(n²) on the driver at ANALYZE scale
-    val byPath = relFiles.map(rel =>
-      new org.apache.hadoop.fs.Path(
-        Versioned.dataPathStr(base, rel)).toUri.getPath -> rel).toMap
+    val nameOf = Versioned.scannedName(base, relFiles)
     val stats = scan
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one row per file of one write — log-sized, not data-sized
       .map { r =>
-        val rel = byPath.getOrElse(
-          new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath,
+        val rel = nameOf(r.getString(0)).getOrElse(
           throw new IllegalStateException(s"stats row for unknown file ${r.getString(0)}"))
         rel -> r
       }
@@ -105,36 +99,6 @@ private[graft] object ZoneMaps {
         }
     }.toMap
   }
-
-  /** `{"col":"c","zones":[{"file":"f","lo":1,"hi":2},…]}` blocks joined
-    * as a JSON array, one block per column in `cols` order.
-    */
-  def blocksJson(cols: Seq[String], zones: Map[String, Zones]): String =
-    cols.map { c =>
-      zones.getOrElse(c, Seq.empty)
-        .map { case (p, lo, hi) => s"""{"file":"$p","lo":$lo,"hi":$hi}""" }
-        .mkString(s"""{"col":"$c","zones":[""", ",", "]}")
-    }.mkString("[", ",", "]")
-
-  /** One column's zones out of a [[blocksJson]] payload; None when the
-    * column has no block (zoned on other columns only).
-    */
-  def parseBlock(json: String, zoneCol: String): Option[Zones] = {
-    val blockRe = ("""\{"col":"""" + java.util.regex.Pattern.quote(zoneCol) +
-      """","zones":\[([^\]]*)\]\}""").r
-    blockRe.findFirstMatchIn(json).map { m =>
-      val zoneRe = """\{"file":"([^"]+)","lo":(-?\d+),"hi":(-?\d+)\}""".r
-      zoneRe.findAllMatchIn(m.group(1))
-        .map(z => (z.group(1), z.group(2).toLong, z.group(3).toLong)).toSeq
-    }
-  }
-
-  /** Every column name carrying a block in a [[blocksJson]] payload, in
-    * block order.
-    */
-  def blockCols(json: String): Seq[String] =
-    """\{"col":"([^"]+)","zones":\[""".r
-      .findAllMatchIn(json).map(_.group(1)).toSeq
 
   /** The subset of `all` a `[lo, hi]` range scan must read: a file is
     * skipped only when its zone exists and provably misses the range.

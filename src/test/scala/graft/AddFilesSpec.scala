@@ -46,19 +46,19 @@ class AddFilesSpec extends SparkSpec {
     assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSeq == Seq((9, "k")))
   }
 
-  test("a file name the log cannot store is refused before anything is committed") {
+  test("a file name holding a JSON delimiter commits and reads back from a fresh reader") {
     val dir = tmpDir("af_names")
     Versioned.append(Seq((1, "a")).toDF("id", "s"), dir)
     val Seq(staged) = stageOne(dir, "d-bulk", Seq((2, "b")))
     val odd = "d-bulk/sales,2024.parquet"
     new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .rename(new org.apache.hadoop.fs.Path(dir, staged), new org.apache.hadoop.fs.Path(dir, odd))
-    val ex = intercept[IllegalArgumentException](Versioned.addFiles(spark, dir, Seq(odd)))
-    assert(ex.getMessage.contains("sales,2024"))
-    assert(Versioned.currentVersion(spark, dir).contains(1L), "the head must not move")
-    // a fresh reader still resolves the table
+    assert(Versioned.addFiles(spark, dir, Seq(odd)) == 2L)
+    // a fresh reader (memo cleared) resolves the file list from the log
     Versioned.clearFilesMemo()
-    assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSeq == Seq((1, "a")))
+    assert(Versioned.filesAt(spark, dir, 2L).contains(odd))
+    assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSet ==
+      Set((1, "a"), (2, "b")))
   }
 
   test("refuses nested, absolute, escaping, missing, and duplicate paths") {

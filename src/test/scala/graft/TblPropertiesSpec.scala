@@ -36,18 +36,26 @@ class TblPropertiesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("nope"))
     Versioned.unsetProperties(spark, dir, Seq("nope"), ifExists = true)  // v5
-    // reserved and non-log-safe keys refuse (a property named like a
-    // log field would confuse the textual probes)
-    intercept[IllegalArgumentException] {
-      Versioned.setProperties(spark, dir, Map("dvs" -> "x"))
-    }
-    intercept[IllegalArgumentException] {
-      Versioned.setProperties(spark, dir, Map("bad key" -> "x"))
-    }
+    // keys are arbitrary strings too, a log field's name included
+    val kv = Versioned.setProperties(spark, dir, Map("dvs" -> "x", "bad key" -> "y"))
+    assert(Versioned.propertiesAt(spark, dir, kv) ==
+      Map("graft.vacuum.retainHours" -> "12", "dvs" -> "x", "bad key" -> "y"))
+    assert(Versioned.dvsAt(spark, dir, kv).isEmpty)
+    Versioned.unsetProperties(spark, dir, Seq("dvs", "bad key"))
     // values round-trip arbitrary strings (b64 in the log)
     Versioned.setProperties(spark, dir, Map("note" -> "a,b\": {c}\nd"))
     assert(Versioned.propertiesAt(spark, dir,
       Versioned.currentVersion(spark, dir).get)("note") == "a,b\": {c}\nd")
+  }
+
+  test("a property key holding a colon keeps the table readable and writable") {
+    val dir = tmpDir("props_colon")
+    Versioned.append(Seq((1L, "a")).toDF("id", "s"), dir)
+    val v = Versioned.setProperties(spark, dir, Map("owner:team" -> "x"))
+    assert(Versioned.propertiesAt(spark, dir, v) == Map("owner:team" -> "x"))
+    Versioned.append(Seq((2L, "b")).toDF("id", "s"), dir)
+    assert(Versioned.propertiesAt(spark, dir, v + 1) == Map("owner:team" -> "x"))
+    assert(Versioned.read(spark, dir).count() == 2)
   }
 
   test("property commits classify as skippable metadata for streams and CDF") {

@@ -799,10 +799,6 @@ class VersionedSpec extends SparkSpec {
       Versioned.addConstraint(spark, dir, "n_small", "n < 15")
     }
     assert(ex0.getMessage.contains("n_small"))
-    // reserved log keys would collide with the commit parsers' probes
-    assert(intercept[IllegalArgumentException] {
-      Versioned.addConstraint(spark, dir, "dvfile", "n > 0")
-    }.getMessage.contains("reserved"))
     // silent replacement of an existing constraint is refused
     assert(intercept[IllegalArgumentException] {
       Versioned.addConstraint(spark, dir, "n_positive", "n > -100")
@@ -847,6 +843,15 @@ class VersionedSpec extends SparkSpec {
     Versioned.dropConstraint(spark, dir, "n_positive")
     Versioned.append(Seq((4L, "d", -9L)).toDF("id", "s", "n"), dir)
     assert(Versioned.read(spark, dir).filter(col("n") === -9L).count() == 1)
+
+    // a constraint may carry any name, a log key's included: it
+    // round-trips and leaves the snapshot's DVs alone
+    Versioned.deleteWhereMoR(spark, dir, col("id") === 4L)
+    val dv = Versioned.addConstraint(spark, dir, "dvfile", "id > 0")
+    assert(Versioned.constraintsAt(spark, dir, dv) == Map("dvfile" -> "id > 0"))
+    assert(Versioned.dvsAt(spark, dir, dv) == Versioned.dvsAt(spark, dir, dv - 1))
+    Versioned.clearFilesMemo()
+    assert(Versioned.readAt(spark, dir, dv).filter(col("n") === -9L).isEmpty)
   }
 
   test("versioned MERGE equals the relational merge on randomized data") {
@@ -1368,16 +1373,23 @@ class VersionedSpec extends SparkSpec {
       .contains("\"files\":["), "v3 should be a delta anchored on the legacy entry")
   }
 
-  test("reserved log keys are refused as writer appIds") {
+  test("writer appIds named like log keys round-trip") {
     val dir = tmpDir("vt_appid")
     Versioned.append(Seq((1L, "a")).toDF("id", "s"), dir)
-    val e = intercept[IllegalArgumentException] {
-      Versioned.appendIdempotent(Seq((2L, "b")).toDF("id", "s"), dir, "ts", 1L)
-    }
-    assert(e.getMessage.contains("reserved"))
-    intercept[IllegalArgumentException] {
-      Versioned.overwriteIdempotent(Seq((2L, "b")).toDF("id", "s"), dir, "files", 1L)
-    }
+    val ts1 = Versioned.commitTimestampAt(spark, dir, 1L)
+    assert(Versioned.appendIdempotent(Seq((2L, "b")).toDF("id", "s"), dir, "ts", 1L)
+      .contains(2L))
+    assert(Versioned.overwriteIdempotent(Seq((3L, "c")).toDF("id", "s"), dir, "files", 7L)
+      .contains(3L))
+    assert(Versioned.txnsAt(spark, dir, 3L) == Map("ts" -> 1L, "files" -> 7L))
+    // the watermarks still make replays no-ops
+    assert(Versioned.appendIdempotent(Seq((2L, "b")).toDF("id", "s"), dir, "ts", 1L).isEmpty)
+    assert(Versioned.overwriteIdempotent(Seq((3L, "c")).toDF("id", "s"), dir, "files", 7L)
+      .isEmpty)
+    // neither masquerades as the commit time nor as the file list
+    assert(Versioned.commitTimestampAt(spark, dir, 2L) >= ts1)
+    Versioned.clearFilesMemo()
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSeq == Seq((3L, "c")))
   }
 
   test("constraint validation of a differently-cased batch evaluates instead of going ambiguous") {
@@ -1470,10 +1482,10 @@ class VersionedSpec extends SparkSpec {
     // a genuinely newer refresh applies
     assert(Versioned.mergeIdempotent(spark, dir, src, Seq("id"), "job", 11L,
       updateWhen = Upsert.scol("ts") > Upsert.tcol("ts")).nonEmpty)
-    // reserved appIds refused here too
-    intercept[IllegalArgumentException] {
-      Versioned.mergeIdempotent(spark, dir, src, Seq("id"), "dvs", 12L)
-    }
+    // an appId named like a log key is an ordinary watermark
+    assert(Versioned.mergeIdempotent(spark, dir, src, Seq("id"), "dvs", 12L).nonEmpty)
+    assert(Versioned.txnsAt(spark, dir, Versioned.currentVersion(spark, dir).get) ==
+      Map("job" -> 11L, "dvs" -> 12L))
   }
 
   test("zone carry recovers across a sidecar gap wider than the bounded window") {
