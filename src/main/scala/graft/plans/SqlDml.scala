@@ -22,8 +22,9 @@ import graft.table.Versioned
   *   DELETE FROM cat.ns.t WHERE ...          -- GraftCatalog names too
   *
   * Translation hands the statement's predicate/assignments to the
-  * engine's copy-on-write rewrite — matched-file pruning, zone-map
-  * carry, DV retirement, pinned-version conflict rule — so SQL DML is
+  * engine's row-level rewrite — per file, deletion vectors or a
+  * copy-on-write rewrite of a file left under half live, zone-map
+  * carry, the commuting conflict rule — so SQL DML is
   * the same transactional machinery as the Scala API, not a second
   * implementation.
   *
@@ -192,9 +193,10 @@ final case class GraftTruncateCommand(dir: String) extends LeafRunnableCommand {
     s"GraftTruncateCommand $dir"
 }
 
-/** Executable DELETE: runs the copy-on-write [[Versioned.deleteWhere]];
-  * returns the committed version, or NULL when no row matched (the
-  * rewrite commits nothing — same contract as the Scala API).
+/** Executable DELETE: runs [[Versioned.deleteWhere]], which soft-deletes
+  * the matched rows or rewrites a file left under half live; returns
+  * the committed version, or NULL when no row matched (the rewrite
+  * commits nothing — same contract as the Scala API).
   */
 final case class GraftDeleteCommand(dir: String, cond: Column)
     extends LeafRunnableCommand {
@@ -209,8 +211,10 @@ final case class GraftDeleteCommand(dir: String, cond: Column)
     s"GraftDeleteCommand $dir"
 }
 
-/** Executable UPDATE: [[Versioned.updateWhere]] under the same
-  * version-or-NULL result contract as [[GraftDeleteCommand]].
+/** Executable UPDATE: [[Versioned.updateWhere]] — the matched rows'
+  * new versions written beside the soft-deleted or rewritten old ones
+  * — under the same version-or-NULL result contract as
+  * [[GraftDeleteCommand]].
   */
 final case class GraftUpdateCommand(
     dir: String, cond: Column, set: Seq[(String, Column)])

@@ -81,7 +81,7 @@ object VersionedQueries {
     val tableDir = scratchDir("graft_m5")
     Versioned.append(target.filter(col("user_id") % 2 === 0), tableDir)
     Versioned.append(target.filter(col("user_id") % 2 === 1), tableDir)
-    Versioned.deleteWhereMoR(s, tableDir, col("user_id") % 10 === 0)
+    Versioned.deleteWhere(s, tableDir, col("user_id") % 10 === 0)
     Versioned.merge(s, tableDir, source, Seq("user_id"),
       updateWhen = Upsert.scol("ts_us") > Upsert.tcol("ts_us"))
     Versioned.read(s, tableDir)
@@ -140,7 +140,7 @@ object VersionedQueries {
     Versioned.append(target.filter(col("user_id") % 2 === 0), silverDir)
     Versioned.append(target.filter(col("user_id") % 2 === 1), silverDir)
     IncrementalAgg.refresh(s, silverDir, goldDir, Seq("event_type"), Seq("value_c"))
-    Versioned.deleteWhereMoR(s, silverDir, col("user_id") % 10 === 0)
+    Versioned.deleteWhere(s, silverDir, col("user_id") % 10 === 0)
     Versioned.merge(s, silverDir, source, Seq("user_id"),
       updateWhen = Upsert.scol("ts_us") > Upsert.tcol("ts_us"))
     IncrementalAgg.refresh(s, silverDir, goldDir, Seq("event_type"), Seq("value_c"))
@@ -281,7 +281,7 @@ object VersionedQueries {
     val tableDir = scratchDir("graft_xdv")
     Versioned.append(docs.filter(col("doc_id") % 2 === 0), tableDir)
     Versioned.append(docs.filter(col("doc_id") % 2 === 1), tableDir)
-    Versioned.deleteWhereMoR(s, tableDir, col("doc_id") % 7 === 0)
+    Versioned.deleteWhere(s, tableDir, col("doc_id") % 7 === 0)
     TextDedup.exact(Versioned.read(s, tableDir), "doc_id", "text")
       .select(col("keep_id"), col("n_copies"))
       .orderBy("keep_id")
@@ -385,7 +385,7 @@ object VersionedQueries {
     val tableDir = scratchDir("graft_m10")
     Versioned.append(target.filter(col("user_id") % 2 === 0), tableDir)
     Versioned.append(target.filter(col("user_id") % 2 === 1), tableDir)
-    Versioned.deleteWhereMoR(s, tableDir, col("user_id") % 10 === 0)
+    Versioned.deleteWhere(s, tableDir, col("user_id") % 10 === 0)
     source.createOrReplaceTempView("graft_m10_source")
     s.sql(
       s"""MERGE INTO `graft-versioned`.`$tableDir` t
@@ -2051,7 +2051,7 @@ object VersionedQueries {
       if (agg.queryExecution.executedPlan.toString.contains("LocalTableScan")) 1L
       else 0L
     val r = agg.head()
-    val v3 = Versioned.deleteWhereMoR(s, tableDir,
+    val v3 = Versioned.deleteWhere(s, tableDir,
       col("event_id") % 64 === 21).get
     val afterDelete = Versioned.metaRowCountAt(s, tableDir, v3)
     val atV1 = Versioned.metaRowCountAt(s, tableDir, 1L)
@@ -2269,7 +2269,7 @@ object VersionedQueries {
     val srcDir = scratchDir("graft_xdclone_src")
     val dstDir = scratchDir("graft_xdclone_dst")
     Versioned.append(ev, srcDir)                                    // src v1
-    Versioned.deleteWhereMoR(s, srcDir, col("user_id") % 6 === 0)   // src v2 (DVs)
+    Versioned.deleteWhere(s, srcDir, col("user_id") % 6 === 0)   // src v2 (DVs)
     Versioned.cloneTable(s, srcDir, dstDir, deep = true)            // dst v1 (copied)
     require(Versioned.listPins(s, srcDir).isEmpty,
       "deep clone must not pin the source")
@@ -2329,7 +2329,7 @@ object VersionedQueries {
       .select("event_id", "user_id", "event_type", "value_c")
     val tableDir = scratchDir("graft_xreorg")
     Versioned.append(ev.filter(col("event_id") % 7 === 0), tableDir)     // v1
-    Versioned.deleteWhereMoR(s, tableDir, col("user_id") % 5 === 0)      // v2 (DVs)
+    Versioned.deleteWhere(s, tableDir, col("user_id") % 5 === 0)      // v2 (DVs)
     Versioned.dropColumn(s, tableDir, "event_type")                      // v3
     Versioned.append(
       ev.filter(col("event_id") % 7 === 3).drop("event_type"), tableDir) // v4 (clean)

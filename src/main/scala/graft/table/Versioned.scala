@@ -87,7 +87,7 @@ import graft.table.LogCodec.{CkptRef, Delta, FullList, LogEntry}
   *  - Partitioning's one residual advantage — dropping a whole
   *    partition as a metadata-only operation — is served here by
   *    [[deleteWhere]] with a `zoneHint`: clustered layouts make the
-  *    matched-file set exactly the "partition", and the copy-on-write
+  *    matched-file set exactly the "partition", and the delete
   *    commit touches only those files.
   *
   * Streams and buckets cover the remaining classical uses: ingestion
@@ -785,10 +785,12 @@ object Versioned {
     }
 
   /** The operation that produced snapshot `v` (append, overwrite,
-    * merge, delete, delete-mor, update, update-mor, restore,
-    * set-constraint, drop-constraint, optimize, compact-small —
-    * the last two are the row-preserving maintenance class that
-    * [[windowShape]] distinguishes from content changes).
+    * merge, delete, update, replacewhere, restore, set-constraint,
+    * drop-constraint, optimize, compact-small — the last two are the
+    * row-preserving maintenance class that [[windowShape]]
+    * distinguishes from content changes). Logs written by earlier
+    * builds may also hold delete-mor and update-mor, their
+    * merge-on-read DELETE and UPDATE.
     */
   def opAt(spark: SparkSession, dir: String, v: Long): String =
     entryAt(spark, dir, v).op
@@ -1713,7 +1715,7 @@ object Versioned {
     currentVersion(spark, dir).flatMap(v => txnsAt(spark, dir, v).get(appId))
 
   /** Deletion vectors of snapshot `v`: per data file, the sorted row
-    * indices soft-deleted by merge-on-read DELETEs ([[deleteWhereMoR]]).
+    * indices soft-deleted by the row-level rewrite ([[rewriteRows]]).
     * Stored INSIDE the commit JSON — a DV is visible exactly when its
     * commit is, with no sidecar-publish race — and carried/filtered by
     * every subsequent commit like txn watermarks.
@@ -1959,13 +1961,13 @@ object Versioned {
     */
   private[graft] val DvInlineMax = 1024
 
-  /** Default cap on rows a single merge-on-read DELETE/UPDATE may
-    * match. MoR materializes matched (file, position) pairs on the
-    * driver — the right trade for SPARSE row-level mutations, and this
-    * bound is what keeps "sparse" honest: a broad predicate fails
-    * loudly (use the copy-on-write path) instead of OOMing the driver
-    * and bloating every subsequent commit with megabytes of DV. A MERGE
-    * whose changed rows pass it rewrites their files copy-on-write.
+  /** Changed-row positions up to which a row-level rewrite (MERGE,
+    * DELETE, UPDATE, replaceWhere — [[rewriteRows]]) may soft-delete
+    * with deletion vectors. Merge-on-read collects the changed (file,
+    * position) pairs on the driver — the right trade for SPARSE
+    * mutations; past this bound every changed file is rewritten
+    * copy-on-write instead of OOMing the driver and bloating every
+    * later commit with megabytes of DV.
     */
   val MoRMatchCap = 1000000L
 
@@ -3008,7 +3010,7 @@ object Versioned {
   }
 
   /** Pinned commit for operations that REWRITE rows they read
-    * (compact, delete, update): the snapshot must still be at the
+    * (compact, restore, schema changes): the snapshot must still be at the
     * version the rewrite was planned against, else the rewrite would
     * silently drop whatever a concurrent commit changed. Fails with
     * [[CommitRace]] on conflict — the caller re-plans from the new
@@ -3068,7 +3070,6 @@ object Versioned {
       commuteCheck: Long => Boolean = _ => true,
       txn: Option[(String, Long)] = None,
       pairKeys: Seq[String] = Nil,
-      dropPhys: Seq[String] = Nil,
       softDeleted: Seq[String] = Nil): Option[Long] = {
     val touchedSet = touched.toSet
     val readSet = touched ++ softDeleted
@@ -3605,13 +3606,16 @@ object Versioned {
   }
 
   /** Restores the bucketed layout after row-rewriting maintenance:
-    * rewrites exactly the UNTAGGED files (merge/compact/z-order
+    * rewrites exactly the UNTAGGED files (merge/update/compact/z-order
     * outputs carry no bucket tag, which soundly disables the scan's
-    * co-partitioning report) through the bucketed writer, leaving
-    * already-tagged files untouched — incremental, O(untagged), the
-    * `zorderIncremental` discipline applied to buckets. Row-preserving
-    * rewrite under the commute rule (streams skip it, CDF is silent);
-    * DVs on rewritten files materialize. None = nothing to do.
+    * co-partitioning report) and the tagged files carrying deletion
+    * vectors (a DV'd snapshot reads through the DataFrame bridge, which
+    * reports no partitioning either) through the bucketed writer,
+    * leaving every other tagged file untouched — incremental,
+    * O(drifted), the `zorderIncremental` discipline applied to buckets.
+    * Row-preserving rewrite under the commute rule (streams skip it,
+    * CDF is silent); DVs on rewritten files materialize. None = nothing
+    * to do.
     */
   def rebucket(spark: SparkSession, dir: String): Option[Long] = {
     val base = currentVersion(spark, dir).getOrElse(
@@ -3620,16 +3624,17 @@ object Versioned {
       throw new IllegalArgumentException(
         s"rebucket needs a declared bucket layout at $dir — SET " +
           s"TBLPROPERTIES ('$BucketByKey' = '<col>[,<col>…],<numBuckets>')"))
-    val untagged = filesAt(spark, dir, base).filter(r => bucketOfFile(r).isEmpty)
-    if (untagged.isEmpty) return None
+    val dvs = dvsAt(spark, dir, base)
+    val drifted = filesAt(spark, dir, base)
+      .filter(r => bucketOfFile(r).isEmpty || dvs.contains(fileKey(r)))
+    if (drifted.isEmpty) return None
     val logSchema = schemaAt(spark, dir, base)
     val fields = cols.map(c =>
       logSchema.getOrElse(readAt(spark, dir, base).schema)
         .fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
           throw new IllegalArgumentException(
             s"bucket column $c absent from the snapshot schema at $dir")))
-    val rows = applyDvs(
-      spark, readRaw(spark, dir, logSchema, untagged), dvsAt(spark, dir, base))
+    val rows = applyDvs(spark, readRaw(spark, dir, logSchema, drifted), dvs)
     val schemaFields = logSchema.getOrElse(rows.schema).fields
     val sortPhys = clusterByAt(spark, dir, base)
       .flatMap(sc => schemaFields.find(_.name.equalsIgnoreCase(sc)))
@@ -3638,7 +3643,7 @@ object Versioned {
       toPhysicalFrame(rows, logSchema), dir, fields.map(physicalName), n,
       sortPhys)
     val v = commitRewriteCommuting(spark, dir, base, "rebucket",
-      logSchema.map(_.json).getOrElse(rows.schema.json), untagged, fresh).get
+      logSchema.map(_.json).getOrElse(rows.schema.json), drifted, fresh).get
     carrySidecars(spark, dir, base, v,
       filesAt(spark, dir, v).toSet -- fresh.toSet, fresh)
     Some(v)
@@ -4267,18 +4272,21 @@ object Versioned {
     }
   }
 
-  /** Row-level DELETE (the Delta `DELETE FROM t WHERE …` analog),
-    * copy-on-write: only files containing at least one matching row
-    * are rewritten (minus their matching rows); every other file
-    * carries into the new snapshot verbatim — at 100 TB the commit
-    * cost follows the matched-file footprint, not the table. Rows
-    * where `cond` is NULL are kept, matching SQL DELETE semantics.
-    * Returns None (no commit) when nothing matches. Pinned to the
-    * version it read: a concurrent commit fails this rewrite loudly
-    * (re-run it) rather than being silently dropped.
+  /** Row-level DELETE (the Delta `DELETE FROM t WHERE …` analog): the
+    * live rows where `cond` is TRUE go through the shared row-level
+    * rewrite ([[rewriteRows]]) with no new version — each matched file
+    * keeps its place with a deletion vector over the deleted rows, or,
+    * when fewer than half its physical rows would stay live, is
+    * rewritten copy-on-write without them. Every other file carries
+    * into the new snapshot verbatim, so at 100 TB the commit cost
+    * follows the matched rows, not the table. Rows where `cond` is
+    * NULL are kept, matching SQL DELETE semantics. Returns None (no
+    * commit) when nothing matches. Commits with the commuting conflict
+    * rule: a concurrent blind append re-bases and lands; a concurrent
+    * rewrite of a matched file fails loudly with [[CommitRace]].
     *
-    * `zoneHint` bounds the touched-file scan via the snapshot's zone
-    * map: pass the (zonedCol, lo, hi) range that `cond` implies and
+    * `zoneHint` bounds the match scan via the snapshot's zone map: pass
+    * the (zonedCol, lo, hi) range that `cond` implies and
     * provably-unmatched files are never even opened during planning.
     * The hint must be IMPLIED by `cond` (rows matching `cond` always
     * fall in the range) or matches outside it will be missed.
@@ -4286,38 +4294,30 @@ object Versioned {
   def deleteWhere(
       spark: SparkSession, dir: String, cond: org.apache.spark.sql.Column,
       zoneHint: Option[(String, Long, Long)] = None): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rewriteMatching(spark, dir, "delete", cond, zoneHint)(
-      (touched, c) => touched.filter(not(coalesce(c, lit(false)))))
+    val base = currentVersion(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $dir"))
+    rewriteWhere(spark, dir, base, entryAt(spark, dir, base), "delete", cond, zoneHint)
   }
 
   /** Row-level UPDATE (the Delta `UPDATE t SET … WHERE …` analog):
-    * same copy-on-write/pinning/hint contract as [[deleteWhere]];
-    * `set` maps column names to replacement expressions, applied only
-    * where `cond` is TRUE and cast back to the column's existing type
-    * so the snapshot schema never drifts.
+    * same per-file merge-on-read/copy-on-write choice, conflict rule
+    * and hint contract as [[deleteWhere]]; the matched rows' new
+    * versions are written to fresh files. `set` maps column names to
+    * replacement expressions, applied only where `cond` is TRUE and
+    * cast back to the column's existing type so the snapshot schema
+    * never drifts. The commit records the non-SET columns as its
+    * pairing keys, so the change feed reports the rows as
+    * `update_preimage`/`update_postimage`.
     */
   def updateWhere(
       spark: SparkSession, dir: String, cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       zoneHint: Option[(String, Long, Long)] = None): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "UPDATE needs at least one SET column")
-    currentVersion(spark, dir).foreach(b =>
-      requireNoGeneratedSet(spark, dir, b, set.keys, "UPDATE"))
-    rewriteMatching(spark, dir, "update", cond, zoneHint,
-      pairKeys = sch => sch.fieldNames.toSeq.filterNot(set.keySet)) { (touched, c) =>
-      val unknown = set.keySet -- touched.schema.fieldNames
-      require(unknown.isEmpty, s"SET references unknown columns: ${unknown.mkString(", ")}")
-      touched.select(touched.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            when(coalesce(c, lit(false)), e.cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq: _*)
-    }
+    val base = currentVersion(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $dir"))
+    requireNoGeneratedSet(spark, dir, base, set.keys, "UPDATE")
+    rewriteWhere(spark, dir, base, entryAt(spark, dir, base), "update", cond, zoneHint, set)
   }
 
   /** Atomic selective overwrite — Delta's `replaceWhere` / the DSv2
@@ -4338,14 +4338,13 @@ object Versioned {
     * append, so it never claims identity ranges (the NOT NULL check
     * refuses unassigned rows loudly).
     *
-    * Copy-on-write at the MATCHED-FILE footprint: only files holding a
-    * live matching row rewrite (their non-matching remainder carries
-    * into fresh files beside the source rows); untouched files carry
-    * verbatim, so at 100 TB the commit cost follows the replaced
-    * slice, not the table. `zoneHint` narrows discovery to
-    * zone-intersecting files exactly as [[deleteWhere]]. DV-aware on
-    * both ends: soft-deleted rows neither count as matches to replace
-    * nor resurrect through the remainder rewrite.
+    * The replaced rows leave exactly as a [[deleteWhere]] of `cond`
+    * removes them (deletion vectors, or copy-on-write for a file left
+    * under half live), and the source rows are written beside them in
+    * the same commit. `zoneHint` narrows discovery to zone-intersecting
+    * files exactly as [[deleteWhere]]. DV-aware on both ends:
+    * soft-deleted rows neither count as matches to replace nor
+    * resurrect.
     *
     * Commits as a row-MUTATING op (`replacewhere`): the change feed
     * represents it as the snapshot diff (deletes + inserts), streams
@@ -4361,7 +4360,7 @@ object Versioned {
       spark: SparkSession, dir: String, source: DataFrame,
       cond: org.apache.spark.sql.Column,
       zoneHint: Option[(String, Long, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
     var attempt = 1
     while (true) {
@@ -4370,8 +4369,7 @@ object Versioned {
           s"no committed versions at $dir — replaceWhere needs an existing " +
             "table (create it with overwrite/append first)"))
       val headEntry = entryAt(spark, dir, base)
-      val logSchema = schemaOf(headEntry)
-      val tableSchema = logSchema.getOrElse(readAt(spark, dir, base).schema)
+      val tableSchema = schemaOf(headEntry).getOrElse(readAt(spark, dir, base).schema)
       val gen = generatedOf(headEntry.props)
       val tCols = tableSchema.fieldNames.map(lower).toSet
       val sCols = source.schema.fieldNames.map(lower).toSet
@@ -4387,7 +4385,7 @@ object Versioned {
       // generated column the source rightly omitted would otherwise
       // evaluate NULL → coalesce(false) and refuse a valid backfill
       // (regeneration is deterministic, so the second pass over the
-      // unioned output below is a no-op on these rows)
+      // written rows is a no-op on these)
       val aligned = regenerated(headEntry.props,
         source.select(tableSchema.fields.toSeq.map { f =>
           if (sCols.contains(lower(f.name))) col(f.name).cast(f.dataType).as(f.name)
@@ -4398,36 +4396,10 @@ object Versioned {
       require(aligned.filter(not(coalesce(cond, lit(false)))).isEmpty,
         "replaceWhere source rows violate the predicate — a backfill must " +
           "stay inside the slice it replaces")
-      val all = filesAt(spark, dir, base)
-      val candidates = zoneHint match {
-        case Some((zc, lo, hi)) => prunedFiles(spark, dir, base, zc, lo, hi)
-        case None => all
-      }
-      val headDvs = dvsAt(spark, dir, base)
-      def readFiles(files: Seq[String]) =
-        applyDvs(spark, readRaw(spark, dir, logSchema, files), headDvs)
-      val nameOf = scannedName(dir, candidates)
-      val matched =
-        if (candidates.isEmpty) Set.empty[String]
-        else readFiles(candidates).filter(cond)
-          .select(input_file_name().as("f")).distinct()
-          .collect().flatMap(r => nameOf(r.getString(0))).toSet
-      val touched = candidates.filter(matched)
-      // touched files' non-matching remainder carries into the fresh
-      // set beside the source rows; generated columns recompute over
-      // the whole output (deterministic → a no-op on carried rows)
-      val out0 =
-        if (touched.isEmpty) aligned
-        else readFiles(touched).filter(not(coalesce(cond, lit(false))))
-          .unionByName(aligned)
-      val out = regenerated(headEntry.props, out0)
-      requireSatisfied(out, headEntry.constraints ++ identityChecks(headEntry.props))
-      val fresh = writeDataFiles(toPhysicalFrame(out, logSchema), dir)
       // replaceWhere's extra read-set clause: files a concurrent commit
       // ADDED must hold no live matching row, or the replace re-plans
       def commute(head: Long): Boolean = {
-        val added =
-          (filesAt(spark, dir, head).toSet -- all.toSet -- fresh.toSet).toSeq
+        val added = (filesAt(spark, dir, head).toSet -- filesAt(spark, dir, base)).toSeq
         added.isEmpty || {
           val hdvs = dvsAt(spark, dir, head)
           applyDvs(spark,
@@ -4435,16 +4407,11 @@ object Versioned {
             .filter(cond).isEmpty
         }
       }
-      try {
-        val v = commitRewriteCommuting(
-          spark, dir, base, "replacewhere", tableSchema.json, touched, fresh,
-          commuteCheck = commute).get
-        carrySidecars(spark, dir, base, v,
-          filesAt(spark, dir, v).toSet -- fresh.toSet, fresh)
-        return v
-      } catch {
+      try return rewriteWhere(spark, dir, base, headEntry, "replacewhere", cond,
+        zoneHint, inserts = Some(aligned), commuteCheck = commute).get
+      catch {
         case e: CommitRace =>
-          // full re-plan from the new head: rediscover matched files and
+          // full re-plan from the new head: rediscover matched rows and
           // re-validate under the head's schema/constraints. The fresh
           // files this attempt wrote are never referenced — vacuum
           // collects them like any other orphan.
@@ -4453,6 +4420,56 @@ object Versioned {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The statement half of [[deleteWhere]], [[updateWhere]] and
+    * [[replaceWhere]]: the live rows of the zone-pruned candidate files
+    * where `cond` is TRUE are the changed rows — with their `set`
+    * version for an UPDATE, removed otherwise — and `inserts` are new
+    * rows, all handed to [[rewriteRows]] at `base`. Reads under the
+    * LOG's schema, not the files' footers: after a mergeSchema
+    * evolution a matched file may predate a widened column, and a
+    * footer-schema rewrite would narrow the published schema. None
+    * when there is nothing to change.
+    */
+  private def rewriteWhere(
+      spark: SparkSession, dir: String, base: Long, headEntry: LogEntry,
+      op: String, cond: org.apache.spark.sql.Column,
+      zoneHint: Option[(String, Long, Long)],
+      set: Map[String, org.apache.spark.sql.Column] = Map.empty,
+      inserts: Option[DataFrame] = None,
+      commuteCheck: Long => Boolean = _ => true): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+    import graft.ops.Upsert.KeepCol
+    val all = resolveFiles(spark, dir, base, Some(headEntry))
+    val candidates = zoneHint match {
+      case Some((zc, lo, hi)) => prunedFiles(spark, dir, base, zc, lo, hi)
+      case None => all
+    }
+    if (candidates.isEmpty && inserts.isEmpty) return None
+    val schema = schemaOf(headEntry).getOrElse(readAt(spark, dir, base).schema)
+    val unknown = set.keySet -- schema.fieldNames
+    require(unknown.isEmpty, s"SET references unknown columns: ${unknown.mkString(", ")}")
+    val headDvs = dvsOf(spark, dir, headEntry)
+    val hit = coalesce(cond, lit(false))
+    val added = inserts.map(_
+      .withColumn("__dv_rel", lit(null).cast("string"))
+      .withColumn("__dv_idx", lit(null).cast("long"))
+      .withColumn(KeepCol, lit(true)))
+    def rows(cow: Set[String]): DataFrame = {
+      val matched = Option.when(candidates.nonEmpty)(
+        positionedRows(spark, dir, schema, candidates, headDvs)
+          .filter(if (cow.isEmpty) hit else hit || col("__dv_rel").isin(cow.toSeq: _*))
+          .select(schema.fields.toSeq.map(f => set.get(f.name)
+            .fold(col(f.name))(e => when(hit, e.cast(f.dataType)).otherwise(col(f.name)))
+            .as(f.name)) ++ Seq(col("__dv_rel"), col("__dv_idx"),
+            (if (set.nonEmpty) lit(true) else not(hit)).as(KeepCol)): _*))
+      (matched ++ added).reduce(_ unionByName _)
+    }
+    rewriteRows(spark, dir, base, headEntry, all, headDvs, schema, op, rows,
+      writesRows = set.nonEmpty || inserts.nonEmpty, noopUnmatched = inserts.isEmpty,
+      commuteCheck = commuteCheck,
+      pairKeys = if (set.isEmpty) Nil else schema.fieldNames.toSeq.filterNot(set.keySet))
   }
 
   /** MERGE INTO the versioned table — the Delta `DeltaTable.merge`
@@ -4747,18 +4764,10 @@ object Versioned {
         mergeKeyBroadcasts.incrementAndGet(); broadcast(k)
       } else { mergeKeyShuffles.incrementAndGet(); k }
     }
-    // The LIVE rows of `files` with their (file, position). File
-    // identity comes from `_metadata.file_path` — bound to THIS scan's
-    // relation — not input_file_name(), which Spark refuses in a plan
-    // with a second file source (the key set also scans parquet).
-    def liveRows(files: Seq[String], dvs: Map[String, Seq[Long]]) =
-      applyDvs(spark, readRaw(spark, dir, Some(logSchema), files), dvs)
-        .withColumn("__dv_rel", scanFileKey(col("_metadata.file_path"), files))
-        .withColumn("__dv_idx", col("_metadata.row_index"))
     // Files of `files` holding at least one live row whose key appears
     // in the source — the commute check on concurrently-added files
     def filesWithMatches(files: Seq[String], dvs: Map[String, Seq[Long]]): Set[String] =
-      liveRows(files, dvs).join(srcKeys, keys, "left_semi")
+      positionedRows(spark, dir, logSchema, files, dvs).join(srcKeys, keys, "left_semi")
         .select("__dv_rel").distinct()
         .collect().map(_.getString(0)).toSet
     // BY SOURCE clauses affect live rows with NO source key whose
@@ -4781,7 +4790,7 @@ object Versioned {
       bySourceAffected match {
         case None => Set.empty
         case Some(cond) =>
-          liveRows(files, dvs).join(srcKeys, keys, "left_anti")
+          positionedRows(spark, dir, logSchema, files, dvs).join(srcKeys, keys, "left_anti")
             .select(col("__dv_rel") +: logSchema.fieldNames.toSeq
               .map(c => col(c).as(graft.ops.Upsert.tname(c))): _*)
             .filter(cond)
@@ -4804,73 +4813,22 @@ object Versioned {
         val reach = (bySourceAffected.toSeq ++
           Option.when(rewrite.nonEmpty)(col("__dv_rel").isin(rewrite.toSeq: _*)))
           .foldLeft(col("__m_src").isNotNull)(_ || _)
-        alignTo(liveRows(all, headDvs).join(srcKeys, keys, "left")
+        alignTo(positionedRows(spark, dir, logSchema, all, headDvs).join(srcKeys, keys, "left")
           .select(carry.map(col) ++ Seq(col("__m_src")) ++
             fields.map(c => col(c).as(graft.ops.Upsert.tname(c))): _*)
           .filter(reach)
           .select(carry.map(col) ++
             fields.map(c => col(graft.ops.Upsert.tname(c)).as(c)): _*), carry)
       }
-    import graft.ops.Upsert.{ChangedCol, KeepCol}
+    import graft.ops.Upsert.ChangedCol
     def mergedOver(target: DataFrame) = graft.ops.Upsert.mergeFullTagged(
       target, src, keys, matched, notMatched, notMatchedBySource, carry)
-    // GENERATED columns regenerate over the rows this merge writes
-    // (Delta's contract): updates to a dependency recompute, inserts
-    // whose source omitted the column compute
-    def kept(df: DataFrame) = df.filter(col(KeepCol))
-      .select(outSchema.fieldNames.toSeq.map(col): _*)
-      .transform(regenerated(headEntry.props, _))
-    // the rows a clause acted on: changed target rows and the inserts.
-    // Checkpointed: the merge join runs once (its shuffle stages now,
-    // its result with the position collect below), and the constraint
-    // check and the write read the stored result under the partitioning
-    // adaptive execution chose for it
-    val changedAt = mergedOver(targetRows(Set.empty)).filter(col(ChangedCol))
-      .localCheckpoint(eager = false)
-    val (cow, mor, softDeletes, fresh) = try {
-      // the changed target rows' (file, position) — one past MoRMatchCap
-      // is enough to know the merge is too broad for deletion vectors
-      val positions: Seq[(String, Long)] = changedAt
-        .filter(col("__dv_rel").isNotNull).select(carry.map(col): _*)
-        .limit((MoRMatchCap + 1).toInt).collect().toSeq
-        .map(r => (r.getString(0), r.getLong(1)))
-      // CHECK constraints: every row this merge changes or inserts must
-      // satisfy the contract (rows left in place already did); constraint
-      // stability across a commute re-base is enforced below. Identity
-      // columns add an implicit NOT NULL (a source row cannot insert an
-      // unassigned identity through a merge).
-      requireSatisfied(kept(changedAt),
-        headEntry.constraints ++ identityChecks(headEntry.props))
-      val overCap = positions.size > MoRMatchCap
-      val changedKeys: Set[String] =
-        if (!overCap) positions.map(_._1).toSet
-        else changedAt.filter(col("__dv_rel").isNotNull).select("__dv_rel").distinct()
-          .collect().map(_.getString(0)).toSet
-      val changedFiles = all.filter(f => changedKeys(fileKey(f)))
-      val changedPerFile = positions.groupMapReduce(_._1)(_ => 1L)(_ + _)
-      val physical = physicalRowCounts(spark, dir, base, changedFiles)
-      def liveAfter(f: String): Long = physical(f) -
-        headDvs.getOrElse(fileKey(f), Nil).size - changedPerFile(fileKey(f))
-      // merge-on-read per file: soft-delete the changed positions and
-      // keep the file, unless fewer than half its physical rows would
-      // stay live (or the merge passes the MoR cap) — then the file is
-      // rewritten copy-on-write, its unchanged rows written with the
-      // merge output and its DVs retiring with it
-      val (cow, mor) = changedFiles.partition(f => overCap || 2 * liveAfter(f) < physical(f))
-      val cowKeys = cow.map(fileKey).toSet
-      // the write: the changed rows' new versions, the inserts, and
-      // every unchanged live row of the copy-on-write files
-      val written =
-        if (cow.isEmpty) changedAt
-        else mergedOver(targetRows(cowKeys))
-          .filter(col(ChangedCol) || col("__dv_rel").isin(cowKeys.toSeq: _*))
-      (cow, mor,
-        positions.filterNot { case (k, _) => cowKeys(k) }.groupMap(_._1)(_._2),
-        writeDataFiles(toPhysicalFrame(kept(written), Some(outSchema)), dir))
-    } finally changedAt.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    // the rows a clause acted on — changed target rows and the inserts —
+    // and, for copy-on-write files, every unchanged live row beside them
+    def rows(cow: Set[String]): DataFrame =
+      if (cow.isEmpty) mergedOver(targetRows(Set.empty)).filter(col(ChangedCol))
+      else mergedOver(targetRows(cow))
+        .filter(col(ChangedCol) || col("__dv_rel").isin(cow.toSeq: _*))
     // MERGE's insert clause read "key ABSENT from the table" — a
     // concurrently-appended file can invalidate that without touching
     // any file this merge read, so the commute additionally requires
@@ -4892,212 +4850,112 @@ object Versioned {
           filesWithAffectedUnmatched(added, dvs).isEmpty
       }
     }
-    // soft-deleted files join the read set: a concurrent commit that
-    // removes one (compaction) or grows its DVs raises CommitRace and
-    // the merge re-plans, so no row resurrects and no delete is lost
+    rewriteRows(spark, dir, base, headEntry, all, headDvs, outSchema, "merge", rows,
+      commuteCheck = addedDisjoint, txn = txn, pairKeys = keys)
+  }
+
+  /** The live rows of `files` under `schema`, each with its (file,
+    * position): `__dv_rel`, the file's [[fileKey]], and `__dv_idx`, its
+    * parquet row index. File identity comes from `_metadata.file_path`
+    * — bound to THIS scan's relation — not input_file_name(), which
+    * Spark refuses in a plan with a second file source (a MERGE's key
+    * set also scans parquet).
+    */
+  private def positionedRows(
+      spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType,
+      files: Seq[String], dvs: Map[String, Seq[Long]]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    applyDvs(spark, readRaw(spark, dir, Some(schema), files), dvs)
+      .withColumn("__dv_rel", scanFileKey(col("_metadata.file_path"), files))
+      .withColumn("__dv_idx", col("_metadata.row_index"))
+  }
+
+  /** The one row-level rewrite under MERGE, [[deleteWhere]],
+    * [[updateWhere]] and [[replaceWhere]], planned against `base`
+    * (`all` its files, `headDvs` its deletion vectors). `rows(cow)` is
+    * the statement's output: every live target row it changes, with its
+    * (`__dv_rel`, `__dv_idx`) position from [[positionedRows]], plus any
+    * new rows (NULL position), and — for a non-empty `cow` — every
+    * other live row of those files; [[graft.ops.Upsert.KeepCol]] marks
+    * the rows written (a deleted row has none).
+    *
+    * The changed rows are checkpointed — the statement's plan runs once
+    * — and their positions collected, one past [[MoRMatchCap]]. Rows
+    * written must satisfy the CHECK constraints (rows left in place
+    * already did; identity columns add an implicit NOT NULL), and
+    * GENERATED columns regenerate over them. Per changed file, merge-on-
+    * read: the file stays and its changed positions join its deletion
+    * vector; but a file left with fewer than half its physical rows
+    * live, or every changed file once the positions pass the cap, is
+    * rewritten copy-on-write instead — a second `rows` pass over those
+    * files only, their DVs retiring with them. One commit publishes the
+    * written rows, the grown DVs and the carried sidecars through
+    * [[commitRewriteCommuting]], the soft-deleted files joining the read
+    * set: a concurrent commit that removes one or grows its DVs makes
+    * the statement re-plan, so no row resurrects and no delete is lost.
+    *
+    * `writesRows = false` (a DELETE) skips the data write when no file
+    * goes copy-on-write; `noopUnmatched` returns None, committing
+    * nothing, when no target row changed. None also under a `txn`
+    * already covered.
+    */
+  private def rewriteRows(
+      spark: SparkSession, dir: String, base: Long, headEntry: LogEntry,
+      all: Seq[String], headDvs: Map[String, Seq[Long]],
+      schema: org.apache.spark.sql.types.StructType, op: String,
+      rows: Set[String] => DataFrame,
+      writesRows: Boolean = true, noopUnmatched: Boolean = false,
+      commuteCheck: Long => Boolean = _ => true,
+      txn: Option[(String, Long)] = None,
+      pairKeys: Seq[String] = Nil): Option[Long] = {
+    import org.apache.spark.sql.functions.col
+    val carry = Seq("__dv_rel", "__dv_idx")
+    def kept(df: DataFrame) = df.filter(col(graft.ops.Upsert.KeepCol))
+      .select(schema.fieldNames.toSeq.map(col): _*)
+      .transform(regenerated(headEntry.props, _))
+    // checkpointed: the statement's plan runs once (its shuffle stages
+    // now, its result with the position collect below), and the
+    // constraint check and the write read the stored result under the
+    // partitioning adaptive execution chose for it
+    val changedAt = rows(Set.empty).localCheckpoint(eager = false)
+    val (cow, mor, softDeletes, fresh) = try {
+      val positions: Seq[(String, Long)] = changedAt
+        .filter(col("__dv_rel").isNotNull).select(carry.map(col): _*)
+        .limit((MoRMatchCap + 1).toInt).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1)))
+      if (noopUnmatched && positions.isEmpty) return None
+      requireSatisfied(kept(changedAt),
+        headEntry.constraints ++ identityChecks(headEntry.props))
+      val overCap = positions.size > MoRMatchCap
+      val changedKeys: Set[String] =
+        if (!overCap) positions.map(_._1).toSet
+        else changedAt.filter(col("__dv_rel").isNotNull).select("__dv_rel").distinct()
+          .collect().map(_.getString(0)).toSet
+      val changedFiles = all.filter(f => changedKeys(fileKey(f)))
+      val changedPerFile = positions.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      val physical = physicalRowCounts(spark, dir, base, changedFiles)
+      def liveAfter(f: String): Long = physical(f) -
+        headDvs.getOrElse(fileKey(f), Nil).size - changedPerFile(fileKey(f))
+      val (cow, mor) = changedFiles.partition(f => overCap || 2 * liveAfter(f) < physical(f))
+      val cowKeys = cow.map(fileKey).toSet
+      val fresh =
+        if (cow.isEmpty && !writesRows) Nil
+        else writeDataFiles(toPhysicalFrame(
+          kept(if (cow.isEmpty) changedAt else rows(cowKeys)), Some(schema)), dir)
+      (cow, mor,
+        positions.filterNot { case (k, _) => cowKeys(k) }.groupMap(_._1)(_._2), fresh)
+    } finally changedAt.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
     val committed = commitRewriteCommuting(
-      spark, dir, base, "merge", outSchema.json, cow, fresh,
+      spark, dir, base, op, schema.json, cow, fresh,
       dvsFor = head => head ++ softDeletes.map { case (k, ps) =>
         k -> (head.getOrElse(k, Seq.empty) ++ ps) },
-      commuteCheck = addedDisjoint, txn = txn, pairKeys = keys, softDeleted = mor)
+      commuteCheck = commuteCheck, txn = txn, pairKeys = pairKeys, softDeleted = mor)
     committed.foreach(v => carrySidecars(spark, dir, base, v,
       filesAt(spark, dir, v).toSet -- fresh.toSet, fresh))
     committed
-  }
-
-  /** Merge-on-read DELETE (the Delta deletion-vector analog): instead
-    * of rewriting matched files ([[deleteWhere]]'s copy-on-write), the
-    * commit publishes the SAME file set plus deletion vectors — per
-    * file, the row positions now soft-deleted. Readers subtract them
-    * via a broadcast anti-join ([[applyDvs]]); [[compact]] materializes
-    * and purges them (Delta's REORG … APPLY (PURGE)). Write cost is one
-    * matched-row position scan + a log-sized commit, however many rows
-    * match — the right trade for SPARSE deletes (GDPR row erasure,
-    * point corrections) where copy-on-write would rewrite gigabytes to
-    * drop kilobytes; bulk deletes should stay copy-on-write, since DV
-    * size grows with matched rows and every subsequent read pays the
-    * anti-join. Pinned + carried like every other commit: DVs merge
-    * per file across commits, append/restore never resurrect
-    * soft-deleted rows, and the zone-map sidecar carries verbatim
-    * (file set unchanged; zones prune files, never rows).
-    */
-  /** Shared merge-on-read preamble of [[deleteWhereMoR]] /
-    * [[updateWhereMoR]]: DV-subtracted live scan of the zone-pruned
-    * candidate files with per-row (file, position) identity, the rows
-    * matching `cond`, and their positions collected under the match
-    * cap (counted BEFORE collecting — the cap must trip without ever
-    * materializing an unbounded match set on the driver). None when
-    * nothing can match or nothing does.
-    */
-  private def morMatched(
-      spark: SparkSession, dir: String, base: Long,
-      cond: org.apache.spark.sql.Column,
-      zoneHint: Option[(String, Long, Long)],
-      maxMatched: Long, opNoun: String, cowHint: String)
-      : Option[(DataFrame, Map[String, Seq[Long]])] = {
-    import org.apache.spark.sql.functions.{broadcast, col, collect_list, input_file_name}
-    import spark.implicits._
-    val headEntry = entryAt(spark, dir, base)
-    val all = resolveFiles(spark, dir, base, Some(headEntry))
-    if (all.isEmpty) return None
-    val candidates = zoneHint match {
-      case Some((zc, lo, hi)) => prunedFiles(spark, dir, base, zc, lo, hi)
-      case None => all
-    }
-    if (candidates.isEmpty) return None
-    val headDvs = dvsOf(spark, dir, headEntry)
-    val scan = readRaw(spark, dir, schemaOf(headEntry), candidates)
-      .withColumn("__dv_rel", scanFileKey(input_file_name(), candidates))
-      .withColumn("__dv_idx", col("_metadata.row_index"))
-    val live =
-      if (headDvs.isEmpty) scan
-      else scan.join(
-        broadcast(headDvs.toSeq
-          .flatMap { case (f, is) => is.map(i => (f, i)) }
-          .toDF("__dv_rel", "__dv_idx")),
-        Seq("__dv_rel", "__dv_idx"), "left_anti")
-    val hit = live.filter(cond)
-    val nMatched = hit.count()
-    if (nMatched == 0) return None
-    require(nMatched <= maxMatched,
-      s"merge-on-read $opNoun at $dir matched $nMatched rows (cap $maxMatched): " +
-        s"deletion vectors are for SPARSE ${opNoun.toLowerCase}s — use the " +
-        s"copy-on-write path ($cowHint), which rewrites matched files instead " +
-        "of accumulating per-row positions in the log")
-    val matched = hit
-      .groupBy("__dv_rel").agg(collect_list("__dv_idx").as("idxs"))
-      .as[(String, Seq[Long])].collect().toMap
-    Some((hit, matched))
-  }
-
-  def deleteWhereMoR(
-      spark: SparkSession, dir: String, cond: org.apache.spark.sql.Column,
-      zoneHint: Option[(String, Long, Long)] = None,
-      maxMatched: Long = MoRMatchCap): Option[Long] = {
-    val base = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $dir"))
-    morMatched(spark, dir, base, cond, zoneHint, maxMatched,
-      "DELETE", "deleteWhere").map { case (_, matched) =>
-      val all = filesAt(spark, dir, base)
-      val v = commitPinned(spark, dir, base, "delete-mor",
-        schemaAt(spark, dir, base).map(_.json).getOrElse(
-          new org.apache.spark.sql.types.StructType().json),
-        all,
-        head => (head.keySet ++ matched.keySet).map { f =>
-          f -> (head.getOrElse(f, Seq.empty) ++ matched.getOrElse(f, Seq.empty))
-        }.toMap).get
-      carrySidecars(spark, dir, base, v, kept = all.toSet, fresh = Seq.empty)
-      v
-    }
-  }
-
-  /** Merge-on-read UPDATE: soft-deletes the matched rows' positions
-    * ([[deleteWhereMoR]]'s DV mechanics) and appends their updated
-    * copies — ONE commit, no matched-file rewrite. Same sparse-update
-    * trade and carry/purge lifecycle as MoR DELETE; `set` semantics
-    * (cast back to the column's type, unknown columns refused) match
-    * [[updateWhere]].
-    */
-  def updateWhereMoR(
-      spark: SparkSession, dir: String, cond: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
-      zoneHint: Option[(String, Long, Long)] = None,
-      maxMatched: Long = MoRMatchCap): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
-    val base = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $dir"))
-    morMatched(spark, dir, base, cond, zoneHint, maxMatched,
-      "UPDATE", "updateWhere").map { case (hit, matched) =>
-      val headEntry = entryAt(spark, dir, base)
-      val all = resolveFiles(spark, dir, base, Some(headEntry))
-      val logSchema = schemaOf(headEntry)
-      val dataCols = hit.columns.filterNot(_.startsWith("__dv_")).toSeq
-      val unknown = set.keySet -- dataCols
-      require(unknown.isEmpty,
-        s"SET references unknown columns: ${unknown.mkString(", ")}")
-      requireNoGeneratedSet(spark, dir, base, set.keys, "UPDATE")
-      val fieldType = hit.schema.fields.map(f => f.name -> f.dataType).toMap
-      val updated = regenerated(headEntry.props,
-        hit.select(dataCols.map { c =>
-          set.get(c).map(_.cast(fieldType(c)).as(c)).getOrElse(col(c))
-        }: _*))
-      requireSatisfied(updated, headEntry.constraints ++ identityChecks(headEntry.props))
-      val fresh = writeDataFiles(updated, dir)
-      val v = commitPinned(spark, dir, base, "update-mor",
-        logSchema.map(_.json).getOrElse(updated.schema.json),
-        all ++ fresh,
-        head => (head.keySet ++ matched.keySet).map { f =>
-          f -> (head.getOrElse(f, Seq.empty) ++ matched.getOrElse(f, Seq.empty))
-        }.toMap).get
-      carrySidecars(spark, dir, base, v, kept = all.toSet, fresh = fresh)
-      v
-    }
-  }
-
-  /** Shared copy-on-write core of DELETE/UPDATE: find the files of the
-    * current snapshot containing matching rows (one pass collecting
-    * distinct file names — log-sized, the same touched-file discovery
-    * Delta's MERGE runs), rewrite ONLY those through `rewrite`, and
-    * publish kept + rewritten files pinned to the planned version.
-    * Zone-map sidecars carry across so data skipping survives the
-    * commit.
-    */
-  private def rewriteMatching(
-      spark: SparkSession, dir: String, op: String,
-      cond: org.apache.spark.sql.Column,
-      zoneHint: Option[(String, Long, Long)],
-      pairKeys: org.apache.spark.sql.types.StructType => Seq[String] = _ => Nil)(
-      rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Option[Long] = {
-    import org.apache.spark.sql.functions.input_file_name
-    val base = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $dir"))
-    val all = filesAt(spark, dir, base)
-    if (all.isEmpty) return None
-    val candidates = zoneHint match {
-      case Some((zc, lo, hi)) => prunedFiles(spark, dir, base, zc, lo, hi)
-      case None => all
-    }
-    if (candidates.isEmpty) return None
-    // read under the LOG's schema, not the touched files' footers: after
-    // a mergeSchema evolution the touched files may predate a widened
-    // column — the footer schema would make `cond`/`set` references to
-    // it fail, the rewrite output narrow, and (worst) the commit would
-    // re-publish the NARROW schema as the table's, silently dropping
-    // the evolution for every file in the snapshot
-    val logSchema = schemaAt(spark, dir, base)
-    // DV-aware: rows already soft-deleted by a merge-on-read DELETE
-    // must neither re-match nor be RESURRECTED into the rewritten files
-    val headDvs = dvsAt(spark, dir, base)
-    def readFiles(files: Seq[String]) =
-      applyDvs(spark, readRaw(spark, dir, logSchema, files), headDvs)
-    val nameOf = scannedName(dir, candidates)
-    val matched = readFiles(candidates)
-      .filter(cond)
-      .select(input_file_name().as("f")).distinct()
-      .collect().flatMap(r => nameOf(r.getString(0))).toSet
-    val touched = candidates.filter(matched)
-    if (touched.isEmpty) return None
-    val touchedDf = readFiles(touched)
-    // GENERATED columns regenerate over the rewrite output (an UPDATE
-    // to a generation dependency recomputes; a DELETE's row subset
-    // recomputes to the identical values — a no-op by determinism)
-    val headEntry = entryAt(spark, dir, base)
-    val out = regenerated(headEntry.props, rewrite(touchedDf, cond))
-    // an UPDATE's SET can introduce constraint violations (a DELETE's
-    // row subset cannot, but the shared check keeps the contract in
-    // one place at matched-file cost)
-    requireSatisfied(out, headEntry.constraints ++ identityChecks(headEntry.props))
-    val fresh = writeDataFiles(toPhysicalFrame(out, logSchema), dir)
-    val schemaJson = logSchema.map(_.json).getOrElse(touchedDf.schema.json)
-    val v = commitRewriteCommuting(
-      spark, dir, base, op, schemaJson, touched, fresh,
-      pairKeys = pairKeys(logSchema.getOrElse(touchedDf.schema))).get
-    // kept set read back from the PUBLISHED snapshot: a commute-retry
-    // may have re-based onto concurrently appended files
-    carrySidecars(spark, dir, base, v,
-      filesAt(spark, dir, v).toSet -- fresh.toSet, fresh)
-    Some(v)
   }
 
   /** The zone sidecar JSON anchoring `baseV`: the nearest zoned

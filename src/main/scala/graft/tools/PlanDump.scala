@@ -62,6 +62,11 @@ object PlanDump {
         ()
       }
     })
+    // a drain that times out leaves a marker in the stage log: the
+    // attribution after it may miss late stages, the run goes on
+    def drain(): Unit =
+      if (!org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext))
+        stageLog.add("-- listener bus drain timed out --")
     names.foreach { name =>
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       spark.catalog.clearCache()
@@ -76,7 +81,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         // fixture-build stages vs measured-noop stages are different
         // questions; drain the async bus so the marker lands between them
-        org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+        drain()
         stageLog.add(s"-- build/measure boundary ($name) --")
         df.write.format("noop").mode("overwrite").save()
         val tDone = System.nanoTime()
@@ -87,7 +92,7 @@ object PlanDump {
         val stages = {
           // drain, not sleep: the fixed 200 ms nap raced late-completing
           // stages out of the attribution
-          org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
+          drain()
           import scala.jdk.CollectionConverters._
           stageLog.asScala.mkString("\n")
         }

@@ -8,5 +8,11 @@ import org.apache.spark.SparkContext
   * out of the attribution (r16 ADVICE finding).
   */
 object ListenerBusDrain {
-  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** Waits for the bus to drain (Spark's 10 s bound); false when it
+    * timed out, so a caller can mark its log as possibly incomplete
+    * instead of aborting the run.
+    */
+  def waitUntilEmpty(sc: SparkContext): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

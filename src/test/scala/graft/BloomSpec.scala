@@ -72,7 +72,7 @@ class BloomSpec extends SparkSpec {
   test("DV-deleted rows never resurface through a bloom-pruned read") {
     val dir = mkTable("bl_dv")
     Versioned.buildBloom(spark, dir, Seq("key"), itemsPerFile = 1000L) // at v4
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 30L) // v5: DV
+    Versioned.deleteWhere(spark, dir, col("id") === 30L) // v5: DV
     // the bloom (built from raw bytes) still routes to the file; the
     // DV subtraction must erase the row
     assert(Versioned.readWhereEquals(spark, dir, 5L, "key", "k-30").count() == 0)

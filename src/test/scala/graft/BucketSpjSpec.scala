@@ -106,7 +106,8 @@ class BucketSpjSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.db.a SELECT * FROM spj_src_r")
     spark.sql(s"INSERT INTO $cat.db.b SELECT k, v AS w FROM spj_src_r")
     val aDir = s"$wh/db/a"
-    // a row-level UPDATE rewrites touched files WITHOUT bucket tags
+    // a row-level UPDATE writes its new versions WITHOUT bucket tags
+    // and soft-deletes the old ones with deletion vectors
     spark.sql(s"UPDATE $cat.db.a SET v = v + 1 WHERE k < 50")
     val head = Versioned.currentVersion(spark, aDir).get
     assert(Versioned.filesAt(spark, aDir, head)
@@ -120,14 +121,16 @@ class BucketSpjSpec extends SparkSpec {
       assert(j1.head().getLong(0) == expected)
       assert(j1.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
         "untagged files must disable the co-partitioning report")
-      // rebucket rewrites ONLY the untagged files and re-tags them
-      val untagged = Versioned.filesAt(spark, aDir, head)
-        .filter(f => Versioned.bucketOfFile(f).isEmpty).toSet
+      // rebucket rewrites ONLY the untagged and DV-carrying files and
+      // re-tags them
+      val dvd = Versioned.dvsAt(spark, aDir, head).keySet
+      val drifted = Versioned.filesAt(spark, aDir, head)
+        .filter(f => Versioned.bucketOfFile(f).isEmpty || dvd(Versioned.fileKey(f))).toSet
       assert(Versioned.rebucket(spark, aDir).isDefined)
       val after = Versioned.currentVersion(spark, aDir).get
       val files = Versioned.filesAt(spark, aDir, after)
       assert(files.forall(f => Versioned.bucketOfFile(f).isDefined))
-      assert(Versioned.filesAt(spark, aDir, head).filterNot(untagged)
+      assert(Versioned.filesAt(spark, aDir, head).filterNot(drifted)
         .forall(files.contains), "tagged files must carry, not rewrite")
       assert(Versioned.rebucket(spark, aDir).isEmpty, "idempotent when tagged")
       val j2 = spark.sql(q)

@@ -103,7 +103,7 @@ class CloneSpec extends SparkSpec {
     val src = tmpDir("cl_dv_src")
     val dst = tmpDir("cl_dv_dst")
     Versioned.append((1 to 10).map(i => (i, i)).toDF("id", "x"), src)
-    Versioned.deleteWhereMoR(spark, src, col("id") === 4)
+    Versioned.deleteWhere(spark, src, col("id") === 4)
     Versioned.cloneTable(spark, src, dst)
     assert(Versioned.read(spark, dst).select("id").as[Int].collect().toSet ==
       (1 to 10).toSet - 4)
@@ -254,8 +254,8 @@ class CloneSpec extends SparkSpec {
 
   test("deep clone carries DVs and time-travel version; DDL forms work") {
     val src = tmpDir("cl_deep2_src")
-    Versioned.append((1 to 8).map(i => (i.toLong, s"r$i")).toDF("id", "s"), src) // v1
-    Versioned.deleteWhereMoR(spark, src, col("id") <= 2L)                        // v2 (DVs)
+    Versioned.append((1 to 8).map(i => (i.toLong, s"r$i")).toDF("id", "s").coalesce(1), src) // v1
+    Versioned.deleteWhere(spark, src, col("id") <= 2L)                        // v2 (DVs)
     Versioned.append(Seq((9L, "r9")).toDF("id", "s"), src)                       // v3
     // deep clone of v2: DV-filtered content at that snapshot
     val dst = tmpDir("cl_deep2_dst")

@@ -110,7 +110,7 @@ class CrashFaultSpec extends SparkSpec {
                 Map("s" -> concat(col("s"), lit("u")))); () },
               m => m.map { case (k, v) => k -> (if (k % 3 == 0) v + "u" else v) })
           case 2 =>
-            (() => { Versioned.deleteWhereMoR(spark, dir, col("id") % 4 === 1); () },
+            (() => { Versioned.deleteWhere(spark, dir, col("id") % 4 === 1); () },
               m => m.filter { case (k, _) => k % 4 != 1 })
           case 3 =>
             val upd = model.keys.minOption.map(k => (k, s"m$k")).toSeq

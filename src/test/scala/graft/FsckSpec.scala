@@ -54,7 +54,7 @@ class FsckSpec extends SparkSpec {
     Versioned.append(Seq((1L, "a"), (2L, "a")).toDF("id", "k").coalesce(1), dir)
     Versioned.append(Seq((3L, "b")).toDF("id", "k").coalesce(1), dir)
     // soft-delete one row of the 'a' file, then kill that file
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L)
+    Versioned.deleteWhere(spark, dir, col("id") === 2L)
     killFileOf(dir, col("k") === "a")
     Versioned.fsckRepair(spark, dir)
     val head = Versioned.currentVersion(spark, dir).get

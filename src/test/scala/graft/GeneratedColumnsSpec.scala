@@ -95,12 +95,12 @@ class GeneratedColumnsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("GENERATED"))
     // the MoR update path enforces and regenerates identically
-    Versioned.updateWhereMoR(spark, dir, col("id") === 2L,
+    Versioned.updateWhere(spark, dir, col("id") === 2L,
       Map("amount" -> lit(8L)))                                        // v4
     assert(Versioned.read(spark, dir).as[(Long, Long, Long)].collect().toSet ==
       Set((1L, 50L, 100L), (2L, 8L, 16L)))
     intercept[IllegalArgumentException] {
-      Versioned.updateWhereMoR(spark, dir, col("id") === 1L,
+      Versioned.updateWhere(spark, dir, col("id") === 1L,
         Map("total" -> lit(0L)))
     }
   }

@@ -139,7 +139,7 @@ class LogCodecSpec extends SparkSpec {
       stage(dir, s"ext/$n.parquet", Seq(0L, 100L, 200L, 300L).map(o => (10L + i + o, n)))
     }
     assert(Versioned.addFiles(spark, dir, staged) == 2L)
-    Versioned.deleteWhereMoR(spark, dir, col("id").between(10L, 14L))            // v3
+    Versioned.deleteWhere(spark, dir, col("id").between(10L, 14L))            // v3
     assert(Versioned.dvsAt(spark, dir, 3L).keySet == staged.map(Versioned.fileKey).toSet)
     assert(Versioned.read(spark, dir).count() == 16)
     Versioned.merge(spark, dir, (110L to 114L).map(i => (i, "upd")).toDF("id", "s"),

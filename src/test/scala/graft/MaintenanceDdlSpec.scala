@@ -68,7 +68,7 @@ class MaintenanceDdlSpec extends SparkSpec {
   test("DESCRIBE DETAIL summarizes the current snapshot; a table named detail delegates") {
     val dir = tmpDir("ddl_detail")
     Versioned.append((1L to 7L).toDF("id").withColumn("s", lit("x")), dir) // v1
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 3L)                 // v2 (DV)
+    Versioned.deleteWhere(spark, dir, col("id") === 3L)                 // v2 (DV)
     Versioned.addConstraint(spark, dir, "pos_id", "id > 0")               // v3
     Versioned.setProperties(spark, dir,                                   // v4
       Map(Versioned.ClusterByKey -> "id"))

@@ -48,7 +48,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors refuse; REORG APPLY (PURGE) makes the table manifest-able again") {
     val dir = tmpDir("mf_dv")
     Versioned.append((1L to 10L).map(i => (i, s"r$i")).toDF("id", "s"), dir) // v1
-    Versioned.deleteWhereMoR(spark, dir, col("id") <= 3L) // v2: DVs
+    Versioned.deleteWhere(spark, dir, col("id") <= 3L) // v2: DVs
     val e = intercept[IllegalArgumentException] {
       Versioned.generateManifest(spark, dir)
     }

@@ -100,7 +100,7 @@ class MergeFullSpec extends SparkSpec {
     Versioned.append(tgt.filter(col("k") % 2 === 0), dir) // v1
     Versioned.append(tgt.filter(col("k") % 2 === 1), dir) // v2
     // soft-delete k=4 -> it must NOT be visible to by-source clauses
-    Versioned.deleteWhereMoR(spark, dir, col("k") === 4L)  // v3
+    Versioned.deleteWhere(spark, dir, col("k") === 4L)  // v3
     Versioned.mergeFull(spark, dir, src, Seq("k"),
       matched = Seq(
         Update(Some(Upsert.scol("ver") > Upsert.tcol("ver"))),

@@ -76,7 +76,7 @@ class MetaAggSpec extends SparkSpec {
     val dir = tmpDir("ma_dv")
     Versioned.append((1L to 100L).toDF("id").coalesce(1), dir)
     Versioned.writeZoneMaps(spark, dir, 1L, Seq("id"))
-    val v = Versioned.deleteWhereMoR(spark, dir, col("id") <= 10L).get
+    val v = Versioned.deleteWhere(spark, dir, col("id") <= 10L).get
     assert(Versioned.metaRowCountAt(spark, dir, v).contains(90L),
       "metaRowCountAt must subtract DV cardinality")
     assert(Versioned.metaMinMaxLongAt(spark, dir, v, "id").isEmpty,

@@ -39,7 +39,7 @@ class ProtocolFeatureSpec extends SparkSpec {
   test("a MoR delete stamps deletion-vectors; carried forward while DVs live") {
     val dir = tmpDir("proto_dv")
     Versioned.append((1 to 10).map(i => (i, s"r$i")).toDF("id", "s"), dir)
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 3) // v2: writes DVs
+    Versioned.deleteWhere(spark, dir, col("id") === 3) // v2: writes DVs
     assert(entryJson(dir, 2L).contains("\"readerfeatures\":[\"deletion-vectors\"]"))
     Versioned.append(Seq((11, "x")).toDF("id", "s"), dir) // v3 carries the DVs
     assert(entryJson(dir, 3L).contains("deletion-vectors"))

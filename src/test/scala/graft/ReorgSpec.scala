@@ -26,7 +26,7 @@ class ReorgSpec extends SparkSpec {
     val v1Files = Versioned.filesAt(spark, dir, 1L).toSet
     val v2Only = Versioned.filesAt(spark, dir, 2L).toSet -- v1Files
     // soft-delete rows that live only in v1's files
-    assert(Versioned.deleteWhereMoR(spark, dir, col("id") <= 2).contains(3L))
+    assert(Versioned.deleteWhere(spark, dir, col("id") <= 2).contains(3L))
     assert(Versioned.dvsAt(spark, dir, 3L).nonEmpty)
     val v = Versioned.reorgPurge(spark, dir)
     assert(v.contains(4L))
@@ -97,8 +97,8 @@ class ReorgSpec extends SparkSpec {
 
   test("reorg classifies as skippable maintenance for streams and CDF") {
     val dir = tmpDir("reorg_class")
-    Versioned.append((1 to 5).map(i => (i.toLong, i * 10L)).toDF("id", "x"), dir) // v1
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 1L)                        // v2
+    Versioned.append((1 to 5).map(i => (i.toLong, i * 10L)).toDF("id", "x").coalesce(1), dir) // v1
+    Versioned.deleteWhere(spark, dir, col("id") === 1L)                        // v2
     Versioned.reorgPurge(spark, dir)                                              // v3
     Versioned.append(Seq((6L, 60L)).toDF("id", "x"), dir)                         // v4
     // the (v2, v3] window holds only the reorg: row-preserving, and the
@@ -114,8 +114,8 @@ class ReorgSpec extends SparkSpec {
 
   test("REORG TABLE ... APPLY (PURGE) DDL; malformed REORG refused loudly") {
     val dir = tmpDir("reorg_ddl")
-    Versioned.append((1 to 4).map(i => (i.toLong, s"r$i")).toDF("id", "s"), dir) // v1
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L)                       // v2
+    Versioned.append((1 to 4).map(i => (i.toLong, s"r$i")).toDF("id", "s").coalesce(1), dir) // v1
+    Versioned.deleteWhere(spark, dir, col("id") === 2L)                       // v2
     val v = spark.sql(s"REORG TABLE ${pathId(dir)} APPLY (PURGE)").as[Long].head()
     assert(v == 3L)
     assert(Versioned.opAt(spark, dir, 3L) == "reorg")

@@ -92,7 +92,7 @@ class ReplaceWhereSpec extends SparkSpec {
     Versioned.overwrite(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
       .toDF("id", "k", "v"), dir)
     // MoR delete leaves a DV on the one data file
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 3L)
+    Versioned.deleteWhere(spark, dir, col("id") === 3L)
     Versioned.replaceWhere(spark, dir,
       Seq((9L, "a", 99L)).toDF("id", "k", "v"), col("k") === "a")
     // id=3 (soft-deleted, k=b) must NOT come back through the remainder

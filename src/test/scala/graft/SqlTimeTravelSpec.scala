@@ -52,7 +52,7 @@ class SqlTimeTravelSpec extends SparkSpec {
   test("format reader subtracts deletion vectors on MoR snapshots") {
     val dir = tmpDir("sqltt_dv")
     Versioned.append((1L to 20L).map(i => (i, s"r$i")).toDF("id", "s"), dir)
-    Versioned.deleteWhereMoR(spark, dir, col("id") % 5 === 0L)
+    Versioned.deleteWhere(spark, dir, col("id") % 5 === 0L)
     val got = spark.read.format("graft-versioned").load(dir)
       .select("id").as[Long].collect().toSet
     assert(got == (1L to 20L).filterNot(_ % 5 == 0).toSet)

@@ -323,7 +323,9 @@ class VersionedSpec extends SparkSpec {
     val dir = tmpDir("vt_delete")
     // two appends → two data-file sets; the delete matches only the second
     Versioned.append(Seq((1L, "keep"), (2L, "keep")).toDF("id", "s"), dir)
-    Versioned.append(Seq((3L, "keep"), (4L, "drop")).toDF("id", "s"), dir)
+    // one file, two of its three rows deleted: past half, so copy-on-write
+    Versioned.append(Seq((3L, "keep"), (4L, "drop"), (5L, "drop")).toDF("id", "s")
+      .coalesce(1), dir)
     val beforeFiles = Versioned.filesAt(spark, dir, 2L)
 
     import org.apache.spark.sql.functions.col
@@ -337,8 +339,9 @@ class VersionedSpec extends SparkSpec {
     assert(firstAppend.forall(afterFiles.contains),
       "files without matches must not be rewritten")
     assert(!beforeFiles.forall(afterFiles.contains), "the matched file must be replaced")
-    // time travel still sees the pre-delete row
-    assert(Versioned.readAt(spark, dir, 2L).count() == 4)
+    assert(Versioned.dvsAt(spark, dir, 3L).isEmpty, "a rewritten file carries no DV")
+    // time travel still sees the pre-delete rows
+    assert(Versioned.readAt(spark, dir, 2L).count() == 5)
     // NULL predicate rows are kept (SQL DELETE semantics), and a
     // no-match delete commits nothing
     assert(Versioned.deleteWhere(spark, dir, col("s") === "absent").isEmpty)
@@ -419,62 +422,66 @@ class VersionedSpec extends SparkSpec {
 
   test("a read subtracts a small DV set as a filter and a large one as a join, alike") {
     val dir = tmpDir("vt_dv_forms")
-    Versioned.append(spark.range(10000).toDF("id").coalesce(2), dir) // v1
+    Versioned.append(spark.range(20000).toDF("id").coalesce(2), dir) // v1
     def ids = Versioned.read(spark, dir).as[Long].collect().toSet
-    // 10 positions: under the filter bound
-    Versioned.deleteWhereMoR(spark, dir, col("id") % 1000 === 7L)
-    assert(ids == (0L until 10000L).filterNot(_ % 1000 == 7).toSet)
-    // +5,000 positions: past it, the broadcast anti-join
-    Versioned.deleteWhereMoR(spark, dir, col("id") % 2 === 0L)
-    val live = (0L until 10000L).filterNot(i => i % 1000 == 7 || i % 2 == 0).toSet
+    // 20 positions: under the filter bound
+    Versioned.deleteWhere(spark, dir, col("id") % 1000 === 7L)
+    assert(ids == (0L until 20000L).filterNot(_ % 1000 == 7).toSet)
+    // +5,000 positions: past it, the broadcast anti-join (a quarter of
+    // each file, so both keep their place under deletion vectors)
+    Versioned.deleteWhere(spark, dir, col("id") % 4 === 0L)
+    val live = (0L until 20000L).filterNot(i => i % 1000 == 7 || i % 4 == 0).toSet
     assert(Versioned.dvsAt(spark, dir, 3L).values.map(_.size).sum > 4096)
     assert(ids == live)
     // the change feed reads the newly soft-deleted rows by position
     assert(Versioned.changes(spark, dir, 2L, 3L).select("id").as[Long].collect().toSet ==
-      (0L until 10000L).filter(i => i % 2 == 0 && i % 1000 != 7).toSet)
+      (0L until 20000L).filter(i => i % 4 == 0 && i % 1000 != 7).toSet)
   }
 
   test("merge-on-read DELETE: same files, rows gone, compact purges the DVs") {
     val dir = tmpDir("vt_dv")
-    Versioned.append(Seq((1L, "a"), (2L, "drop"), (3L, "c")).toDF("id", "s"), dir) // v1
-    Versioned.append(Seq((4L, "drop")).toDF("id", "s"), dir)                       // v2
+    // one file per append, each left at least half live by the deletes
+    Versioned.append(Seq((1L, "a"), (2L, "drop"), (3L, "c"), (6L, "f"), (7L, "g"))
+      .toDF("id", "s").coalesce(1), dir)                                           // v1
+    Versioned.append(Seq((4L, "drop"), (8L, "h")).toDF("id", "s").coalesce(1), dir) // v2
     val before = Versioned.filesAt(spark, dir, 2L)
 
-    val v = Versioned.deleteWhereMoR(spark, dir, col("s") === "drop")
+    val v = Versioned.deleteWhere(spark, dir, col("s") === "drop")
     assert(v.contains(3L))
     // merge-on-read: NO file was rewritten — the commit is log-sized
     assert(Versioned.filesAt(spark, dir, 3L) == before)
     assert(Versioned.dvsAt(spark, dir, 3L).values.map(_.size).sum == 2)
     assert(Versioned.read(spark, dir).select("id").as[Long].collect().sorted
-      .toSeq == Seq(1L, 3L))
+      .toSeq == Seq(1L, 3L, 6L, 7L, 8L))
     // time travel still sees the soft-deleted rows
-    assert(Versioned.readAt(spark, dir, 2L).count() == 4)
+    assert(Versioned.readAt(spark, dir, 2L).count() == 7)
     // CDF across the MoR delete reports exactly the removed rows
     val ch = Versioned.changes(spark, dir, 2L, 3L)
     assert(ch.filter(col("_change_type") === "delete")
       .select("id").as[Long].collect().sorted.toSeq == Seq(2L, 4L))
     // a second MoR delete merges into the carried DV set
-    assert(Versioned.deleteWhereMoR(spark, dir, col("id") === 1L).contains(4L))
-    assert(Versioned.read(spark, dir).select("id").as[Long].collect().toSeq ==
-      Seq(3L))
+    assert(Versioned.deleteWhere(spark, dir, col("id") === 1L).contains(4L))
+    assert(Versioned.filesAt(spark, dir, 4L) == before)
+    assert(Versioned.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(3L, 6L, 7L, 8L))
     // an append carries the DVs — soft-deleted rows stay deleted
     Versioned.append(Seq((5L, "e")).toDF("id", "s"), dir) // v5
     assert(Versioned.read(spark, dir).select("id").as[Long].collect().sorted
-      .toSeq == Seq(3L, 5L))
+      .toSeq == Seq(3L, 5L, 6L, 7L, 8L))
     // no-match MoR delete commits nothing
-    assert(Versioned.deleteWhereMoR(spark, dir, col("s") === "absent").isEmpty)
+    assert(Versioned.deleteWhere(spark, dir, col("s") === "absent").isEmpty)
     // compact materializes the subtraction and purges the DVs (REORG)
     val cv = Versioned.compact(spark, dir)
     assert(Versioned.dvsAt(spark, dir, cv).isEmpty)
     assert(Versioned.readAt(spark, dir, cv).select("id").as[Long].collect().sorted
-      .toSeq == Seq(3L, 5L))
+      .toSeq == Seq(3L, 5L, 6L, 7L, 8L))
   }
 
   test("copy-on-write rewrites after a MoR delete do not resurrect soft-deleted rows") {
     val dir = tmpDir("vt_dv_cow")
     Versioned.append(
       Seq((1L, "x"), (2L, "soft"), (3L, "hard")).toDF("id", "s"), dir)  // v1, one file
-    assert(Versioned.deleteWhereMoR(spark, dir, col("s") === "soft").contains(2L))
+    assert(Versioned.deleteWhere(spark, dir, col("s") === "soft").contains(2L))
     // the CoW delete rewrites the file the soft-deleted row lives in;
     // the rewritten file must NOT bring that row back
     assert(Versioned.deleteWhere(spark, dir, col("s") === "hard").contains(3L))
@@ -492,7 +499,7 @@ class VersionedSpec extends SparkSpec {
       spark.range(0, 100).withColumn("k", col("id")).repartitionByRange(4, col("k")),
       dir)
     Versioned.writeZoneMap(spark, dir, 1L, "k")
-    val v = Versioned.deleteWhereMoR(spark, dir, col("k").between(10L, 12L),
+    val v = Versioned.deleteWhere(spark, dir, col("k").between(10L, 12L),
       zoneHint = Some(("k", 10L, 12L)))
     assert(v.contains(2L))
     assert(Versioned.read(spark, dir).count() == 97)
@@ -505,9 +512,10 @@ class VersionedSpec extends SparkSpec {
 
   test("merge-on-read UPDATE soft-deletes the old row and appends the new copy") {
     val dir = tmpDir("vt_dv_update")
-    Versioned.append(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "s", "n"), dir)
+    Versioned.append(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "s", "n")
+      .coalesce(1), dir)                                    // one file, half updated
     val before = Versioned.filesAt(spark, dir, 1L)
-    val v = Versioned.updateWhereMoR(spark, dir, col("s") === "b",
+    val v = Versioned.updateWhere(spark, dir, col("s") === "b",
       Map("n" -> (col("n") + 5)))
     assert(v.contains(2L))
     // original files untouched; fresh updated-copies files added
@@ -519,7 +527,7 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.readAt(spark, dir, 1L)
       .filter(col("id") === 2L).select("n").as[Long].head() == 20L)
     intercept[IllegalArgumentException] {
-      Versioned.updateWhereMoR(spark, dir, col("id") === 1L, Map("nope" -> lit(1)))
+      Versioned.updateWhere(spark, dir, col("id") === 1L, Map("nope" -> lit(1)))
     }
     // compact materializes: DVs purged, values preserved
     val cv = Versioned.compact(spark, dir)
@@ -669,8 +677,8 @@ class VersionedSpec extends SparkSpec {
   test("MERGE after a MoR delete: soft-deleted keys re-insert fresh, never resurrect") {
     val dir = tmpDir("vt_merge_dv")
     Versioned.append(
-      Seq((1L, "keep", 1L), (2L, "soft", 2L)).toDF("id", "s", "n"), dir) // v1, one file
-    assert(Versioned.deleteWhereMoR(spark, dir, col("s") === "soft").contains(2L))
+      Seq((1L, "keep", 1L), (2L, "soft", 2L)).toDF("id", "s", "n").coalesce(1), dir) // v1, one file
+    assert(Versioned.deleteWhere(spark, dir, col("s") === "soft").contains(2L))
     val beforeFiles = Versioned.filesAt(spark, dir, 2L)
     // source re-presents the soft-deleted key 2 and adds key 3; neither
     // matches a LIVE row in the file, so the file is NOT touched and
@@ -724,7 +732,7 @@ class VersionedSpec extends SparkSpec {
     Versioned.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir2)  // v1, one file
     val files1 = Versioned.filesAt(spark, dir2, 1L)
     val schema2 = Versioned.read(spark, dir2).schema.json
-    Versioned.deleteWhereMoR(spark, dir2, col("id") === 2L)            // v2: DV on file
+    Versioned.deleteWhere(spark, dir2, col("id") === 2L)            // v2: DV on file
     intercept[Versioned.CommitRace] {
       Versioned.commitRewriteCommuting(
         spark, dir2, 1L, "delete", schema2, touched = files1, fresh = Seq.empty)
@@ -825,7 +833,7 @@ class VersionedSpec extends SparkSpec {
     }
     assert(ex2.getMessage.contains("n_positive"))
     val ex3 = intercept[IllegalArgumentException] {
-      Versioned.updateWhereMoR(spark, dir, col("id") === 1L, Map("n" -> lit(-1L)))
+      Versioned.updateWhere(spark, dir, col("id") === 1L, Map("n" -> lit(-1L)))
     }
     assert(ex3.getMessage.contains("n_positive"))
 
@@ -846,7 +854,7 @@ class VersionedSpec extends SparkSpec {
 
     // a constraint may carry any name, a log key's included: it
     // round-trips and leaves the snapshot's DVs alone
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 4L)
+    Versioned.deleteWhere(spark, dir, col("id") === 4L)
     val dv = Versioned.addConstraint(spark, dir, "dvfile", "id > 0")
     assert(Versioned.constraintsAt(spark, dir, dv) == Map("dvfile" -> "id > 0"))
     assert(Versioned.dvsAt(spark, dir, dv) == Versioned.dvsAt(spark, dir, dv - 1))
@@ -995,12 +1003,12 @@ class VersionedSpec extends SparkSpec {
     val dir2 = tmpDir("vt_mor_race_dv")
     Versioned.append((1L to 8L).map(i => (i, s"t$i")).toDF("id", "s").coalesce(1), dir2)
     Versioned.withLogStore(new InjectBeforeFirstPublish(() => {
-      Versioned.deleteWhereMoR(spark, dir2, col("id") === 3L); ()
+      Versioned.deleteWhere(spark, dir2, col("id") === 3L); ()
     })) {
       Versioned.mergeFull(spark, dir2, Seq((3L, "U3")).toDF("id", "s"), Seq("id"),
         matched = Seq(Update(None)), notMatched = Nil)
     }
-    assert(Versioned.opAt(spark, dir2, 2L) == "delete-mor", "the race did not happen")
+    assert(Versioned.opAt(spark, dir2, 2L) == "delete", "the race did not happen")
     assert(ids(dir2).sorted == (1L to 8L).filterNot(_ == 3L).map(i => (i, s"t$i")),
       s"got ${ids(dir2).sorted}")
   }
@@ -1052,28 +1060,66 @@ class VersionedSpec extends SparkSpec {
         "must have re-based, not dropped the other or failed")
   }
 
-  test("MoR delete/update refuse broad matches with copy-on-write guidance") {
-    val dir = tmpDir("vt_dv_cap")
-    Versioned.append((1L to 10L).map(i => (i, "x")).toDF("id", "s"), dir)
-    val ex = intercept[IllegalArgumentException] {
-      Versioned.deleteWhereMoR(spark, dir, col("id") <= 5L, maxMatched = 3L)
+  test("a DELETE/UPDATE leaving a file under half live rewrites it copy-on-write, with no DV") {
+    val dir = tmpDir("vt_dv_cow_rule")
+    Versioned.append((1L to 10L).map(i => (i, "x")).toDF("id", "s").coalesce(1), dir) // v1
+    val Seq(base) = Versioned.filesAt(spark, dir, 1L)
+    // 6 of 10 rows deleted: 4 would stay live → the file is rewritten
+    assert(Versioned.deleteWhere(spark, dir, col("id") <= 6L).contains(2L))
+    assert(!Versioned.filesAt(spark, dir, 2L).contains(base), "the file must be replaced")
+    assert(Versioned.dvsAt(spark, dir, 2L).isEmpty, "a rewritten file carries no DV")
+    assert(Versioned.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ==
+      (7L to 10L))
+    // an UPDATE soft-deletes its old versions too: 3 of 4 changed → rewrite
+    val Seq(rewritten) = Versioned.filesAt(spark, dir, 2L)
+    assert(Versioned.updateWhere(spark, dir, col("id") <= 9L,
+      Map("s" -> lit("y"))).contains(3L))
+    assert(!Versioned.filesAt(spark, dir, 3L).contains(rewritten))
+    assert(Versioned.dvsAt(spark, dir, 3L).isEmpty)
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
+      Set((7L, "y"), (8L, "y"), (9L, "y"), (10L, "x")))
+  }
+
+  test("a sparse UPDATE's change feed pairs its rows as update pre/postimages") {
+    val dir = tmpDir("vt_dv_update_cdf")
+    Versioned.append((1L to 10L).map(i => (i, "x", i * 10)).toDF("id", "s", "n")
+      .coalesce(1), dir)                                                    // v1
+    val Seq(base) = Versioned.filesAt(spark, dir, 1L)
+    assert(Versioned.updateWhere(spark, dir, col("id") === 4L,
+      Map("n" -> (col("n") + 1))).contains(2L))
+    assert(Versioned.filesAt(spark, dir, 2L).contains(base) &&
+      Versioned.dvsAt(spark, dir, 2L).values.map(_.size).sum == 1,
+      "a sparse UPDATE soft-deletes its old row")
+    val feed = Versioned.changesWithType(spark, dir, 1L, 2L)
+      .select("id", "n", "_change_type").as[(Long, Long, String)].collect().toSet
+    assert(feed == Set((4L, 40L, "update_preimage"), (4L, 41L, "update_postimage")))
+  }
+
+  test("a sparse DELETE or UPDATE racing a blind append re-bases and lands") {
+    def race(dir: String)(mutate: => Option[Long]): Unit = {
+      Versioned.append((1L to 8L).map(i => (i, "x")).toDF("id", "s").coalesce(1), dir)
+      Versioned.withLogStore(new InjectBeforeFirstPublish(() => {
+        Versioned.append(Seq((9L, "x")).toDF("id", "s"), dir); ()
+      }))(assert(mutate.contains(3L)))
+      assert(Versioned.opAt(spark, dir, 2L) == "append", "the race did not happen")
+      assert(Versioned.dvsAt(spark, dir, 3L).values.map(_.size).sum == 1)
     }
-    assert(ex.getMessage.contains("copy-on-write") && ex.getMessage.contains("cap"))
-    val ex2 = intercept[IllegalArgumentException] {
-      Versioned.updateWhereMoR(spark, dir, col("id") <= 5L,
-        Map("s" -> lit("y")), maxMatched = 3L)
-    }
-    assert(ex2.getMessage.contains("copy-on-write"))
-    // nothing was committed by the refused mutations
-    assert(Versioned.versions(spark, dir) == Seq(1L))
-    assert(Versioned.read(spark, dir).count() == 10)
+    val del = tmpDir("vt_dv_race_delete")
+    race(del)(Versioned.deleteWhere(spark, del, col("id") === 3L))
+    assert(Versioned.read(spark, del).select("id").as[Long].collect().sorted.toSeq ==
+      ((1L to 9L).filterNot(_ == 3L)))
+    val upd = tmpDir("vt_dv_race_update")
+    race(upd)(Versioned.updateWhere(spark, upd, col("id") === 3L, Map("s" -> lit("y"))))
+    assert(Versioned.read(spark, upd).as[(Long, String)].collect().toSet ==
+      (1L to 9L).map(i => (i, if (i == 3L) "y" else "x")).toSet)
   }
 
   test("oversized DV sets spill to a sidecar; commit JSON stays bounded across commits") {
     val dir = tmpDir("vt_dv_spill")
-    val n = Versioned.DvInlineMax + 476 // 1500 rows, DV of 1100 > inline max
-    Versioned.append((1L to n.toLong).map(i => (i, "x")).toDF("id", "s"), dir)
-    assert(Versioned.deleteWhereMoR(spark, dir, col("id") <= 1100L).contains(2L))
+    // 3000 rows in one file: a DV of 1100 > inline max leaves it over half live
+    val n = Versioned.DvInlineMax + 1976
+    Versioned.append((1L to n.toLong).map(i => (i, "x")).toDF("id", "s").coalesce(1), dir)
+    assert(Versioned.deleteWhere(spark, dir, col("id") <= 1100L).contains(2L))
     // every live row survives, every deleted row is gone
     assert(Versioned.read(spark, dir).count() == n - 1100L)
     assert(Versioned.dvsAt(spark, dir, 2L).values.map(_.size).sum == 1100)
@@ -1105,7 +1151,7 @@ class VersionedSpec extends SparkSpec {
     val bigFiles = Versioned.filesAt(spark, dir, 1L)
     // soft-delete one row living in a SMALL file: the bin-pack must
     // materialize the DV, not resurrect the row
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 10001L)
+    Versioned.deleteWhere(spark, dir, col("id") === 10001L)
     val before = Versioned.read(spark, dir).count()
 
     // threshold sits between the tail files and the 1000-row file
@@ -1127,9 +1173,9 @@ class VersionedSpec extends SparkSpec {
 
   test("detail summarizes the head snapshot from the log and file metadata alone") {
     val dir = tmpDir("vt_detail")
-    Versioned.append(Seq((1L, "a", 5L), (2L, "b", 6L)).toDF("id", "s", "n"), dir)
+    Versioned.append(Seq((1L, "a", 5L), (2L, "b", 6L)).toDF("id", "s", "n").coalesce(1), dir)
     Versioned.addConstraint(spark, dir, "n_positive", "n > 0")
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 1L)
+    Versioned.deleteWhere(spark, dir, col("id") === 1L)
     val d = Versioned.detail(spark, dir).collect()(0)
     assert(d.getAs[Long]("version") == 3L)
     assert(d.getAs[Long]("n_files") == Versioned.filesAt(spark, dir, 3L).size)
@@ -1198,9 +1244,9 @@ class VersionedSpec extends SparkSpec {
 
   test("vacuum sweeps stale commit tmps and orphaned DV sidecars, keeps referenced ones") {
     val dir = tmpDir("vt_vac_tmp")
-    val n = Versioned.DvInlineMax + 476
-    Versioned.append((1L to n.toLong).map(i => (i, "x")).toDF("id", "s"), dir)
-    Versioned.deleteWhereMoR(spark, dir, col("id") <= 1100L) // v2 spills a DV sidecar
+    val n = Versioned.DvInlineMax + 1976
+    Versioned.append((1L to n.toLong).map(i => (i, "x")).toDF("id", "s").coalesce(1), dir)
+    Versioned.deleteWhere(spark, dir, col("id") <= 1100L) // v2 spills a DV sidecar
     val log = new java.io.File(s"$dir/_graft_log")
     val referenced = log.listFiles().map(_.getName)
       .filter(nm => nm.startsWith("dv-") && nm.endsWith(".json")).toSet
@@ -1543,7 +1589,7 @@ class VersionedSpec extends SparkSpec {
       .toDF("id", "s").repartition(2), dir)
     Versioned.append((1L to 100L).filter(_ % 2 == 1).map(i => (i, s"r$i"))
       .toDF("id", "s").repartition(2), dir)
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 50L) // v3: live DV
+    Versioned.deleteWhere(spark, dir, col("id") === 50L) // v3: live DV
     Versioned.writeZoneMap(spark, dir, 3L, "id")
     assert(Versioned.prunedFiles(spark, dir, 3L, "id", 10L, 15L).size ==
       Versioned.filesAt(spark, dir, 3L).size, "interleaved files should not prune")
@@ -1582,7 +1628,7 @@ class VersionedSpec extends SparkSpec {
   test("changes() opens only files the window added, removed, or DV-touched") {
     val dir = tmpDir("vt_cdf_prune")
     Versioned.append(Seq((1L, "a")).toDF("id", "s").repartition(1), dir) // v1
-    Versioned.append(Seq((2L, "b")).toDF("id", "s").repartition(1), dir) // v2
+    Versioned.append(Seq((2L, "b"), (4L, "d")).toDF("id", "s").repartition(1), dir) // v2
     Versioned.append(Seq((3L, "c")).toDF("id", "s").repartition(1), dir) // v3
     val ch = Versioned.changes(spark, dir, 2L, 3L)
     assert(ch.as[(Long, String, String)].collect().toSet == Set((3L, "c", "insert")))
@@ -1593,7 +1639,7 @@ class VersionedSpec extends SparkSpec {
     assert(opened.intersect(v2Files).isEmpty,
       s"unchanged files scanned: ${opened.intersect(v2Files)}")
     // a DV touch re-opens exactly that file: MoR delete of id=2
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L) // v4
+    Versioned.deleteWhere(spark, dir, col("id") === 2L) // v4
     val ch2 = Versioned.changes(spark, dir, 3L, 4L)
     assert(ch2.as[(Long, String, String)].collect().toSet == Set((2L, "b", "delete")))
     assert(ch2.inputFiles.map(_.split("/").takeRight(2).mkString("/")).toSet

@@ -158,7 +158,7 @@ class VersionedStreamSpec extends SparkSpec {
     // v2: the MERGE updates id=1 by soft-deleting its row in v1's file
     Versioned.merge(spark, dir, Seq((1L, "A")).toDF("id", "s"), Seq("id"))
     assert(Versioned.dvsAt(spark, dir, 2L).nonEmpty, "the merge must go merge-on-read")
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L) // v3
+    Versioned.deleteWhere(spark, dir, col("id") === 2L) // v3
     Versioned.append(Seq((5L, "e")).toDF("id", "s"), dir) // v4
     // every append row once, as a copy-on-write merge/delete leaves it,
     // whether the window spans the mutations or ends before them
@@ -190,7 +190,7 @@ class VersionedStreamSpec extends SparkSpec {
     // no startingVersion) streams the current snapshot first instead
     Versioned.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), dir) // v1
     Versioned.deleteWhere(spark, dir, col("id") === 1L) // v2
-    Versioned.deleteWhereMoR(spark, dir, col("id") === 2L) // v3: live DV
+    Versioned.deleteWhere(spark, dir, col("id") === 2L) // v3: live DV
     assert(drain(dir, ckpt, sink).sum == 1,
       "initial snapshot = current live rows (post-delete, DV-subtracted)")
     assert(sinkRows(sink) == Set((3L, "c")))
