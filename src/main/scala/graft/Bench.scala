@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: wall-seconds per declared query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (also written to
@@ -42,14 +42,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val ticks0 = cpuTicks()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // Warm the session (codegen, shuffle machinery, parquet reader) so
     // the first measured query doesn't absorb JVM startup; fixed name
     // order keeps per-query numbers comparable across rounds.

@@ -89,10 +89,10 @@ object Text {
   /** polyHash over an arbitrary (lambda-bound) string expression. */
   private def polyHashExpr(s: Column): Column = graft.plans.expressions.polyHash(s)
 
-  /** MinHash signature: for hash family i in [0, n),
+  /** MinHash signature: for hash family i in [0, n), n ≤ 1024,
     * `sig_i = min over shingle hashes h of (a_i*h + b_i) mod 1e9+7`
-    * with `a_i = 2i+1, b_i = 5i+13` (odd multipliers; exact in 64-bit:
-    * a_i*h < 2^39). Returns `array<bigint>` of length n. Evaluated by
+    * with `a_i`, `b_i` from the fixed table `graft.plans.MinHashSig.A`/`B`
+    * (exact in 64-bit: a_i*h < 2^60). Returns `array<bigint>` of length n. Evaluated by
     * graft.plans.MinHashSig — all n minima in one traversal of the
     * shingle-hash array (the round-1 form ran n separate
     * `array_min(transform(...))` passes and dominated the bench).
@@ -103,8 +103,7 @@ object Text {
   /** Pre-fusion form of `minhashSignature` (equality-spec oracle). */
   private[graft] def minhashSignatureReference(shingleHashes: Column, n: Int): Column =
     array((0 until n).map { i =>
-      val a = 2L * i + 1
-      val b = 5L * i + 13
+      val (a, b) = (graft.plans.MinHashSig.A(i), graft.plans.MinHashSig.B(i))
       array_min(transform(shingleHashes, h => (lit(a) * h + lit(b)) % lit(HashMod)))
     }: _*)
 

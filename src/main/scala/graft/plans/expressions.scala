@@ -302,12 +302,11 @@ object IntersectSize {
 }
 
 /** MinHash signature: one pass over the shingle-hash array producing all
-  * `n` minima, `sig_i = min_h (a_i*h + b_i) mod 1e9+7` with
-  * `a_i = 2i+1, b_i = 5i+13` (graft.functions.Text.minhashSignature's
-  * hash family, unchanged — the LSH banding and the DuckDB-checked
-  * output stay identical). Replaces `n` separate
-  * `array_min(transform(...))` traversals (the round-1 minhash hot spot)
-  * with a single `|hashes| × n` loop on primitive longs.
+  * `n` minima, `sig_i = min_h (a_i*h + b_i) mod p` with `p = 1e9+7` and
+  * the fixed coefficient table [[MinHashSig.A]], [[MinHashSig.B]]
+  * (graft.functions.Text.minhashSignature's hash family). Replaces `n`
+  * separate `array_min(transform(...))` traversals (the round-1 minhash
+  * hot spot) with a single `|hashes| × n` loop on primitive longs.
   *
   * Empty input arrays yield an all-NULL signature, matching
   * `array_min(empty) = NULL`.
@@ -315,7 +314,8 @@ object IntersectSize {
 case class MinHashSig(child: Expression, n: Int)
     extends UnaryExpression {
 
-  require(n > 0, s"signature length must be positive, got $n")
+  require(n > 0 && n <= MinHashSig.MaxN,
+    s"signature length must be in [1, ${MinHashSig.MaxN}], got $n")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -336,6 +336,27 @@ case class MinHashSig(child: Expression, n: Int)
 }
 
 object MinHashSig {
+  /** Longest signature the coefficient table serves. */
+  val MaxN = 1024
+
+  /** Hash family coefficients, `a_i ∈ [1, p)` and `b_i ∈ [0, p)`: the
+    * SplitMix64 outputs `2i` and `2i+1` of seed 0, reduced mod `p − 1`
+    * (plus one) and mod `p`. Multipliers spread over the whole field, so
+    * no small shingle hash is the minimum of every function; shingle
+    * hashes are below `p < 2^30`, so `a_i*h + b_i < 2^61` is exact.
+    */
+  val A: Array[Long] =
+    Array.tabulate(MaxN)(i => 1 + Math.floorMod(splitMix(2L * i), PolyHash.Mod - 1))
+  val B: Array[Long] =
+    Array.tabulate(MaxN)(i => Math.floorMod(splitMix(2L * i + 1), PolyHash.Mod))
+
+  private def splitMix(k: Long): Long = {
+    var z = (k + 1) * 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
   /** Static entry for both interpreted and generated code paths. */
   def compute(hs: ArrayData, n: Int): ArrayData = {
     val m = hs.numElements()
@@ -348,7 +369,7 @@ object MinHashSig {
         val h = hs.getLong(j)
         var i = 0
         while (i < n) {
-          val v = ((2L * i + 1) * h + (5L * i + 13)) % PolyHash.Mod
+          val v = (A(i) * h + B(i)) % PolyHash.Mod
           if (v < mins(i)) mins(i) = v
           i += 1
         }

@@ -248,6 +248,10 @@ object Versioned {
     e
   }
 
+  /** The head version with its decoded entry; None for a non-table. */
+  private def headEntry(spark: SparkSession, dir: String): Option[(Long, LogEntry)] =
+    currentVersion(spark, dir).map(v => v -> entryAt(spark, dir, v))
+
   /** Data files (table-relative paths) of snapshot `v`, resolved from
     * the nearest checkpoint at or below `v` plus the delta suffix —
     * at most [[CheckpointInterval]] log reads. Fails loudly when the
@@ -1769,7 +1773,8 @@ object Versioned {
       pairKeys: Seq[String] = Nil,
       dropPhys: Seq[String] = Nil,
       copyInto: Seq[String] = Nil,
-      propsFor: Map[String, String] => Map[String, String] = identity): Option[Long] = {
+      propsFor: Map[String, String] => Map[String, String] = identity,
+      planned: Option[(Long, LogEntry)] = None): Option[Long] = {
     val f = fs(spark, dir)
     f.mkdirs(logPath(dir))
     val prev = currentVersion(spark, dir)
@@ -1781,8 +1786,11 @@ object Versioned {
     }
     // ONE read of the predecessor's log entry serves every carried
     // field below (txns, files, constraints, DVs, timestamp) — the
-    // log read is the commit's critical path on high-latency stores
-    val prevEntry = prev.map(entryAt(spark, dir, _))
+    // log read is the commit's critical path on high-latency stores.
+    // A published entry never changes, so the one the caller planned
+    // the write against serves while it is still the head.
+    val prevEntry = prev.map(p =>
+      planned.collect { case (`p`, e) => e }.getOrElse(entryAt(spark, dir, p)))
     // txn watermarks carry forward through EVERY commit (append,
     // overwrite, compact): replacing data does not reset exactly-once
     // bookkeeping, or a compaction between two micro-batches would
@@ -1988,7 +1996,8 @@ object Versioned {
       dvsFor: Map[String, Seq[Long]] => Map[String, Seq[Long]] = identity,
       preCommit: (Option[LogEntry], Map[String, String]) => Unit = (_, _) => (),
       copyInto: Seq[String] = Nil,
-      propsFor: Map[String, String] => Map[String, String] = identity)
+      propsFor: Map[String, String] => Map[String, String] = identity,
+      planned: Option[(Long, LogEntry)] = None)
       : Option[Long] = {
     var attempt = 1
     while (true) {
@@ -1999,7 +2008,7 @@ object Versioned {
       // CAS and forces this recompute-retry
       try return commitAttempt(
         spark, dir, op, schemaJsonFor, txn, filesFor, dvsFor = dvsFor,
-        preCommit = preCommit, copyInto = copyInto, propsFor = propsFor)
+        preCommit = preCommit, copyInto = copyInto, propsFor = propsFor, planned = planned)
       catch {
         case e: CommitRace =>
           if (attempt >= maxAttempts) throw e
@@ -2306,8 +2315,8 @@ object Versioned {
     // GENERATED columns the batch omits are computed here (the Delta
     // write contract); present ones validate below via the implicit
     // `col <=> expr` checks merged into every attempt's constraint pass
-    val head0 = currentVersion(spark, dir)
-    val head0E = head0.map(entryAt(spark, dir, _))
+    val planned = headEntry(spark, dir)
+    val (head0, head0E) = (planned.map(_._1), planned.map(_._2))
     val dfGen = withGenerated(df0,
       head0E.map(e => generatedOf(e.props)).getOrElse(Map.empty),
       head0E.flatMap(schemaOf))
@@ -2351,7 +2360,7 @@ object Versioned {
           }
         },
         copyInto = copyInto,
-        propsFor = _ ++ idClaims).get
+        propsFor = _ ++ idClaims, planned = planned).get
       // a zoned table must not lose data skipping at every append: carry
       // the previous sidecar (kept files' stats verbatim) and stat only
       // the fresh files — O(batch), not O(table). Versions are dense, so
@@ -2557,7 +2566,8 @@ object Versioned {
     // pattern (land tomorrow's partition dir, register it): inject the
     // path value so schema enforcement and constraint validation see
     // the full column set, exactly as every read will
-    val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+    val planned = headEntry(spark, dir)
+    val head0 = planned.map(_._2)
     val df = hiveFieldOf(head0.flatMap(schemaOf)) match {
       case Some(hf) if !df0.columns.contains(hf.name) &&
           relFiles.forall(_.startsWith(s"${hf.name}=")) =>
@@ -2581,7 +2591,7 @@ object Versioned {
         require(dup.isEmpty,
           s"addFiles: already in the snapshot: ${dup.take(3).mkString(", ")}")
         prev ++ relFiles
-      }, preCommit = validate).get
+      }, preCommit = validate, planned = planned).get
     carrySidecars(spark, dir, v - 1, v,
       filesAt(spark, dir, v).toSet -- relFiles.toSet, relFiles)
     v
@@ -2919,7 +2929,8 @@ object Versioned {
     if (lastTxnVersion(spark, dir, appId).exists(_ >= txnVersion)) None
     else {
       val validate = validatorFor(df)
-      val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+      val planned = headEntry(spark, dir)
+      val head0 = planned.map(_._2)
       validate(head0, head0.map(_.constraints).getOrElse(Map.empty))
       val physFor = physPlanFor(head0, df)
       val physDf =
@@ -2932,7 +2943,8 @@ object Versioned {
       }
       val committed = commitRetry(spark, dir, "append",
         head => evolvedSchemaJson(dir, head, df, mergeSchema = false, physFor),
-        Some(appId -> txnVersion), prev => prev ++ fresh, preCommit = validate)
+        Some(appId -> txnVersion), prev => prev ++ fresh, preCommit = validate,
+        planned = planned)
       committed.foreach(v => carrySidecars(spark, dir, v - 1, v,
         filesAt(spark, dir, v).toSet -- fresh.toSet, fresh))
       committed.foreach(maybeAutoCompact(spark, dir, _))
@@ -2948,7 +2960,8 @@ object Versioned {
     // GENERATED columns compute-if-absent like append (a schema
     // overwrite cannot silently drop the generation contract — DROP
     // COLUMN or UNSET the property to detach it)
-    val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+    val planned = headEntry(spark, dir)
+    val head0 = planned.map(_._2)
     val df = withGenerated(df0,
       head0.map(e => generatedOf(e.props)).getOrElse(Map.empty), None)
     val validate = validatorFor(df)
@@ -2970,7 +2983,7 @@ object Versioned {
       case None => writeDataFiles(physDf, dir)
     }
     val v = commitRetry(spark, dir, "overwrite",
-      _ => df.schema.json, None, _ => files, preCommit = guarded).get
+      _ => df.schema.json, None, _ => files, preCommit = guarded, planned = planned).get
     // nothing kept: fresh-file stats cost O(this write), and zones for
     // still-present zoned columns keep data skipping through overwrite
     carrySidecars(spark, dir, v - 1, v, kept = Set.empty, fresh = files)
@@ -2985,7 +2998,8 @@ object Versioned {
     val spark = df0.sparkSession
     if (lastTxnVersion(spark, dir, appId).exists(_ >= txnVersion)) None
     else {
-      val head0 = currentVersion(spark, dir).map(entryAt(spark, dir, _))
+      val planned = headEntry(spark, dir)
+      val head0 = planned.map(_._2)
       val df = withGenerated(df0,
         head0.map(e => generatedOf(e.props)).getOrElse(Map.empty), None)
       val validate = validatorFor(df)
@@ -3002,7 +3016,7 @@ object Versioned {
         case None => writeDataFiles(physDf, dir)
       }
       val committed = commitRetry(spark, dir, "overwrite", _ => df.schema.json,
-        Some(appId -> txnVersion), _ => files, preCommit = guarded)
+        Some(appId -> txnVersion), _ => files, preCommit = guarded, planned = planned)
       committed.foreach(v =>
         carrySidecars(spark, dir, v - 1, v, kept = Set.empty, fresh = files))
       committed

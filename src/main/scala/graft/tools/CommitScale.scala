@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.table.Versioned
 
 /** Commit-count scale microbench: builds a versioned table with N
@@ -20,16 +18,7 @@ object CommitScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(10000)
     val window = args.drop(1).headOption.map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-commit-scale")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft_commitscale").toString

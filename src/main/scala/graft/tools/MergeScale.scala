@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.table.Versioned
@@ -29,15 +28,7 @@ object MergeScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-merge-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_id", "user_id", "event_type", "value")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.table.Versioned
@@ -17,14 +16,7 @@ import graft.table.Versioned
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect() // warm
 
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Optimization-round instrumentation: dump `.explain("formatted")` for
@@ -32,15 +30,7 @@ object PlanDump {
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus, extra)
     new java.io.File(outDir).mkdirs()
     val unknown = names.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-rehearsal data generator: replicates a driver testdata dir
   * `factor`× with key shifting, producing e.g. sf1 from sf0.1 so the
@@ -68,13 +68,7 @@ object ScaleData {
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     /** `factor` key-shifted replicas of one table, unioned. */
     def replicate(name: String, keys: Seq[String], files: Int)(

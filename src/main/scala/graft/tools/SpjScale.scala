@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Storage-partitioned-join measurement: the BucketSpjSpec proves the
@@ -28,15 +27,7 @@ object SpjScale {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-spj-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     // SPARK_GRAFT_MULT=k replicates the events table k× under shifted
     // ids — the local shuffle cost scales with rows, so the ratio at

@@ -31,6 +31,21 @@ class AddFilesSpec extends SparkSpec {
     assert(got == Set((1, "a"), (2, "b"), (3, "c")))
   }
 
+  test("an addFiles commit reads the head entry it planned against once") {
+    val dir = tmpDir("af_reads")
+    Versioned.append(Seq((1, "a")).toDF("id", "s"), dir)
+    val schema = Some(Seq((0, "")).toDF("id", "s").schema)
+    val reads = (2 to 4).map { i =>
+      val files = stageOne(dir, s"d-bulk-r$i", Seq((i, "x")))
+      val r0 = Versioned.logReads.get()
+      assert(Versioned.addFiles(spark, dir, files, knownSchema = schema) == i.toLong)
+      Versioned.logReads.get() - r0
+    }
+    // the head entry (planning and publish share it) and the new entry
+    // (sidecar carry)
+    assert(reads == Seq(2L, 2L, 2L), s"log reads per addFiles commit: $reads")
+  }
+
   test("can create the table: first commit defines the schema from footers") {
     val dir = tmpDir("af_first")
     val files = stageOne(dir, "d-bulk-0", Seq((7, "x")))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Multimodal, Similarity, TextDedup}
@@ -206,6 +207,65 @@ class DedupAndSimilaritySpec extends SparkSpec {
     val comps = TextDedup.connectedComponents(nodes, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(comps === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
+  }
+
+  /** `connectedComponents` over `docs` (doc_id, grp), whose `pairs` link
+    * each `grp`, labels every doc with the SQL `min(doc_id)` of its grp
+    * (compared with SQL equality, so NaN and -0.0 compare as SQL does).
+    * Partition coalescing is off, so the ids span several sort ranges.
+    */
+  private def assertSqlMinLabels(docs: DataFrame, pairs: DataFrame): Unit = {
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val got = try TextDedup.connectedComponents(docs, "doc_id", pairs)
+      finally spark.conf.unset(coalesce)
+    val want = docs.join(docs.groupBy("grp").agg(min("doc_id").as("component")), "grp")
+      .select("doc_id", "component")
+    val matched = got.as("g").join(want.as("w"),
+      col("g.doc_id") <=> col("w.doc_id") && col("g.component") <=> col("w.component"))
+    assert(got.count() == want.count() && matched.count() == want.count(),
+      s"labels ${got.collect().mkString(" ")} differ from SQL min ${want.collect().mkString(" ")}")
+  }
+
+  test("connectedComponents orders string ids by code point, as SQL min does") {
+    // U+1F600 is a surrogate pair in UTF-16 (0xD83D…) and so sorts below
+    // U+FF21 there; by code point (SQL, UTF-8 bytes) U+FF21 is smaller
+    val docs = Seq(("\uD83D\uDE00", 1), ("\uFF21", 1), ("a", 2)).toDF("doc_id", "grp")
+    val pairs = Seq(("\uD83D\uDE00", "\uFF21")).toDF("id_a", "id_b")
+    val comps = TextDedup.connectedComponents(docs, "doc_id", pairs)
+      .as[(String, String)].collect().toMap
+    assert(comps == Map("\uD83D\uDE00" -> "\uFF21", "\uFF21" -> "\uFF21", "a" -> "a"))
+    assertSqlMinLabels(docs, pairs)
+  }
+
+  test("connectedComponents labels double ids by SQL min and equality (NaN, -0.0)") {
+    // NaN sorts above every number; the pair end 0.0 is the node -0.0
+    val docs = Seq((Double.NaN, 1), (1.5, 1), (-0.0, 2), (2.0, 2), (5.0, 2), (-3.0, 3))
+      .toDF("doc_id", "grp")
+    val pairs = Seq((Double.NaN, 1.5), (-0.0, 2.0), (0.0, 5.0)).toDF("id_a", "id_b")
+    assertSqlMinLabels(docs, pairs)
+  }
+
+  test("connectedComponents labels decimal and binary ids by SQL min") {
+    val dec = Seq(("10.00", 1), ("2.25", 1), ("1.50", 1), ("3.00", 2)).toDF("s", "grp")
+      .select(col("s").cast("decimal(10,2)").as("doc_id"), col("grp"))
+    val decPairs = Seq(("10.00", "2.25"), ("2.25", "1.50")).toDF("a", "b")
+      .select(col("a").cast("decimal(10,2)").as("id_a"), col("b").cast("decimal(10,2)").as("id_b"))
+    assertSqlMinLabels(dec, decPairs)
+    // unsigned byte order: 0x00 0x01 < 0x01 < 0x7F < 0xFF
+    val (b00, b01, b7f, bff) =
+      (Array[Byte](0, 1), Array[Byte](1), Array[Byte](0x7f), Array[Byte](-1))
+    val bin = Seq((bff, 1), (b00, 1), (b7f, 2), (b01, 2)).toDF("doc_id", "grp")
+    assertSqlMinLabels(bin, Seq((bff, b00), (b7f, b01)).toDF("id_a", "id_b"))
+  }
+
+  test("connectedComponents leaves at most its result's RDD persisted") {
+    val nodes = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    TextDedup.connectedComponents(nodes, "doc_id", pairs).collect()
+    assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
+      s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
   }
 
   test("curation pipeline: filters by lang/quality/repetition, keeps one doc per dup cluster") {

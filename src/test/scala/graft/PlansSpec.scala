@@ -133,6 +133,17 @@ class PlansSpec extends SparkSpec {
     got.foreach { r => assert(r.getSeq[Any](0) == r.getSeq[Any](1), s"mismatch on $r") }
   }
 
+  test("MinHashSig: a tiny shingle hash does not win every minimum") {
+    // Jaccard 20/22: the signatures should agree on about 91% of entries.
+    // With multipliers below 256, hashes 5 and 7 were the minimum of all
+    // 128 functions and the two signatures agreed nowhere.
+    val shared = (1 to 20).map(k => 1000000007L - 7919L * k)
+    val sigs = Seq(shared :+ 5L, shared :+ 7L).toDF("hs")
+      .select(Text.minhashSignature(col("hs"), 128)).as[Seq[Long]].collect()
+    val agree = sigs(0).zip(sigs(1)).count { case (a, b) => a == b }
+    assert(agree >= 0.75 * 128, s"signatures agree on $agree of 128 entries")
+  }
+
   test("WordShingles matches the transform/slice/concat_ws composition") {
     val docs = Seq(
       "a b c d e", "a b", "a", "", "   ", "x  y\tz", "a b c a b c a b c",
