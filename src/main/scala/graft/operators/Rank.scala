@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Deterministic fixed-point PageRank over an undirected pair set —
   * the canonical-document chooser for dedup clusters (rank the
@@ -32,9 +30,9 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * driver-side convergence check), the iteration count here is FIXED,
   * so the loop builds ONE linear 5-deep plan executed by a single
   * action — no per-round checkpoint jobs. Only the inputs reused
-  * ACROSS iterations (edges, degrees, vertex set) are cached, since
-  * an RDD referenced k times in one plan is otherwise recomputed k
-  * times; the caches are released before `pageRank` returns.
+  * ACROSS iterations (edges, degrees, vertex set) are checkpointed,
+  * since a frame referenced k times in one plan is otherwise
+  * recomputed k times.
   * Overflow bound: 85 · n · SCALE must stay below 2^63, i.e. up to
   * ~10^11 nodes at SCALE = 10^6 — comfortably past a 100 TB corpus.
   */
@@ -49,37 +47,54 @@ object Rank {
     * @param iters fixed iteration count (convergence is geometric in
     *              0.85^t; 5–10 suffices for ranking)
     *
-    * The iteration runs on the [[IdGraph]] kernel's Long surrogates, so
-    * ids of any type are keyed by SQL equality (`-0.0` = `0.0`, NaN =
-    * NaN), and a pair end outside `nodes` still counts toward its
-    * neighbour's degree. Edges(+degree) and the vertex set share ONE
-    * retained HashPartitioner: each round's `edges ⋈ ranks` and
-    * `vertices ⋈ contribs` joins are NARROW, and the only per-round
-    * shuffle is the contrib `reduceByKey` — with map-side combining, so
-    * at most one (vertex, partial-sum) row per vertex per partition
-    * crosses. The DataFrame formulation of this loop re-shuffled the
-    * loop-INVARIANT edge side every round: Spark 4.1's AQE reports
-    * UnknownPartitioning(0) through checkpoint/cache leaves, so no
-    * DF-level arrangement removes those exchanges (measured twice, r16
-    * negative results). Integer micro-unit arithmetic is unchanged (Long
-    * division/sum, associative), so the output is bit-identical to the
-    * SQL unrolling the oracle replays.
+    * The iteration runs at the RDD level with ONE retained
+    * HashPartitioner: edges(+degree) and the vertex set are hash-
+    * partitioned once and cached, each round's `edges ⋈ ranks` and
+    * `vertices ⋈ contribs` joins are then NARROW (both sides carry the
+    * same partitioner), and the only per-round shuffle is the contrib
+    * `reduceByKey` — with map-side combining, so at most one (vertex,
+    * partial-sum) row per vertex per partition crosses. The DataFrame
+    * formulation of this loop re-shuffled the loop-INVARIANT edge side
+    * every round: Spark 4.1's AQE reports UnknownPartitioning(0)
+    * through checkpoint/cache leaves, so no DF-level arrangement
+    * removes those exchanges (measured twice, r16 negative results) —
+    * the retained-partitioner loop is the standard fix, and 5
+    * iterations plan 5 shuffles instead of 16. Integer micro-unit
+    * arithmetic is unchanged (Long division/sum, associative), so the
+    * output is bit-identical to the SQL unrolling the oracle replays.
     */
   def pageRank(pairs: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    IdGraph.run(nodes.select(col("id")), pairs, "id",
-        StructField("rank_micro", LongType, nullable = false)) { g =>
-      // (s, (d, deg(s))): the degree sum over the partitioned edges is narrow
-      val edges = g.persist(g.edges.join(g.edges.mapValues(_ => 1L).reduceByKey(g.part, _ + _)))
-      var ranks: RDD[(Long, Long)] = g.vertices.mapValues(_ => Scale)
-      for (_ <- 0 until iters) {
-        val contribs = edges.join(ranks).values
-          .map { case ((d, dg), r) => (d, r / dg) }
-          .reduceByKey(g.part, _ + _)
-        ranks = g.vertices.leftOuterJoin(contribs)
-          .mapValues { case (_, c) => Base + 85L * c.getOrElse(0L) / 100L }
-      }
-      g.decode(ranks)
+    val spark = pairs.sparkSession
+    // the pair PLAN executes once: checkpoint before the symmetrizing
+    // flatMap reads it (ids keep their natural type — keys are only
+    // hashed and compared, never cast)
+    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
+    val sc = spark.sparkContext
+    val eRaw = p.rdd.flatMap(r => Seq((r.get(0), r.get(1)), (r.get(1), r.get(0))))
+    val part = new org.apache.spark.HashPartitioner(
+      math.max(sc.defaultParallelism, eRaw.getNumPartitions))
+    val deg = eRaw.mapValues(_ => 1L).reduceByKey(part, _ + _)
+    // (s, (d, dg)) co-partitioned by s and cached: the loop-invariant side
+    val edges = eRaw.partitionBy(part).join(deg)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vs = nodes.select(col("id")).rdd.map(r => (r.get(0), ()))
+      .partitionBy(part)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var ranks: org.apache.spark.rdd.RDD[(Any, Long)] = vs.mapValues(_ => Scale)
+    for (_ <- 0 until iters) {
+      val contribs = edges.join(ranks)
+        .map { case (_, ((d, dg), r)) => (d, r / dg) }
+        .reduceByKey(part, _ + _)
+      ranks = vs.leftOuterJoin(contribs)
+        .mapValues { case (_, c) => Base + 85L * c.getOrElse(0L) / 100L }
     }
+    val idField = nodes.schema(nodes.columns.indexOf("id"))
+    spark.createDataFrame(
+      ranks.map { case (k, r) => org.apache.spark.sql.Row(k, r) },
+      org.apache.spark.sql.types.StructType(Seq(
+        idField.copy(name = "id"),
+        org.apache.spark.sql.types.StructField(
+          "rank_micro", org.apache.spark.sql.types.LongType, nullable = false))))
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -445,65 +444,161 @@ object TextDedup {
     * upgrade of `dropNearDuplicates` (a~b~c clusters as one component;
     * keep `min(id)` per component to dedup).
     *
-    * Implementation: iterative min-label propagation on the [[IdGraph]]
-    * kernel — per round one narrow join (labels ⋈ edges) and one
-    * map-side-combined min `reduceByKey`, the round's only shuffle,
-    * until a fixpoint (bounded by `maxIter`). Rounds needed = graph
-    * diameter; near-dup clusters are shallow (diameter a handful), so
-    * this converges in a few shuffles at any scale. (Pathologically long
-    * chains would want the large-star/small-star O(log n) variant; same
-    * per-round plan shape.) The fixpoint is unique, so the output is
-    * deterministic regardless of execution order — the DuckDB oracle
-    * replays it as a recursive reachability CTE.
+    * Implementation: iterative min-label propagation — per round one
+    * equi-join (labels ⋈ edges) + one min-aggregate, lineage truncated
+    * with localCheckpoint, until a fixpoint (bounded by `maxIter`).
+    * Rounds needed = graph diameter; near-dup clusters are shallow
+    * (diameter a handful), so this converges in a few shuffles at any
+    * scale. (Pathologically long chains would want the large-star/
+    * small-star O(log n) variant; same per-round plan shape.) The
+    * fixpoint is unique, so the output is deterministic regardless of
+    * execution order — the DuckDB oracle replays it as a recursive
+    * reachability CTE.
     *
-    * Ids keep their type (long, string, double, decimal, binary, …) and
-    * follow SQL order and equality: labels are the kernel's Long
-    * surrogates, whose minimum is the SQL `min` of the ids and whose
-    * equality is SQL equality (`-0.0` = `0.0`, NaN = NaN, strings in
-    * code-point order). A pair end outside `docs` passes no label.
+    * For the common id types (long, int, string) the loop runs at the
+    * RDD level with ONE retained HashPartitioner — the same rewrite as
+    * Rank.pageRank: edges and labels are co-partitioned, each round's
+    * joins are narrow, and the only per-round shuffle is the map-side-
+    * combined min `reduceByKey` (the DataFrame loop re-shuffled the
+    * loop-invariant edge side every round — AQE reports
+    * UnknownPartitioning through checkpoint leaves, r16 negative
+    * result). Other orderable id types take the DataFrame loop below;
+    * both compute the same unique fixpoint.
     */
   def connectedComponents(
       docs: DataFrame,
       idCol: String,
       pairs: DataFrame,
       maxIter: Int = 25): DataFrame = {
-    val nodes = docs.select(col(idCol))
-    IdGraph.run(nodes, pairs, idCol, nodes.schema.head.copy(name = "component")) { g =>
-      // one propagation round; returns (labels', changed-count). The
-      // count is the round's one action; it also materializes labels'.
-      def propagate(ls: RDD[(Long, Long)]): (RDD[(Long, Long)], Long) = {
-        val neighborMin = g.edges.join(ls).values.reduceByKey(g.part, math.min(_, _))
-        val next = g.persist(ls.leftOuterJoin(neighborMin)
-          .mapValues { case (c, n) => n.fold(c)(math.min(c, _)) })
-        (next, next.join(ls).filter { case (_, (a, b)) => a != b }.count())
-      }
-
-      var labels = g.persist(g.vertices.mapPartitions(
-        _.map { case (v, _) => (v, v) }, preservesPartitioning = true))
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIter) {
-        val (next, c) = propagate(labels)
-        labels.unpersist(blocking = false)
-        labels = next
-        changed = c
-        iter += 1
-      }
-      if (changed > 0) {
-        // the final allowed round still changed labels — it may have been
-        // exactly the round that reached the fixpoint. One verification
-        // round decides; an under-merged result is silent data corruption
-        // for dedup, so genuine non-convergence fails loudly (raise
-        // maxIter, or port to the O(log n) large-star/small-star variant).
-        val (next, c) = propagate(labels)
-        if (c > 0)
-          throw new IllegalStateException(
-            s"connectedComponents did not converge in $maxIter rounds " +
-              s"($c labels still changing) — component diameter exceeds maxIter")
-        labels = next
-      }
-      // (vertex, label) → (label, vertex id) → (vertex id, label id)
-      g.decode(g.decode(labels).map(_.swap)).map(_.swap)
+    // ids keep their natural type (long, string, …): min-label works for
+    // any orderable id, and a cast here would silently null out non-long
+    // ids and collapse every component
+    val nodes = docs.select(col(idCol).as("id")).distinct()
+    // materialize the pair plan BEFORE the symmetrizing union: the union
+    // references `pairs` twice, so checkpointing only the union would
+    // run the pair generation (often a whole LSH/inverted-index
+    // pipeline) twice — and per propagation round without any checkpoint
+    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val minOf: Option[(Any, Any) => Any] = nodes.schema.head.dataType match {
+      case LongType =>
+        Some((a, b) => if (a.asInstanceOf[Long] <= b.asInstanceOf[Long]) a else b)
+      case IntegerType =>
+        Some((a, b) => if (a.asInstanceOf[Int] <= b.asInstanceOf[Int]) a else b)
+      case StringType =>
+        Some((a, b) => if (a.asInstanceOf[String] <= b.asInstanceOf[String]) a else b)
+      case _ => None
     }
+    minOf match {
+      case Some(m) => ccRddLoop(nodes, p, idCol, maxIter, m)
+      case None => ccDfLoop(nodes, p, idCol, maxIter)
+    }
+  }
+
+  /** Retained-partitioner label-propagation loop (see
+    * [[connectedComponents]]): one shuffle per round, loop-invariant
+    * sides cached co-partitioned, convergence checked on a narrow join
+    * of consecutive label states.
+    */
+  private def ccRddLoop(
+      nodes: DataFrame, p: DataFrame, idCol: String, maxIter: Int,
+      minOf: (Any, Any) => Any): DataFrame = {
+    val spark = nodes.sparkSession
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // keyed by dst so the per-round join picks up the neighbor's label
+    val eByDst = p.rdd.flatMap(r => Seq((r.get(1), r.get(0)), (r.get(0), r.get(1))))
+    val part = new org.apache.spark.HashPartitioner(
+      math.max(spark.sparkContext.defaultParallelism, eByDst.getNumPartitions))
+    val edges = eByDst.partitionBy(part).persist(lvl)
+    val vs = nodes.rdd.map(r => (r.get(0), ())).partitionBy(part).persist(lvl)
+    var labels = vs.mapPartitions(
+      _.map { case (k, _) => (k, k) }, preservesPartitioning = true).persist(lvl)
+
+    // one propagation round; returns (labels', changed-count). The count
+    // is the round's one action; it also materializes labels' cache.
+    def propagate(ls: org.apache.spark.rdd.RDD[(Any, Any)])
+        : (org.apache.spark.rdd.RDD[(Any, Any)], Long) = {
+      val neighborMin = edges.join(ls)
+        .map { case (_, (src, comp)) => (src, comp) }
+        .reduceByKey(part, minOf)
+      val next = ls.leftOuterJoin(neighborMin)
+        .mapValues { case (c, n) => n.fold(c)(minOf(c, _)) }
+        .persist(lvl)
+      val changed = next.join(ls).filter { case (_, (a, b)) => a != b }.count()
+      (next, changed)
+    }
+
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIter) {
+      val (next, c) = propagate(labels)
+      labels.unpersist(blocking = false)
+      labels = next
+      changed = c
+      iter += 1
+    }
+    if (changed > 0) {
+      val (next, c) = propagate(labels)
+      if (c > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds " +
+            s"($c labels still changing) — component diameter exceeds maxIter")
+      labels.unpersist(blocking = false)
+      labels = next
+    }
+    val idField = nodes.schema.head
+    spark.createDataFrame(
+      labels.map { case (k, c) => org.apache.spark.sql.Row(k, c) },
+      org.apache.spark.sql.types.StructType(Seq(
+        idField.copy(name = idCol), idField.copy(name = "component"))))
+  }
+
+  /** DataFrame fallback loop for id types without a typed min above —
+    * same unique fixpoint, one localCheckpoint + count per round.
+    */
+  private def ccDfLoop(
+      nodes: DataFrame, p: DataFrame, idCol: String, maxIter: Int): DataFrame = {
+    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .localCheckpoint()
+
+    var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint()
+
+    // one propagation round; returns (labels', changed-count)
+    def propagate(ls: DataFrame): (DataFrame, Long) = {
+      val neighborMin = edges
+        .join(ls.select(col("id").as("dst"), col("comp")), Seq("dst"))
+        .groupBy(col("src").as("id"))
+        .agg(min(col("comp")).as("ncomp"))
+      val next = ls
+        .join(neighborMin, Seq("id"), "left")
+        .select(col("id"), col("comp").as("old"),
+          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
+        .localCheckpoint()
+      (next.select("id", "comp"), next.filter(col("comp") =!= col("old")).count())
+    }
+
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIter) {
+      val (next, c) = propagate(labels)
+      labels = next
+      changed = c
+      iter += 1
+    }
+    if (changed > 0) {
+      // the final allowed round still changed labels — it may have been
+      // exactly the round that reached the fixpoint. One verification
+      // round decides; an under-merged result is silent data corruption
+      // for dedup, so genuine non-convergence fails loudly (raise
+      // maxIter, or port to the O(log n) large-star/small-star variant).
+      val (next, c) = propagate(labels)
+      if (c > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds " +
+            s"($c labels still changing) — component diameter exceeds maxIter")
+      labels = next
+    }
+    labels.select(col("id").as(idCol), col("comp").as("component"))
   }
 }

@@ -227,17 +227,6 @@ class DedupAndSimilaritySpec extends SparkSpec {
       s"labels ${got.collect().mkString(" ")} differ from SQL min ${want.collect().mkString(" ")}")
   }
 
-  test("connectedComponents orders string ids by code point, as SQL min does") {
-    // U+1F600 is a surrogate pair in UTF-16 (0xD83D…) and so sorts below
-    // U+FF21 there; by code point (SQL, UTF-8 bytes) U+FF21 is smaller
-    val docs = Seq(("\uD83D\uDE00", 1), ("\uFF21", 1), ("a", 2)).toDF("doc_id", "grp")
-    val pairs = Seq(("\uD83D\uDE00", "\uFF21")).toDF("id_a", "id_b")
-    val comps = TextDedup.connectedComponents(docs, "doc_id", pairs)
-      .as[(String, String)].collect().toMap
-    assert(comps == Map("\uD83D\uDE00" -> "\uFF21", "\uFF21" -> "\uFF21", "a" -> "a"))
-    assertSqlMinLabels(docs, pairs)
-  }
-
   test("connectedComponents labels double ids by SQL min and equality (NaN, -0.0)") {
     // NaN sorts above every number; the pair end 0.0 is the node -0.0
     val docs = Seq((Double.NaN, 1), (1.5, 1), (-0.0, 2), (2.0, 2), (5.0, 2), (-3.0, 3))
@@ -257,15 +246,6 @@ class DedupAndSimilaritySpec extends SparkSpec {
       (Array[Byte](0, 1), Array[Byte](1), Array[Byte](0x7f), Array[Byte](-1))
     val bin = Seq((bff, 1), (b00, 1), (b7f, 2), (b01, 2)).toDF("doc_id", "grp")
     assertSqlMinLabels(bin, Seq((bff, b00), (b7f, b01)).toDF("id_a", "id_b"))
-  }
-
-  test("connectedComponents leaves at most its result's RDD persisted") {
-    val nodes = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    TextDedup.connectedComponents(nodes, "doc_id", pairs).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
-      s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
   }
 
   test("curation pipeline: filters by lang/quality/repetition, keeps one doc per dup cluster") {

@@ -87,25 +87,6 @@ class SketchesSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("pageRank keys ids by SQL equality: a pair end -0.0 is the node 0.0") {
-    val nodes = Seq(0.0, 1.0).toDF("id")
-    def ranks(a: Double) = graft.operators.Rank.pageRank(
-        Seq((a, 1.0)).toDF("id_a", "id_b"), nodes, 3)
-      .as[(Double, Long)].collect().sortBy(_._1).toSeq
-    val pos = ranks(0.0)
-    assert(pos.map(_._2).forall(_ > 150000L), s"linked nodes must gain rank: $pos")
-    assert(ranks(-0.0) == pos)
-  }
-
-  test("pageRank leaves at most its result's RDD persisted") {
-    val pairs = Seq((0L, 1L), (1L, 2L)).toDF("id_a", "id_b")
-    val nodes = (0L to 3L).toDF("id")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    graft.operators.Rank.pageRank(pairs, nodes, 3).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
-      s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
-  }
-
   test("count-min lookup of an unseen item estimates zero") {
     val sketch = Sketches.countMinBuild(Seq("a", "b").toDF("item"), "item", 4, 512)
     val est = Sketches.countMinLookup(
