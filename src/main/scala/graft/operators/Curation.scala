@@ -81,7 +81,7 @@ object Curation {
       TextStats.repetitionScore(col(textCol)).as("repetition"))
     // materialize once: kept feeds pair generation, component nodes, and
     // the final representative join — without this the lang/quality/
-    // repetition scoring re-runs for every consumer (and per CC round)
+    // repetition scoring re-runs for every consumer
     val kept = scored.filter(
       col("lang_pred") === th.lang &&
         col("score") >= th.minQuality &&

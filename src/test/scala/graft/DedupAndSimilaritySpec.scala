@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.operators.{Multimodal, Similarity, TextDedup}
 
@@ -246,6 +247,53 @@ class DedupAndSimilaritySpec extends SparkSpec {
       (Array[Byte](0, 1), Array[Byte](1), Array[Byte](0x7f), Array[Byte](-1))
     val bin = Seq((bff, 1), (b00, 1), (b7f, 2), (b01, 2)).toDF("doc_id", "grp")
     assertSqlMinLabels(bin, Seq((bff, b00), (b7f, b01)).toDF("id_a", "id_b"))
+  }
+
+  test("connectedComponents orders string ids by code point, as SQL min does") {
+    // U+1F600 is a surrogate pair in UTF-16 (0xD83D…) and so sorts below
+    // U+FF21 there; by code point (SQL, UTF-8 bytes) U+FF21 is smaller
+    val docs = Seq(("\uD83D\uDE00", 1), ("\uFF21", 1), ("a", 2)).toDF("doc_id", "grp")
+    val pairs = Seq(("\uD83D\uDE00", "\uFF21")).toDF("id_a", "id_b")
+    val comps = TextDedup.connectedComponents(docs, "doc_id", pairs)
+      .as[(String, String)].collect().toMap
+    assert(comps == Map("\uD83D\uDE00" -> "\uFF21", "\uFF21" -> "\uFF21", "a" -> "a"))
+    assertSqlMinLabels(docs, pairs)
+  }
+
+  test("connectedComponents keeps int ids as int, labelled as the long run") {
+    val pairs = Seq((1, 2), (2, 3), (4, 5), (5, 9)).toDF("id_a", "id_b")
+    val nodes = Seq(3, 1, 2, 4, 5, 6, 7).toDF("doc_id")
+    val ints = TextDedup.connectedComponents(nodes, "doc_id", pairs)
+    assert(ints.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    val longs = TextDedup.connectedComponents(
+      nodes.select(col("doc_id").cast("long")), "doc_id", pairs)
+    assert(ints.as[(Int, Int)].collect().map { case (a, b) => (a.toLong, b.toLong) }.toMap ==
+      longs.as[(Long, Long)].collect().toMap)
+    assert(longs.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L, 7L -> 7L))
+  }
+
+  test("connectedComponents refuses a null id in the nodes or the pairs") {
+    val nodes = Seq(Some(1L), Some(2L)).toDF("doc_id")
+    val pairs = Seq((Some(1L), Some(2L))).toDF("id_a", "id_b")
+    val nullNode = Seq(Some(1L), None).toDF("doc_id")
+    val nullEnd = Seq((Some(1L), Option.empty[Long])).toDF("id_a", "id_b")
+    for ((n, p) <- Seq((nullNode, pairs), (nodes, nullEnd),
+        (nullNode.select(col("doc_id").cast("string")), pairs)))
+      intercept[IllegalArgumentException] {
+        TextDedup.connectedComponents(n, "doc_id", p).collect()
+      }
+  }
+
+  test("connectedComponents leaves at most its result's RDD persisted") {
+    val nodes = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    for (n <- Seq(nodes, nodes.select(col("doc_id").cast("string")))) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      TextDedup.connectedComponents(n, "doc_id", pairs).collect()
+      assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
+        s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
+    }
   }
 
   test("curation pipeline: filters by lang/quality/repetition, keeps one doc per dup cluster") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.operators.Sketches
 import graft.plans.expressions
@@ -85,6 +86,58 @@ class SketchesSpec extends SparkSpec {
     val b = graft.operators.Rank.pageRank(pairs.repartition(7), nodes.repartition(3), 4)
       .as[(Long, Long)].collect().toMap
     assert(a == b)
+  }
+
+  test("pageRank keys ids by SQL equality: a pair end -0.0 is the node 0.0") {
+    val nodes = Seq(0.0, 1.0).toDF("id")
+    def ranks(a: Double) = graft.operators.Rank.pageRank(
+        Seq((a, 1.0)).toDF("id_a", "id_b"), nodes, 3)
+      .as[(Double, Long)].collect().sortBy(_._1).toSeq
+    val pos = ranks(0.0)
+    assert(pos.map(_._2).forall(_ > 150000L), s"linked nodes must gain rank: $pos")
+    assert(ranks(-0.0) == pos)
+  }
+
+  test("pageRank ranks a repeated node row as one vertex") {
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)).toDF("id_a", "id_b")
+    val nodes = (0L to 3L).toDF("id")
+    val once = graft.operators.Rank.pageRank(pairs, nodes, 4).as[(Long, Long)].collect()
+    val twice = graft.operators.Rank.pageRank(pairs, nodes.union(Seq(2L).toDF("id")), 4)
+      .as[(Long, Long)].collect()
+    assert(twice.length == 4 && twice.toMap == once.toMap)
+  }
+
+  test("pageRank keeps int ids as int, ranked as the long run") {
+    val pairs = Seq((0, 1), (0, 2), (0, 3), (7, 8)).toDF("id_a", "id_b")
+    val nodes = (0 to 9).toDF("id")
+    val ints = graft.operators.Rank.pageRank(pairs, nodes, 5)
+    assert(ints.schema.map(_.dataType) == Seq(IntegerType, LongType))
+    val longs = graft.operators.Rank.pageRank(pairs, nodes.select(col("id").cast("long")), 5)
+    assert(ints.as[(Int, Long)].collect().map { case (k, r) => (k.toLong, r) }.toMap ==
+      longs.as[(Long, Long)].collect().toMap)
+  }
+
+  test("pageRank refuses a null id in the nodes or the pairs") {
+    val nodes = Seq(Some(1L), Some(2L)).toDF("id")
+    val pairs = Seq((Some(1L), Some(2L))).toDF("id_a", "id_b")
+    val nullNode = Seq(Some(1L), None).toDF("id")
+    val nullEnd = Seq((Some(1L), Option.empty[Long])).toDF("id_a", "id_b")
+    for ((p, n) <- Seq((pairs, nullNode), (nullEnd, nodes),
+        (pairs, nullNode.select(col("id").cast("string")))))
+      intercept[IllegalArgumentException] {
+        graft.operators.Rank.pageRank(p, n, 3).collect()
+      }
+  }
+
+  test("pageRank leaves at most its result's RDD persisted") {
+    val pairs = Seq((0L, 1L), (1L, 2L)).toDF("id_a", "id_b")
+    val nodes = (0L to 3L).toDF("id")
+    for (n <- Seq(nodes, nodes.select(col("id").cast("string")))) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      graft.operators.Rank.pageRank(pairs, n, 3).collect()
+      assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
+        s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
+    }
   }
 
   test("count-min lookup of an unseen item estimates zero") {
